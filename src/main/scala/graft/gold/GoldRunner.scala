@@ -60,7 +60,7 @@ object GoldRunner {
     * so the run continues (reference runner.py:98-108). Returns
     * table -> Right(rowCount) | Left(error).
     *
-    * Transforms run CONCURRENTLY (4-way): the registry is a flat DAG —
+    * Transforms run CONCURRENTLY (8-way, the `Par` pool): the registry is a flat DAG —
     * every transform reads only silver inputs, none reads another's
     * gold output — so the per-table result is independent of execution
     * order, and interleaving their many small jobs across the

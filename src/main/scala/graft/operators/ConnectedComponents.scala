@@ -30,13 +30,10 @@ import org.apache.spark.sql.functions._
   * structure, and the min over a quotient component's labels is the
   * original component's min node id (the global min labels itself).
   *
-  * Every round EAGERLY localCheckpoints its frame and drops the
-  * previous round's blocks: a plain persist is NOT enough for
-  * iterative DataFrames — the logical plan doubles per round and the
-  * planner itself OOMs around a dozen rounds. Checkpointing truncates
-  * the lineage, so plan size and storage stay O(1) per round; the
-  * returned frame is one (id, component) row per node — tiny relative
-  * to the corpus.
+  * Both loops run on [[Fixpoint]]: every batch of rounds is cut by an
+  * eager localCheckpoint and the superseded frames are freed, so plan
+  * size and storage stay O(1) per round; the returned frame is one
+  * (id, component) row per node — tiny relative to the corpus.
   *
   * Determinism: labels are mins over node ids — no RNG, no
   * order-dependence. Skew note: the star joins key on hub nodes; AQE
@@ -52,62 +49,45 @@ object ConnectedComponents {
     * @return (id, component) for every node appearing in `edges`,
     *         component = min node id in the component */
   def minLabel(edges: DataFrame, src: String = "src", dst: String = "dst",
-      maxRounds: Int = 50): DataFrame = {
+      maxRounds: Int = 50): DataFrame = Fixpoint { fp =>
     // materialize the edge list ONCE: an unmaterialized lineage (e.g. a
     // full LSH candidate pipeline) would re-execute end-to-end for each
     // loop touch — measured 26s -> ~3s on the d05 dedup-cluster query
-    val e0 = edges.select(col(src).as("s"), col(dst).as("d"))
-      .localCheckpoint(true)
+    val e0 = fp.cut(edges.select(col(src).as("s"), col(dst).as("d")))
     val sym = e0.union(e0.select(col("d").as("s"), col("s").as("d")))
-
-    var labels = sym.select(col("s").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
+    val init = fp.cut(sym.select(col("s").as("id")).distinct()
+      .withColumn("component", col("id")))
     // one propagation round as a PLAN transform (no action): join the
-    // neighbor mins, keep the least. Pass-through columns (the pair's
-    // starting label) ride along untouched.
-    def propagate(ls: org.apache.spark.sql.DataFrame,
-        carry: Seq[String]): org.apache.spark.sql.DataFrame = {
+    // neighbor mins, keep the least. The pair's starting label (__orig)
+    // rides along untouched.
+    def propagate(ls: DataFrame): DataFrame = {
       val nbrMin = sym.join(ls.select(col("id"), col("component")),
           col("d") === col("id"))
         .groupBy(col("s")).agg(min(col("component")).as("__nc"))
       ls.join(nbrMin, col("id") === col("s"), "left")
-        .select(col("id") +:
+        .select(col("id"),
           least(col("component"), coalesce(col("__nc"), col("component")))
-            .as("component") +: carry.map(col): _*)
+            .as("component"), col("__orig"))
     }
-    var round = 0
-    var changed = 1L
-    val budget = math.min(PropagationBudget, maxRounds)
-    while (changed > 0 && round < budget) {
-      // TWO rounds per materialization (r18, guide §1.2): min-label
-      // propagation is MONOTONE (labels only decrease), so a round
-      // past the fixed point is a value no-op — detecting convergence
-      // at even rounds returns the identical labels while paying half
-      // the checkpoint+probe actions. The changed flag still rides
-      // the update into the SAME checkpoint pass (r17): zero change
-      // across the pair <=> the fixed point was reached at or before
-      // the pair's first round (monotonicity — nothing can change in
-      // round 2k+2 if nothing changed in 2k+1). The pair's starting
-      // label rides the plan as __orig, so the probe needs no
-      // join-back.
-      val steps = math.min(2, budget - round)
-      val base = labels.withColumn("__orig", col("component"))
-      val stepped = (1 until steps).foldLeft(
-        propagate(base, Seq("__orig")))((ls, _) => propagate(ls, Seq("__orig")))
-      val next = stepped
-        .select(col("id"), col("component"),
-          (col("component") =!= col("__orig")).as("__chg"))
-        .localCheckpoint(true)
-      changed = next.filter(col("__chg")).count()
-      Lineage.free(labels)
-      labels = next.select(col("id"), col("component"))
-      round += steps
-    }
-
-    if (changed > 0) {
+    // TWO rounds per materialization (r18, guide §1.2): min-label
+    // propagation is MONOTONE (labels only decrease), so a round past
+    // the fixed point is a value no-op — detecting convergence at even
+    // rounds returns the identical labels while paying half the
+    // checkpoint+probe actions. The changed flag rides the update into
+    // the SAME checkpoint pass (r17): zero change across the pair <=>
+    // the fixed point was reached at or before the pair's first round.
+    val prop = fp.loop(init, math.min(PropagationBudget, maxRounds), perAction = 2,
+      batch = (ls, k) =>
+        Iterator.iterate(ls.withColumn("__orig", col("component")))(propagate)
+          .drop(k).next()
+          .select(col("id"), col("component"),
+            (col("component") =!= col("__orig")).as("__chg")),
+      probe = (_, f, k) => if (f.filter(col("__chg")).count() == 0L) Some(k) else None,
+      settle = (f, _) => f.select(col("id"), col("component")))
+    if (prop.stopped) prop.state
+    else {
       // deep graph: contract by the partial labels, finish with stars
-      val ls = labels.select(col("id").as("__n"), col("component").as("__c"))
+      val ls = prop.state.select(col("id").as("__n"), col("component").as("__c"))
       val qe = sym
         .join(ls, col("s") === col("__n"))
         .select(col("d"), col("__c").as("qs"))
@@ -115,133 +95,71 @@ object ConnectedComponents {
         .select(col("qs"), col("__c2").as("qd"))
         .filter(col("qs") =!= col("qd"))
         .distinct()
-      val roots = starComponents(qe, "qs", "qd", maxRounds)
+      val roots = starComponents(fp, qe, "qs", "qd", maxRounds)
         .select(col("id").as("__q"), col("component").as("__root"))
-      val resolved = labels
+      fp.cut(prop.state
         .join(roots, col("component") === col("__q"), "left")
         .select(col("id"),
-          coalesce(col("__root"), col("component")).as("component"))
-        .localCheckpoint(true)
-      Lineage.free(labels)
-      labels = resolved
+          coalesce(col("__root"), col("component")).as("component")))
     }
-    Lineage.free(e0)
-    labels
   }
 
   /** Alternating large-star/small-star to the fixed point. */
-  private def starComponents(edges: DataFrame, src: String, dst: String,
-      maxRounds: Int): DataFrame = {
-    val e0 = edges.select(col(src).as("s"), col(dst).as("d"))
-      .localCheckpoint(true)
-    val nodes = e0.select(col("s").as("id"))
-      .union(e0.select(col("d").as("id"))).distinct()
-      .localCheckpoint(true)
+  private def starComponents(fp: Fixpoint, edges: DataFrame, src: String,
+      dst: String, maxRounds: Int): DataFrame = {
+    val e0 = fp.cut(edges.select(col(src).as("s"), col(dst).as("d")))
+    val nodes = fp.cut(e0.select(col("s").as("id"))
+      .union(e0.select(col("d").as("id"))).distinct())
 
     // canonical working set: (u > v), no self-loops, deduped
-    var cur = e0.filter(col("s") =!= col("d"))
+    val init = fp.cut(e0.filter(col("s") =!= col("d"))
       .select(greatest(col("s"), col("d")).as("u"),
         least(col("s"), col("d")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
-      // ---- large-star: (b, m(a)) for every neighbor b > a, where
-      // m(a) = min(Γ(a) ∪ {a}) over the SYMMETRIZED neighborhood
-      val nbrs = cur.select(col("u").as("a"), col("v").as("b"))
-        .union(cur.select(col("v").as("a"), col("u").as("b")))
-      val lsMin = nbrs.groupBy(col("a"))
-        .agg(min(col("b")).as("mb"))
-        .select(col("a"), least(col("a"), col("mb")).as("m"))
-      val ls = nbrs.join(lsMin, Seq("a"))
-        .filter(col("b") > col("a"))
-        .select(col("b").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(true)
+    val cur = fp.loop(init, maxRounds, perAction = 1,
+      batch = { (cur, _) =>
+        // ---- large-star: (b, m(a)) for every neighbor b > a, where
+        // m(a) = min(Γ(a) ∪ {a}) over the SYMMETRIZED neighborhood
+        val nbrs = cur.select(col("u").as("a"), col("v").as("b"))
+          .union(cur.select(col("v").as("a"), col("u").as("b")))
+        val lsMin = nbrs.groupBy(col("a"))
+          .agg(min(col("b")).as("mb"))
+          .select(col("a"), least(col("a"), col("mb")).as("m"))
+        val ls = fp.cut(nbrs.join(lsMin, Seq("a"))
+          .filter(col("b") > col("a"))
+          .select(col("b").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+          .distinct())
 
-      // ---- small-star on the (u > v) orientation: hang every smaller
-      // neighbor (and u itself) off the min smaller neighbor
-      val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = ls.join(ssMin, Seq("u"))
-        .select(col("v").as("nu"), col("m").as("nv"))
-        .union(ssMin.select(col("u").as("nu"), col("m").as("nv")))
-        .filter(col("nu") =!= col("nv"))
-        .select(col("nu").as("u"), col("nv").as("v"))
-        .distinct()
-        .localCheckpoint(true)
-
+        // ---- small-star on the (u > v) orientation: hang every smaller
+        // neighbor (and u itself) off the min smaller neighbor
+        val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
+        ls.join(ssMin, Seq("u"))
+          .select(col("v").as("nu"), col("m").as("nv"))
+          .union(ssMin.select(col("u").as("nu"), col("m").as("nv")))
+          .filter(col("nu") =!= col("nv"))
+          .select(col("nu").as("u"), col("nv").as("v"))
+          .distinct()
+      },
       // fixed point: the canonical edge set stopped changing — one
       // full-outer symmetric-difference count instead of two anti-join
       // jobs (r17; same value: |next \ cur| + |cur \ next|)
-      changed = next.withColumn("__a", lit(1))
-        .join(cur.withColumn("__b", lit(1)), Seq("u", "v"), "full_outer")
-        .filter(col("__a").isNull || col("__b").isNull).count()
-      Lineage.free(ls)
-      Lineage.free(cur)
-      cur = next
-      round += 1
-    }
+      probe = { (cur, next, _) =>
+        val changed = next.withColumn("__a", lit(1))
+          .join(cur.withColumn("__b", lit(1)), Seq("u", "v"), "full_outer")
+          .filter(col("__a").isNull || col("__b").isNull).count()
+        if (changed == 0L) Some(1) else None
+      }
     // an unconverged exit would return silently-unmerged components — the
     // exact failure class the hybrid replaced; fail loudly instead
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"starComponents did not reach its fixed point in $maxRounds rounds " +
-          s"($changed edges still changing); raise maxRounds")
+    ).orThrow("the connected-components star loop").state
 
     // at the fixed point `cur` is a union of stars (v -> component min);
     // nodes never appearing as a star leaf are their own component
-    val out = nodes
+    fp.cut(nodes
       .join(cur.withColumnRenamed("u", "id"), Seq("id"), "left")
       .groupBy(col("id"))
-      .agg(min(coalesce(col("v"), col("id"))).as("component"))
-      .localCheckpoint(true)
-    Lineage.free(cur)
-    Lineage.free(nodes)
-    Lineage.free(e0)
-    out
-  }
-
-  /** The star kernel standalone (A/B surface for graft.tools.CcBench). */
-  private[graft] def minLabelStar(edges: DataFrame,
-      src: String = "src", dst: String = "dst",
-      maxRounds: Int = 50): DataFrame =
-    starComponents(edges, src, dst, maxRounds)
-
-  /** The pre-r7 min-label PROPAGATION variant, kept for A/B comparison
-    * (graft.tools.CcBench; BENCH_SCALE.md round-7 table). Two shuffles
-    * per round but rounds = component DIAMETER: fine on shallow dup
-    * clusters, non-convergent (capped at maxRounds) on deep graphs —
-    * the reason minLabel is a hybrid. */
-  private[graft] def minLabelPropagation(edges: DataFrame,
-      src: String = "src", dst: String = "dst",
-      maxRounds: Int = 50): DataFrame = {
-    val e0 = edges.select(col(src).as("s"), col(dst).as("d"))
-      .localCheckpoint(true)
-    val sym = e0.union(e0.select(col("d").as("s"), col("s").as("d")))
-    var labels = sym.select(col("s").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
-      val nbrMin = sym.join(labels, col("d") === col("id"))
-        .groupBy(col("s")).agg(min(col("component")).as("__nc"))
-      val next = labels.join(nbrMin, col("id") === col("s"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("__nc"), col("component")))
-            .as("component"))
-        .localCheckpoint(true)
-      changed = next.join(
-          labels.withColumnRenamed("component", "__prev"), Seq("id"))
-        .filter(col("component") =!= col("__prev")).count()
-      Lineage.free(labels)
-      labels = next
-      round += 1
-    }
-    Lineage.free(e0)
-    labels
+      .agg(min(coalesce(col("v"), col("id"))).as("component")))
   }
 }

@@ -1,26 +1,26 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Storage hygiene for iterative operators that cut lineage with eager
-  * local checkpoints (ADVICE r11): `Dataset.unpersist()` on a
-  * localCheckpoint-ed frame is a no-op — the cache manager does not
-  * track the checkpoint's LogicalRDD blocks — so per-round frames
-  * accumulated for the whole loop despite the unpersist calls. The
-  * blocks are freed by unpersisting the BACKING RDD itself.
+/** Storage hygiene for eager local checkpoints (ADVICE r11):
+  * `Dataset.unpersist()` on a localCheckpoint-ed frame is a no-op — the
+  * cache manager does not track the checkpoint's LogicalRDD blocks — so
+  * per-round frames accumulated for the whole loop despite the unpersist
+  * calls. The blocks are freed by unpersisting the BACKING RDD itself.
   *
-  * Only safe when every downstream consumer is itself already
-  * materialized (a local checkpoint's cached blocks ARE its data —
-  * unrecomputable once dropped). The iterative loops here qualify:
-  * each round's frame is eagerly checkpointed before the previous
-  * round's is freed.
+  * Only safe once nothing reads the frame any more: a local
+  * checkpoint's cached blocks ARE its data, unrecomputable once dropped.
+  * [[Fixpoint]] is the one caller, and frees only frames it cut.
   */
 object Lineage {
 
-  def free(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
+  /** The checkpoint RDDs a frame's plan reads. */
+  def rdds(df: Dataset[_]): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: LogicalRDD => lr.rdd
     }
+
+  def free(df: Dataset[_]): Unit = rdds(df).foreach(_.unpersist(blocking = false))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** DataFrame PageRank — the third join-based graph kernel (with
@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   * The iteration count is a CALLER-PINNED parameter, not a
   * convergence loop — the dm10/v05 gating convention: bounded
   * iterations make the computation SQL-replayable and hash-gateable,
-  * and production callers pick the usual 10-20. Each round
-  * materializes through an eager localCheckpoint (the
-  * ConnectedComponents lesson: iterative lineage doubles per round
-  * and eventually OOMs the planner itself).
+  * and production callers pick the usual 10-20. All three forms run on
+  * [[Fixpoint]] with TWO rounds per eager checkpoint (r18): the bounded
+  * forms cut every second round and after the last.
   */
 object PageRank {
 
@@ -38,28 +37,10 @@ object PageRank {
   def runExactMicro(edges: DataFrame, a: String, b: String,
       iters: Int): DataFrame = {
     require(iters >= 0 && iters <= 100, s"iters $iters outside [0, 100]")
-    val e = edges.select(col(a).as("s"), col(b).as("t"))
-      .filter(col("s") =!= col("t"))
-      .distinct()
-    val dir = e.unionAll(e.select(col("t").as("s"), col("s").as("t")))
-      .localCheckpoint(true)
-    val outdeg = dir.groupBy(col("s")).agg(count(lit(1)).as("od"))
-    val withDeg = dir.join(outdeg, Seq("s")).localCheckpoint(true)
-    var ranks = outdeg.select(col("s").as("node"), lit(1000000L).as("pm"))
-      .localCheckpoint(true)
-    (1 to iters).foreach { i =>
-      ranks = withDeg
-        .join(ranks, col("s") === col("node"))
-        .groupBy(col("t"))
-        .agg(sum(expr("(pm * 85) div (100 * od)")).as("m"))
-        .select(col("t").as("node"), (lit(150000L) + col("m")).as("pm"))
-      // checkpoint every SECOND round (r18 — the converged forms'
-      // action-halving applied to the bounded kernel): two rounds of
-      // lineage plan fine; the eager cut exists to stop the
-      // EXPONENTIAL growth over many rounds, not to fire per round
-      if (i % 2 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
+    Fixpoint { fp =>
+      val (withDeg, ranks) = prelude(fp, edges, a, b, lit(1000000L).as("pm"))
+      fp.bounded(ranks, iters, perAction = 2)(microStep(withDeg))
     }
-    ranks
   }
 
   /** Converged fixed-point variant (the dm10d/v05d early-stop recipe
@@ -81,92 +62,69 @@ object PageRank {
       tolMicro: Long, maxIters: Int): DataFrame = {
     require(maxIters >= 1 && maxIters <= 100,
       s"maxIters $maxIters outside [1, 100]")
-    val e = edges.select(col(a).as("s"), col(b).as("t"))
-      .filter(col("s") =!= col("t"))
-      .distinct()
-    val dir = e.unionAll(e.select(col("t").as("s"), col("s").as("t")))
-      .localCheckpoint(true)
-    val outdeg = dir.groupBy(col("s")).agg(count(lit(1)).as("od"))
-    val withDeg = dir.join(outdeg, Seq("s")).localCheckpoint(true)
-    var ranks = outdeg.select(col("s").as("node"), lit(1000000L).as("pm"))
-      .localCheckpoint(true)
-    // one exact BIGINT update round: (node, pm) -> (node, pm)
-    def step(r: DataFrame): DataFrame = withDeg
-      .join(r, col("s") === col("node"))
-      .groupBy(col("t"))
-      .agg(sum(expr("(pm * 85) div (100 * od)")).as("m"))
-      .select(col("t").as("node"), (lit(150000L) + col("m")).as("pm"))
-    var it = 0
-    while (it < maxIters) {
-      // TWO update rounds ride one checkpoint pass (r18 — the
-      // ConnectedComponents action-halving applied to the integer
-      // kernel): both rounds' ranks plus the entering ranks land in
-      // ONE materialized frame, and a single probe reads both L-inf
-      // deltas off the checkpointed blocks. The stop decision is
-      // IDENTICAL to the round-at-a-time loop — round k's delta is
-      // tested before round k+1's ranks are ever looked at, so the
-      // returned (ranks, iters) cannot differ; at worst the final
-      // batch computes one value-discarded round past the fixed
-      // point. The last round of an odd budget runs single so a
-      // round past maxIters is never computed.
-      val two = it + 2 <= maxIters
-      val r1 = step(ranks)
-      val frame0 = if (two) {
-        step(r1).select(col("node"), col("pm").as("__pm2"))
-          .join(r1.select(col("node"), col("pm").as("__pm1")), Seq("node"))
-      } else r1.select(col("node"), col("pm").as("__pm1"))
-      val frame = frame0
-        .join(ranks.select(col("node"), col("pm").as("__pm0")), Seq("node"))
-        .localCheckpoint(true)
-      val row =
-        if (two) frame.agg(
-          max(abs(col("__pm1") - col("__pm0"))).as("d1"),
-          max(abs(col("__pm2") - col("__pm1"))).as("d2")).head()
-        else frame.agg(
-          max(abs(col("__pm1") - col("__pm0"))).as("d1")).head()
-      val d1 = if (row.isNullAt(0)) 0L else row.getLong(0)
-      if (d1 <= tolMicro)
-        return frame.select(col("node"), col("__pm1").as("pm"))
-          .withColumn("iters", lit(it + 1))
-      if (two) {
-        val d2 = if (row.isNullAt(1)) 0L else row.getLong(1)
-        if (d2 <= tolMicro)
-          return frame.select(col("node"), col("__pm2").as("pm"))
-            .withColumn("iters", lit(it + 2))
-        ranks = frame.select(col("node"), col("__pm2").as("pm"))
-        it += 2
-      } else {
-        ranks = frame.select(col("node"), col("__pm1").as("pm"))
-        it += 1
-      }
+    Fixpoint { fp =>
+      val (withDeg, ranks) = prelude(fp, edges, a, b, lit(1000000L).as("pm"))
+      val step = microStep(withDeg)
+      def pm(r: DataFrame, j: Int) = r.select(col("node"), col("pm").as(s"__pm$j"))
+      // TWO update rounds ride one checkpoint pass (r18): both rounds'
+      // ranks plus the entering ranks land in ONE frame, and a single
+      // probe reads both L-inf deltas off the checkpointed blocks.
+      // Round k's delta is tested before round k+1's ranks are looked
+      // at, so the returned (ranks, iters) equal the round-at-a-time
+      // loop's; at worst the final batch computes one value-discarded
+      // round past the fixed point.
+      val res = fp.loop(ranks, maxIters, perAction = 2,
+        batch = { (r, k) =>
+          val r1 = step(r)
+          val rounds =
+            if (k == 2) pm(step(r1), 2).join(pm(r1, 1), Seq("node")) else pm(r1, 1)
+          rounds.join(pm(r, 0), Seq("node"))
+        },
+        probe = { (_, f, k) =>
+          val d = (1 to k).map(j =>
+            max(abs(col(s"__pm$j") - col(s"__pm${j - 1}"))).as(s"d$j"))
+          val row = f.agg(d.head, d.tail: _*).head()
+          (1 to k).find(j =>
+            (if (row.isNullAt(j - 1)) 0L else row.getLong(j - 1)) <= tolMicro)
+        },
+        settle = (f, j) => f.select(col("node"), col(s"__pm$j").as("pm"))
+      ).orThrow(s"PageRank (L-inf <= $tolMicro micro-units)")
+      res.state.withColumn("iters", lit(res.rounds))
     }
-    throw new IllegalStateException(
-      s"PageRank did not converge to L-inf <= $tolMicro micro-units " +
-        s"in $maxIters iterations")
   }
 
   /** @return (node, rank) after exactly `iters` updates, damping `d`. */
   def run(edges: DataFrame, a: String, b: String,
       iters: Int, d: Double = 0.85): DataFrame = {
     require(iters >= 0 && iters <= 100, s"iters $iters outside [0, 100]")
+    Fixpoint { fp =>
+      val (withDeg, ranks) = prelude(fp, edges, a, b, lit(1.0).as("p"))
+      fp.bounded(ranks, iters, perAction = 2)(
+        step(withDeg, col("p") / col("od"), m => lit(1.0 - d) + lit(d) * m, "p"))
+    }
+  }
+
+  /** The directed edge list joined to out-degrees, and the initial
+    * (node, rank0) frame — both materialized once. */
+  private def prelude(fp: Fixpoint, edges: DataFrame, a: String, b: String,
+      rank0: Column): (DataFrame, DataFrame) = {
     val e = edges.select(col(a).as("s"), col(b).as("t"))
       .filter(col("s") =!= col("t"))
       .distinct()
-    val dir = e.unionAll(e.select(col("t").as("s"), col("s").as("t")))
-      .localCheckpoint(true)
+    val dir = fp.cut(e.unionAll(e.select(col("t").as("s"), col("s").as("t"))))
     val outdeg = dir.groupBy(col("s")).agg(count(lit(1)).as("od"))
-    val withDeg = dir.join(outdeg, Seq("s")).localCheckpoint(true)
-    var ranks = outdeg.select(col("s").as("node"), lit(1.0).as("p"))
-      .localCheckpoint(true)
-    (1 to iters).foreach { i =>
-      ranks = withDeg
-        .join(ranks, col("s") === col("node"))
-        .groupBy(col("t"))
-        .agg(sum(col("p") / col("od")).as("m"))
-        .select(col("t").as("node"), (lit(1.0 - d) + lit(d) * col("m")).as("p"))
-      // every-second-round checkpoint (r18) — see runExactMicro
-      if (i % 2 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks
+    (fp.cut(dir.join(outdeg, Seq("s"))),
+      fp.cut(outdeg.select(col("s").as("node"), rank0)))
   }
+
+  /** One update round: (node, rank) -> (node, rank). */
+  private def step(withDeg: DataFrame, msg: Column, rank: Column => Column,
+      name: String)(r: DataFrame): DataFrame = withDeg
+    .join(r, col("s") === col("node"))
+    .groupBy(col("t"))
+    .agg(sum(msg).as("m"))
+    .select(col("t").as("node"), rank(col("m")).as(name))
+
+  private def microStep(withDeg: DataFrame): DataFrame => DataFrame =
+    step(withDeg, expr("(pm * 85) div (100 * od)"), m => lit(150000L) + m, "pm")
 }

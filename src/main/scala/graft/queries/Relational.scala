@@ -906,8 +906,8 @@ object Relational {
         "runs pick 10-20, the gate proves the per-iteration math and " +
         "wiring hash-exactly): rank flows over the undirected " +
         "co-purchase graph as one join + one keyed agg per round, no " +
-        "driver-side graph state, lineage cut per round by eager " +
-        "checkpoint (the ConnectedComponents lesson). Gated through " +
+        "driver-side graph state, lineage cut every second round by " +
+        "eager checkpoint (operators/Fixpoint). Gated through " +
         "the FIXED-POINT micro-unit form (t23's integer-weight " +
         "convention): pure BIGINT arithmetic, bit-identical on any " +
         "engine and summation order — the float form's exact-rational " +
@@ -948,7 +948,7 @@ object Relational {
         "(Probed at sf0.1 the same tol converges at round 7 — the " +
         "early-stop is SF-adaptive where gr02 is not.) Per-round cost " +
         "is unchanged (one join + one keyed agg + a 1-row delta " +
-        "scalar); lineage cut per round by eager checkpoint.",
+        "scalar); two rounds per eager checkpoint (operators/Fixpoint).",
       (s, d) => graft.operators.PageRank.runConvergedMicro(
         coPurchaseEdges(s, d), "pa", "pb", tolMicro = 1000000L, maxIters = 60),
       Some(s"""
@@ -1017,7 +1017,8 @@ object Relational {
         "early-stop gate possible: plain synchronous LP period-2 " +
         "oscillates on this graph and never satisfies zero-changed " +
         "(measured: cycles at round 35 at sf0.01, round 9 at sf0.1 — " +
-        "tools/LpProbe), while the self-vote's +1 hysteresis breaks " +
+        "with tools/LpProbe, since removed; it can be re-run from " +
+        "commit dbc2bde), while the self-vote's +1 hysteresis breaks " +
         "the flip-flop symmetry (same probe: converges in 5/7/5 " +
         "rounds at sf0.001/0.01/0.1; oscillation and maxRounds exits " +
         "still throw rather than gate bogus communities). Labels and " +

@@ -20,6 +20,24 @@ object GraftPlanBridge {
   def expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** A checkpoint frame whose size estimate exceeds `Long.MaxValue`
+    * (Spark's own default for an unknown size), re-planned with the
+    * estimate capped there. A checkpoint inherits the estimate of the
+    * plan that built it, and a join multiplies its children's
+    * estimates, so a loop whose round joins the previous checkpoint k
+    * times raises the estimate to the k-th power per round: after ~20
+    * rounds planning one round spends minutes in BigInt arithmetic.
+    * Every size threshold the planner compares against lies far below
+    * the cap, so no threshold decision changes. */
+  def capSizeEstimate(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case lr: execution.LogicalRDD if lr.computeStats().sizeInBytes > Long.MaxValue =>
+      ofRows(df.sparkSession, lr.copy()(
+        df.sparkSession.asInstanceOf[classic.SparkSession],
+        Some(lr.computeStats().copy(sizeInBytes = Long.MaxValue)),
+        Some(lr.constraints)))
+    case _ => df
+  }
+
   /** catalyst Expression -> Column, for expressions Spark ships but does
     * not expose through `functions` (e.g. the runtime-filter bloom pair). */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =

@@ -47,6 +47,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.keySet == (1000L to 1299L).toSet)
   }
 
+  test("deep chain with a round budget too small for the star loop throws") {
+    // 3 propagation rounds leave a ~75-node quotient chain that three
+    // star rounds cannot collapse: the exit must fail loudly instead of
+    // returning unmerged components
+    val s = spark
+    import s.implicits._
+    val chain = (0L until 299L).map(i => (i + 1000L, i + 1001L))
+    intercept[IllegalStateException] {
+      ConnectedComponents.minLabel(chain.toDF("src", "dst"), maxRounds = 3)
+    }
+  }
+
   test("self-loops and isolated pairs keep their own components") {
     val got = run(Seq((4L, 4L), (1L, 2L)))
     assert(got == Map(4L -> 4L, 1L -> 1L, 2L -> 1L))

@@ -87,6 +87,16 @@ class LabelPropagationSpec extends SparkSpec {
     }
   }
 
+  test("runConverged: throws on a period-2 oscillation") {
+    // found by exhaustive search: even with the self-vote this 6-node
+    // graph flips between two labelings from round 2 on, so the cycle
+    // check (not the 40-round budget) must fire
+    val e = Seq((1L, 2L), (1L, 5L), (2L, 3L), (2L, 4L), (2L, 6L),
+      (3L, 5L), (4L, 5L), (5L, 6L))
+    val err = intercept[IllegalStateException](runConv(e, 40))
+    assert(err.getMessage.contains("period-2 oscillation"), err.getMessage)
+  }
+
   test("result is identical across shuffle-partition settings") {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (2L, 4L),
       (10L, 11L), (11L, 12L))
