@@ -88,20 +88,14 @@ object VectorOps {
 
   /** Left-to-right double dot product over two float-array columns —
     * the native codegen expression (plans/DotProduct, r17): the
-    * composed zip_with/aggregate twin below is CodegenFallback and
-    * paid a lambda-dispatch-per-element plus an array allocation per
-    * ROW under every pair join (knnGraph/vamana/walk scoring — the
+    * composed zip_with/aggregate twin (test-side ComposedTwins) is
+    * CodegenFallback and paid a lambda-dispatch-per-element plus an
+    * array allocation per ROW under every pair join (knnGraph/vamana/walk scoring — the
     * tier's flop budget). Bit-identical accumulation order, so every
     * hash gate riding a cos/dsq column is unchanged; DotProductSpec
     * pins parity against the composed twin. */
   private[graft] def dot(a: String, b: String): Column =
     graft.plans.DotProduct.ofCols(col(a), col(b))
-
-  /** The composed higher-order twin dot — parity pin for
-    * DotProductSpec (the pqCodeColComposed convention). */
-  private[graft] def dotComposed(a: String, b: String): Column =
-    expr(s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-      "CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
 
   private[graft] def cosine(a: String, b: String): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
@@ -192,29 +186,13 @@ object VectorOps {
       n: Int): Column = nearestCells(cent, col(vec), n)
 
   /** Native codegen expression since r17 (plans/NearestCellsExpr): the
-    * composed struct-sort twin below held k·dim literal nodes per
-    * instance (analyzer/optimizer tax on every assignment-bearing
-    * plan) and folded through CodegenFallback lambdas per row.
+    * composed struct-sort twin (test-side ComposedTwins) held k·dim
+    * literal nodes per instance (analyzer/optimizer tax on every
+    * assignment-bearing plan) and folded through CodegenFallback lambdas per row.
     * Bit-identical dots, ranking and output shape — NearestCellsSpec
     * pins parity against the composed twin. */
   private[graft] def nearestCells(cent: Array[Array[Double]], vec: Column,
       n: Int): Column = graft.plans.NearestCellsExpr.ofCol(vec, cent, n)
-
-  /** The composed higher-order twin — parity pin for NearestCellsSpec
-    * (the pqCodeColComposed convention). */
-  private[graft] def nearestCellsComposed(cent: Array[Array[Double]],
-      vec: Column, n: Int): Column = {
-    val ranked = cent.indices.map { i =>
-      val cv = array(cent(i).map(lit(_)): _*)
-      val prod = zip_with(cv, vec, (x, y) => x * y.cast("double"))
-      struct(
-        aggregate(prod, lit(0.0), (acc, v) => acc + v).as("dot"),
-        lit(-i.toLong).as("nc"))
-    }
-    // array_sort asc on (dot, nc), reversed → (dot desc, -cell desc)
-    // = (dot desc, cell asc): v02's deterministic probe tiebreak
-    slice(reverse(array_sort(array(ranked: _*))), 1, n)
-  }
 
   private[graft] def geoAnn(s: SparkSession, d: String, nprobe: Int)
       : org.apache.spark.sql.DataFrame = {
@@ -443,6 +421,13 @@ object VectorOps {
         coalesce(col("h"), lit(0L)).as("n_hit"))
   }
 
+  /** The graph-serving gate body: recall of one [[Walk]] served off a
+    * stored (edges, f0) graph. */
+  private[queries] def walkRecall(s: SparkSession, d: String,
+      graph: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
+      walk: Walk): org.apache.spark.sql.DataFrame =
+    recallOf(bruteTruth(s, d), walk.serve(s, d, graph._1, graph._2).top3)
+
   /** Oracle CTEs for the brute-force truth set (q, c, bf, truth). */
   private[queries] val TruthSql = """
         q AS (SELECT vec_id qid, embedding::DOUBLE[] qe FROM embeddings WHERE vec_id < 20),
@@ -558,7 +543,7 @@ object VectorOps {
 
   /** Oracle CTEs for the stored hub graph + entry medoids (cn, ep,
     * md, edges0, hub, hedges, edges, f0) — the SQL replay of
-    * hubGraphAndEntry, shared by the v17 and v19 gates. Expects
+    * Walk.hubGraphAndEntry, shared by the v17 and v19 gates. Expects
     * KmeansSql.UpToCent2 and geoCellsSql (d3g, a3, probes) upstream. */
   private[queries] def hubGraphSql(degree: Int): String = s"""
         cn AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce,
@@ -658,7 +643,7 @@ object VectorOps {
                FROM probes p JOIN md m USING (cell)
                WHERE m.mid <> p.qid)"""
 
-  /** Oracle CTEs replaying graphAnnServeAdc's walk: like beamHopsSql
+  /** Oracle CTEs replaying the ADC [[Walk]]: like beamHopsSql
     * but every beam cut ranks on the INTEGER ADC score from `adcall`,
     * and the final `ann` is the exact-cosine re-rank of the last
     * beam (bf already holds every cosine). */
@@ -787,7 +772,7 @@ object VectorOps {
                    ORDER BY cos DESC, cid ASC) rn FROM rr)
                WHERE rn <= 3)"""
 
-  /** Oracle CTEs replaying graphAnnServe's beam walk hop by hop:
+  /** Oracle CTEs replaying the exact [[Walk]] hop by hop:
     * entry scoring (s0/b0 — f0's medoid entries ranked), then per hop
     * h: candidate union c<h> (previous beam + its out-edges, exact
     * DISTINCT, self excluded), exact re-score s<h> (bf already holds
@@ -1039,13 +1024,11 @@ object VectorOps {
   // --- map-side encode + LUT from codebook literals (zero shuffle:
   // the whole codebook is expression literals, the v09 nearestCells
   // shape applied per subspace)
-  private def pqSubcol(i: Int, vec: String): Column =
-    expr(s"slice($vec, ${i * PqSubDim + 1}, $PqSubDim)")
 
   /** Euclidean code assignment for subspace i, as ONE native codegen'd
     * expression (plans/PqSubspaceCode): per codeword key
     * (dot - ||c||^2/2), argmax with ties to the smaller code — the
-    * same math the composed struct-sort form (pqCodeColComposed)
+    * same math the composed struct-sort form (ComposedTwins, test-side)
     * declares, in one flat primitive loop. The composed form's
     * zip_with/aggregate are CodegenFallback, and BatchProfile measured
     * the 16-codeword tree at ~100x the raw flops per row; the native
@@ -1055,25 +1038,6 @@ object VectorOps {
       vec: String = "embedding"): Column =
     org.apache.spark.sql.GraftPlanBridge.column(graft.plans.PqSubspaceCode(
       org.apache.spark.sql.GraftPlanBridge.expr(col(vec)), cb(i), i * PqSubDim))
-
-  /** The composed higher-order-function twin of pqCodeCol — kept as
-    * the parity oracle for PqSubspaceSpec (the d03/d03b convention:
-    * the declarative form documents the semantics, the native form
-    * runs them). */
-  private[graft] def pqCodeColComposed(cb: Array[Array[Array[Double]]],
-      i: Int, vec: String = "embedding"): Column = {
-    val ranked = cb(i).indices.map { c =>
-      val cw = cb(i)(c)
-      val cv = array(cw.map(lit(_)): _*)
-      val prod = zip_with(cv, pqSubcol(i, vec), (x, y) => x * y.cast("double"))
-      struct(
-        (aggregate(prod, lit(0.0), (acc, v) => acc + v) -
-          lit(cw.map(x => x * x).sum / 2)).as("key"),
-        lit(-c.toLong).as("nc"))
-    }
-    (-element_at(slice(reverse(array_sort(array(ranked: _*))), 1, 1), 1)
-      .getField("nc")).cast("int")
-  }
 
   /** Query LUT for subspace i: per-codeword dots quantized to integer
     * MICRO-UNITS (the t31 fixed-point convention), so the ADC score —
@@ -1088,16 +1052,6 @@ object VectorOps {
     org.apache.spark.sql.GraftPlanBridge.column(graft.plans.PqSubspaceLut(
       org.apache.spark.sql.GraftPlanBridge.expr(col(vec)), cb(i), i * PqSubDim))
 
-  /** Composed twin of pqLutCol (parity oracle for PqSubspaceSpec). */
-  private[graft] def pqLutColComposed(cb: Array[Array[Array[Double]]],
-      i: Int, vec: String = "embedding"): Column =
-    array((0 until PqK).map { c =>
-      round(aggregate(
-        zip_with(array(cb(i)(c).map(lit(_)): _*), pqSubcol(i, vec),
-          (x, y) => x * y.cast("double")),
-        lit(0.0), (acc, v) => acc + v) * 1e6).cast("long")
-    }: _*)
-
   /** Corpus encode frame: (cid, c0..c<m-1>) from codebook literals. */
   private[graft] def pqCorpus(e: org.apache.spark.sql.DataFrame,
       cb: Array[Array[Array[Double]]]): org.apache.spark.sql.DataFrame =
@@ -1105,7 +1059,7 @@ object VectorOps {
       (0 until PqM).map(i => pqCodeCol(cb, i).as(s"c$i")): _*)
 
   /** Query LUT frame: (qid, l0..l<m-1>) from codebook literals. */
-  private def pqQueries(e: org.apache.spark.sql.DataFrame,
+  private[graft] def pqQueries(e: org.apache.spark.sql.DataFrame,
       cb: Array[Array[Array[Double]]]): org.apache.spark.sql.DataFrame =
     e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid") +:
@@ -1533,251 +1487,8 @@ object VectorOps {
       .select(col("qid"), col("mid").as("cid")).distinct()
   }
 
-  /** Stored graph + entry frontier for serving: loads the persisted
-    * (edges, medoids) frames from the TrainedIndex artifact store —
-    * the first demand per JVM builds and persists, every later call
-    * is a parquet scan (the v13→v15 train-once payoff applied to the
-    * graph tier, VERDICT r12 #1). */
-  private def hubGraphAndEntry(s: SparkSession, d: String, degree: Int,
-      kCells: Int = 8, entries: Int = 2)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (edges, medoids) = TrainedIndex.graph(s, d, degree, kCells)
-    val cent = TrainedIndex.centroids(s, d, k = kCells)
-    (edges, graphEntries(s, d, cent, medoids, entries))
-  }
-
-  private[graft] def graphAnnServe(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    exactWalkServe(s, d, edges, f0, beam, hops)
-  }
-
-  /** Stored Vamana graph + entry frontier (the hubGraphAndEntry shape
-    * over the alpha-pruned artifact). */
-  private def vamanaGraphAndEntry(s: SparkSession, d: String,
-      degree: Int, kCells: Int, entries: Int)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (edges, medoids) = TrainedIndex.vamanaGraph(s, d, degree, kCells)
-    val cent = TrainedIndex.centroids(s, d, k = kCells)
-    (edges, graphEntries(s, d, cent, medoids, entries))
-  }
-
-  /** v22: the exact-cosine beam walk over the alpha-pruned graph —
-    * same serving kernel as v17, only the edge artifact differs. */
-  private[graft] def vamanaAnnServe(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    exactWalkServe(s, d, edges, f0, beam, hops)
-  }
-
-  /** The ADC-compassed walk (v19's memory economics) over the
-    * alpha-pruned graph. */
-  private[graft] def vamanaAnnServeAdc(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    adcWalkServe(s, d, edges, f0, beam, hops,
-      Some(TrainedIndex.codes(s, d)))
-  }
-
-  /** v22b's serve with the CONVERGED ADC walk (the v22 stop rule on
-    * the code compass): walk to the integer-score fixed point, one
-    * exact re-rank of the dispatched final beam. */
-  private[graft] def vamanaAnnServeAdcConverged(s: SparkSession,
-      d: String, beam: Int, degree: Int, kCells: Int, entries: Int,
-      maxHops: Int = WalkMaxHops): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    val frontier = adcWalkFrontierConverged(s, d, edges, f0, beam,
-      maxHops, Some(TrainedIndex.codes(s, d)))
-    exactRerankTop3(s, d, frontier.select(col("qid"), col("cid")))
-  }
-
-  /** The query's `refine` nearest cells' MEMBERS as (qid, cid)
-    * candidates — the IVF scan set, map-side assignment against
-    * centroid literals on both sides (geoAnn's shape, parameterized
-    * over the centroid artifact so the k~sqrt(n) geometry serves
-    * O(sqrt n) candidates per query instead of O(n/8)). */
-  private[graft] def cellCandidates(s: SparkSession, d: String,
-      cent: Array[Array[Double]], refine: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val asg = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      .withColumn("cell",
-        -element_at(nearestCells(cent, "ce", 1), 1).getField("nc"))
-    val probes = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"),
-        explode(nearestCells(cent, "embedding", refine)).as("pc"))
-      .select(col("qid"), (-col("pc.nc")).as("cell"))
-    asg.join(broadcast(probes), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"))
-  }
-
-  /** v17d's REFINED graph serving: the beam walk's final frontier
-    * UNIONED with the query's `refine` nearest cells' members, then
-    * ONE exact re-rank cut. The walk supplies long-range candidates
-    * the cell scan cannot see (hub escapes), the cell scan supplies
-    * the dense local neighborhood greedy descent walks past (the
-    * measured recall-saturation failure: every per-walk axis — beam,
-    * degree, hops, and past ~16 even entry diversity — plateaus at a
-    * local-minimum set). Cost per query is beam + refine x n/kCells
-    * scored rows; at the gated k~sqrt(n) geometry that is O(sqrt n) —
-    * the IVF nprobe economics — vs the walk's O(1), the price of
-    * recall above the walk's plateau. The refinement is one candidate
-    * union + one exact scoring pass: no second walk, no extra hop
-    * over the stored graph. */
-  private[graft] def graphAnnServeRefined(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2, refine: Int = 2)
-      : org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    refinedExactServeFrom(s, d, edges, f0, beam, hops, kCells, refine)
-  }
-
-  /** The exact-refined tail over an EXPLICIT (edges, f0) pair — one
-    * copy shared by the hub (v17d) and vamana (v22c) refined serves,
-    * the refinedAdcServe convention applied to the exact tier. */
-  private def refinedExactServeFrom(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int, kCells: Int, refine: Int)
-      : org.apache.spark.sql.DataFrame =
-    refinedExactTail(s, d,
-      exactWalkFrontier(s, d, edges, f0, beam, hops), kCells, refine)
-
-  /** The refined union + exact re-rank over an EXPLICIT final
-    * frontier — one copy shared by the fixed-hop (v17d) and converged
-    * (v22c/st19d) refined serves. */
-  private def refinedExactTail(s: SparkSession, d: String,
-      frontier: org.apache.spark.sql.DataFrame, kCells: Int, refine: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val cent = TrainedIndex.centroids(s, d, k = kCells)
-    val cands = frontier.select(col("qid"), col("cid"))
-      .union(cellCandidates(s, d, cent, refine))
-      .distinct()
-    exactRerankTop3(s, d, cands)
-  }
-
-  /** v22c: the refined union over the alpha-pruned walk — the
-    * max-recall composition (v17d's union lever on v22's graph). */
-  private[graft] def vamanaAnnServeRefined(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2, refine: Int = 2)
-      : org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    refinedExactServeFrom(s, d, edges, f0, beam, hops, kCells, refine)
-  }
-
-  /** The CONVERGED exact-cosine walk's top-3 serve over an explicit
-    * (edges, f0) pair — exactWalkServe with the hop count as a
-    * convergence test; shared by v22 and the maintained tier
-    * (st19d). */
-  private[graft] def exactWalkServeConverged(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, maxHops: Int = WalkMaxHops)
-      : org.apache.spark.sql.DataFrame =
-    graft.plans.TopKPerKey.topK(
-      exactWalkFrontierConverged(s, d, edges, f0, beam, maxHops),
-      Seq("qid"), Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid"))
-
-  /** v22's serve with the hop count as a CONVERGENCE TEST (VERDICT
-    * r15 #4): the exact-cosine walk over the alpha-pruned graph hops
-    * until the frontier stops changing (capped at [[WalkMaxHops]]),
-    * then cuts top-3. */
-  private[graft] def vamanaAnnServeConverged(s: SparkSession, d: String,
-      beam: Int, degree: Int, kCells: Int, entries: Int,
-      maxHops: Int = WalkMaxHops): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    exactWalkServeConverged(s, d, edges, f0, beam, maxHops)
-  }
-
-  /** Probe form of [[vamanaAnnServeConverged]]: (top-3 serve, stop
-    * hop) — GraphAnnAb's `vamconv` mode and GraphAnnSpec use it to
-    * measure that the cap is headroom, not the budget. */
-  private[graft] def vamanaWalkStop(s: SparkSession, d: String,
-      beam: Int, degree: Int, kCells: Int, entries: Int,
-      maxHops: Int = WalkMaxHops)
-      : (org.apache.spark.sql.DataFrame, Int) = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    val (frontier, stop) =
-      exactWalkFrontierConvergedWithStop(s, d, edges, f0, beam, maxHops)
-    (graft.plans.TopKPerKey.topK(frontier, Seq("qid"),
-      Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid")), stop)
-  }
-
-  /** v22c's refined union over the CONVERGED alpha-pruned walk. */
-  private[graft] def vamanaAnnServeRefinedConverged(s: SparkSession,
-      d: String, beam: Int, degree: Int, kCells: Int, entries: Int,
-      refine: Int, maxHops: Int = WalkMaxHops)
-      : org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    refinedExactTail(s, d,
-      exactWalkFrontierConverged(s, d, edges, f0, beam, maxHops),
-      kCells, refine)
-  }
-
-  /** v17's exact-cosine beam walk over an EXPLICIT (edges, f0) pair —
-    * the serving kernel, decoupled from where the graph came from
-    * (artifact store, st18-maintained roots, or a fresh build). */
-  private[graft] def exactWalkServe(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame =
-    graft.plans.TopKPerKey.topK(
-      exactWalkFrontier(s, d, edges, f0, beam, hops), Seq("qid"),
-      Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid"))
-
-  /** The walk's FINAL frontier (qid, cid, cos) — factored out of
-    * exactWalkServe so the refined variant (v17d) can union it with
-    * the entry cells' members before the last exact cut. */
-  private[graft] def exactWalkFrontier(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    // norms ride the row (the v14 convention); the query side is
-    // localized once per serve (r18, see localizedByQid) so each hop's
-    // broadcast of it launches no job
-    val qn = localizedByQid(s, e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq")))
-    val cn = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-
-    // exact scoring of a (qid, cid) candidate frame: the tiny frame
-    // broadcasts into the embedding scan (bucket point-lookups at
-    // scale), queries broadcast by construction
-    def scoredOf(cands: org.apache.spark.sql.DataFrame) =
-      cn.join(broadcast(cands), Seq("cid"))
-        .join(broadcast(qn), Seq("qid"))
-        .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-        .select(col("qid"), col("cid"), col("cos"))
-
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("cos").desc, col("cid").asc), beam)
-
-    // each frontier is <= queries x beam rows, driver-materialized
-    // (see DriverFrontier): one action per hop funds the next hop's
-    // LocalRelation, its pushdown ids, and (in the converged forms)
-    // the convergence test; the hop candidate union/dedup assembles
-    // on the driver too (r18, see hopCandsOf)
-    var frontier = materializeFrontier(s, topB(scoredOf(f0)))
-    for (_ <- 1 to hops) {
-      frontier = materializeFrontier(s,
-        topB(scoredOf(hopCandsOf(s, edges, frontier))))
-    }
-    frontier.df
-  }
-
-  /** Convergence CAP for [[exactWalkFrontierConverged]] — a runaway
-    * bound, NOT the search budget (VERDICT r15 #4 / BENCH_SCALE r15:
+  /** Convergence CAP of the converged walk ([[Walk]]'s default
+    * `maxHops`, and the oracle's unroll depth) — a runaway bound, NOT the search budget (VERDICT r15 #4 / BENCH_SCALE r15:
     * hops is a convergence budget ~log n, and a pinned constant
     * silently re-starves the walk at the next corpus jump — "measuring
     * a graph at a starved budget measures the budget"). Measured stops
@@ -1793,423 +1504,6 @@ object VectorOps {
     * paid when converged); only the oracle pays the full unroll.
     * GraphAnnSpec asserts the stop is strictly inside the cap. */
   private[graft] val WalkMaxHops = 16
-
-  /** The beam walk iterated TO FIXED POINT (the dm10e recipe applied
-    * to the walk, VERDICT r15 #4): hop until the frontier SET stops
-    * changing, capped at `maxHops`. The stop derives from the data on
-    * both engines — the oracle (beamHopsConvergedSql) unrolls
-    * `maxHops` materialized hop CTEs, computes each hop's
-    * new-row count as data, and dispatches the first unchanged hop —
-    * so a corpus jump that needs more hops moves both sides together
-    * instead of silently starving the engine. Convergence is
-    * monotone-safe: each hop's candidates contain the previous
-    * frontier, so the per-qid beam cut can only improve, and
-    * `new \ old = {}` is exactly set equality. The emptiness test is
-    * a driver-side set comparison over the two <= queries x beam
-    * materialized frontiers (r17, see DriverFrontier) — the same
-    * bounded class, one action per hop instead of three. */
-  private[graft] def exactWalkFrontierConverged(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, maxHops: Int = WalkMaxHops)
-      : org.apache.spark.sql.DataFrame =
-    exactWalkFrontierConvergedWithStop(s, d, edges, f0, beam, maxHops)._1
-
-  /** The converged walk plus its measured stop hop — the probe form
-    * GraphAnnSpec and tools use to verify the cap is headroom, not
-    * the budget. */
-  private[graft] def exactWalkFrontierConvergedWithStop(
-      s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, maxHops: Int = WalkMaxHops)
-      : (org.apache.spark.sql.DataFrame, Int) = {
-    val e = Tables.embeddings(s, d)
-    // query side localized once per serve (r18, see localizedByQid)
-    val qn = localizedByQid(s, e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq")))
-    val cn = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-    def scoredOf(cands: org.apache.spark.sql.DataFrame) =
-      cn.join(broadcast(cands), Seq("cid"))
-        .join(broadcast(qn), Seq("qid"))
-        .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-        .select(col("qid"), col("cid"), col("cos"))
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("cos").desc, col("cid").asc), beam)
-
-    var frontier = materializeFrontier(s, topB(scoredOf(f0)))
-    var h = 0
-    var converged = false
-    while (h < maxHops && !converged) {
-      val next = materializeFrontier(s,
-        topB(scoredOf(hopCandsOf(s, edges, frontier))))
-      // `next \ frontier = {}` on driver-held sets — the identical
-      // anti-join emptiness test, without a per-hop probe plan
-      converged = next.pairs.subsetOf(frontier.pairs)
-      frontier = next
-      h += 1
-    }
-    (frontier.df, h)
-  }
-
-  /** Frontier-id pushdown cap for [[hopEdges]] (VERDICT r13 #2). Below
-    * it the hop inlines the frontier ids as an isin literal; above it
-    * the literal list itself becomes the cost — O(ids) analysis/codegen
-    * work per hop plan, which at a fleet-sized serving batch (10^4
-    * queries x beam 32 ~ 10^5 ids) bloats the plan long before the scan
-    * ever wins — so the hop falls back to the PLAIN broadcast join, the
-    * semantic base the pruned form is row-equal to (GraphAnnSpec pins
-    * both regimes). 1024 keeps every gate (20 queries x beam <= 48)
-    * on the point-lookup arm while bounding the literal list at ~3
-    * orders of magnitude under the pathological case. */
-  private[graft] val HopPushdownMaxIds = 1024
-
-  /** One hop's out-edge expansion: the frontier's src ids ride into
-    * the stored edge table's SCAN as a pushed predicate before the
-    * broadcast join resolves (qid, dst) pairs. The id set is
-    * driver-bounded TWICE over: by construction (<= queries x beam
-    * rows — the frontier is already localCheckpointed, so the collect
-    * re-reads checkpoint blocks, not the plan) and by `limit(cap+1)`,
-    * so even a mis-sized frontier can never collect more than the cap
-    * before the hop flips to the join arm. Semantically a no-op (the
-    * join restricts to the same keys), but it is what makes a hop a
-    * POINT LOOKUP instead of a full edge scan: the isin lands in the
-    * parquet scan's PushedFilters (GraphAnnSpec pins it; past
-    * parquet's inFilterThreshold=10 the reader prunes row groups by
-    * the id range, which the src-sorted edge artifact keeps tight —
-    * the >10-id shape is spec-pinned too), so at 100 TB an id-sorted/
-    * bucketed edge artifact serves each hop from the few row groups
-    * holding the frontier's ids. */
-  private[graft] def hopEdges(edges: org.apache.spark.sql.DataFrame,
-      frontier: org.apache.spark.sql.DataFrame,
-      maxPushIds: Int = HopPushdownMaxIds)
-      : org.apache.spark.sql.DataFrame = {
-    val srcIds = frontier.select(col("cid")).distinct()
-      .limit(if (maxPushIds >= Int.MaxValue - 1) Int.MaxValue
-             else maxPushIds + 1) // saturating: cap+1 must not overflow
-      .collect().map(_.getLong(0)).toSeq
-    val scan =
-      if (srcIds.size <= maxPushIds) edges.filter(col("src").isin(srcIds: _*))
-      else edges // fleet-sized frontier: literal list would bloat the plan
-    scan
-      .join(broadcast(frontier.select(col("qid"), col("cid").as("src"))),
-        Seq("src"))
-      .select(col("qid"), col("dst").as("cid"))
-  }
-
-  /** DRIVER-MATERIALIZED walk frontier (r17, guide §1.2/§5): a frontier
-    * is <= queries x beam rows BY CONSTRUCTION (TopKPerKey k=beam per
-    * qid over the broadcast query set — the same bounded class as
-    * hopEdges' id collect), yet the walk loops used to pay THREE
-    * actions per hop on it: the eager localCheckpoint, hopEdges'
-    * id collect, and (converged forms) the anti-join emptiness probe —
-    * each with its own analyzed/optimized plan. ONE collect now funds
-    * all three: the rows become a LocalRelation for the next hop's
-    * broadcast joins (doubles/longs round-trip the driver bit-exactly,
-    * so every downstream value is unchanged), the hop's pushdown ids
-    * derive from the rows, and convergence is a driver-side set
-    * comparison (`next \ frontier = {}` == `pairs subsetOf prev` —
-    * the identical test). Rows are sorted by the (qid, cid) key —
-    * unique per row — so the LocalRelation is deterministic even
-    * though collect order off a shuffle is not. At a fleet-sized
-    * serving batch the frontier outgrows the driver exactly when it
-    * outgrows hopEdges' literal list (HopPushdownMaxIds); the
-    * checkpointed form (exactWalkFrontier's shape pre-r17) is the
-    * documented escalation for that regime. */
-  private final case class DriverFrontier(
-      rows: Array[org.apache.spark.sql.Row],
-      df: org.apache.spark.sql.DataFrame) {
-    /** The (qid, cid) pair set — the convergence subject. */
-    lazy val pairs: Set[(Long, Long)] =
-      rows.iterator.map(r => (r.getLong(0), r.getLong(1))).toSet
-    /** Distinct candidate ids — hopEdges' pushdown list. */
-    lazy val ids: Seq[Long] = rows.iterator.map(_.getLong(1)).toSeq.distinct
-  }
-
-  private def materializeFrontier(s: SparkSession,
-      df: org.apache.spark.sql.DataFrame): DriverFrontier = {
-    val rows = df.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-    DriverFrontier(rows,
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
-  }
-
-  /** The walk's per-QUERY side frames (qn's 20 (qid, qe, nq) rows /
-    * qlut's 20 LUT rows) materialized ONCE per serve as a
-    * deterministic LocalRelation (r18, guide §1.2/§5): the loops used
-    * to re-broadcast the distributed frame every hop, and a
-    * BroadcastExchange over a scan subtree is one Spark job per hop —
-    * over a LocalTableScan it collects on the driver without
-    * launching any. Rows sort by the unique qid, and longs/doubles/
-    * float arrays round-trip the driver bit-exactly, so every
-    * downstream value is unchanged. Bounded by the query-set size by
-    * construction (the broadcast side was always required to fit). */
-  private def localizedByQid(s: SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val rows = df.collect().sortBy(_.getLong(0))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
-  /** One hop's candidate set assembled ON THE DRIVER (r18 — the
-    * DriverFrontier discipline applied to the hop union): the hop
-    * expansion is <= queries x beam x degree rows BY CONSTRUCTION
-    * (frontier ids are queries x beam; stored out-degree is capped by
-    * the graph build), the same corpus-independent bounded-collect
-    * class as the frontier itself, so ONE collect funds the
-    * union + self-filter + dedup that used to run distributed — the
-    * per-hop `distinct` Exchange and its AQE stage job disappear, and
-    * the returned LocalRelation broadcasts into the scoring join
-    * job-free. Identical candidate set (union ∪ frontier, qid != cid,
-    * deduped; TreeSet order = the unique (qid, cid) key, so the
-    * relation is deterministic). At a fleet-sized serving batch this
-    * outgrows the driver exactly when hopEdges' literal list does
-    * (HopPushdownMaxIds); the distributed union+distinct form remains
-    * the documented escalation for that regime. */
-  private def hopCandsOf(s: SparkSession,
-      edges: org.apache.spark.sql.DataFrame, f: DriverFrontier)
-      : org.apache.spark.sql.DataFrame = {
-    val pairs = scala.collection.mutable.TreeSet.empty[(Long, Long)]
-    f.rows.foreach { r =>
-      if (r.getLong(0) != r.getLong(1)) pairs += ((r.getLong(0), r.getLong(1)))
-    }
-    hopEdgesOf(edges, f).collect().foreach { r =>
-      if (r.getLong(0) != r.getLong(1)) pairs += ((r.getLong(0), r.getLong(1)))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("qid",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(pairs.toSeq.map(p =>
-        org.apache.spark.sql.Row(p._1, p._2)): _*)
-    s.createDataFrame(rows, schema)
-  }
-
-  /** hopEdges over a driver-materialized frontier: same two arms and
-    * the same cap decision, with the id list taken from the rows
-    * already on the driver instead of a second collect. */
-  private def hopEdgesOf(edges: org.apache.spark.sql.DataFrame,
-      f: DriverFrontier, maxPushIds: Int = HopPushdownMaxIds)
-      : org.apache.spark.sql.DataFrame = {
-    val scan =
-      if (f.ids.size <= maxPushIds) edges.filter(col("src").isin(f.ids: _*))
-      else edges // fleet-sized frontier: literal list would bloat the plan
-    scan
-      .join(broadcast(f.df.select(col("qid"), col("cid").as("src"))),
-        Seq("src"))
-      .select(col("qid"), col("dst").as("cid"))
-  }
-
-  /** DiskANN-style serving (v19, Subramanya et al. NeurIPS'19): the
-    * v17 beam walk COMPASSED BY PQ/ADC scores instead of exact
-    * cosines — candidates are scored from their stored 32-bit codes
-    * against the query's lookup table (integer micro-unit sums, so
-    * every beam cut ranks on exact integers), and full vectors are
-    * touched ONLY for the final beam's exact re-rank. That is
-    * DiskANN's memory economics: the walk reads codes (RAM-resident
-    * at any corpus size), the exact pass reads queries x beam
-    * vectors (the "disk" tier) once at the end. */
-  private[graft] def graphAnnServeAdc(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    adcWalkServe(s, d, edges, f0, beam, hops,
-      Some(TrainedIndex.codes(s, d)))
-  }
-
-  /** v19's ADC beam walk over an EXPLICIT (edges, f0) pair.
-    * `codesIn` is the stored 32-bit serving representation (cid,
-    * c0..c<m-1>) — normally the persisted TrainedIndex.codes frame,
-    * so the walk reads the code ARTIFACT, never the vector column;
-    * None falls back to the map-side encode (codes are deterministic
-    * ints, so both sources are bit-identical). Query LUTs always
-    * compute at query time — queries are not stored. */
-  private[graft] def adcWalkServe(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
-      codesIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val frontier = adcWalkFrontier(s, d, edges, f0, beam, hops, codesIn)
-    // the one full-vector touch: exact re-rank of the final beam
-    exactRerankTop3(s, d, frontier.select(col("qid"), col("cid")))
-  }
-
-  /** The ADC walk's FINAL frontier (qid, cid, score) — factored out of
-    * adcWalkServe so the code-compassed refined variant (v21) can
-    * union it with the entry cells' members before its shortlist cut. */
-  private[graft] def adcWalkFrontier(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
-      codesIn: Option[org.apache.spark.sql.DataFrame] = None,
-      qlutIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val cb = TrainedIndex.codebook(s, d)
-    val codes = codesIn.getOrElse(pqCorpus(e, cb))
-    // LUT side localized once per serve (r18, see localizedByQid)
-    val qlut = localizedByQid(s, qlutIn.getOrElse(queryLuts(s, d)))
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("score").desc, col("cid").asc), beam)
-    var frontier = materializeFrontier(s, topB(scoredAdcOf(codes, qlut, f0)))
-    for (_ <- 1 to hops) {
-      frontier = materializeFrontier(s,
-        topB(scoredAdcOf(codes, qlut, hopCandsOf(s, edges, frontier))))
-    }
-    frontier.df
-  }
-
-  /** The ADC walk iterated TO FIXED POINT — exactWalkFrontierConverged
-    * with the integer code compass (v22b's budget made data-derived
-    * like v22's): hop until the frontier set stops changing, cap
-    * [[WalkMaxHops]]. Integer scores are bit-exact on both engines,
-    * so the per-hop sets — and therefore the stop — replay in SQL. */
-  private[graft] def adcWalkFrontierConverged(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int,
-      maxHops: Int = WalkMaxHops,
-      codesIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val cb = TrainedIndex.codebook(s, d)
-    val codes = codesIn.getOrElse(pqCorpus(e, cb))
-    // LUT side localized once per serve (r18, see localizedByQid)
-    val qlut = localizedByQid(s, queryLuts(s, d))
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("score").desc, col("cid").asc), beam)
-    var frontier = materializeFrontier(s, topB(scoredAdcOf(codes, qlut, f0)))
-    var h = 0
-    var converged = false
-    while (h < maxHops && !converged) {
-      val next = materializeFrontier(s,
-        topB(scoredAdcOf(codes, qlut, hopCandsOf(s, edges, frontier))))
-      converged = next.pairs.subsetOf(frontier.pairs)
-      frontier = next
-      h += 1
-    }
-    frontier.df
-  }
-
-  /** The broadcast query set's integer ADC lookup tables (qid,
-    * l0..l<m-1>) over the stored codebook — ONE construction shared
-    * by the walk and the refined tail (the codebook rides the
-    * expressions as literals, so duplicating the build used to pay
-    * the analysis/codegen for the LUT columns twice per serve). */
-  private def queryLuts(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val cb = TrainedIndex.codebook(s, d)
-    Tables.embeddings(s, d).filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid") +:
-        (0 until PqM).map(i => pqLutCol(cb, i).as(s"l$i")): _*)
-  }
-
-  /** Integer ADC scoring of a (qid, cid) candidate frame from the
-    * stored codes + query LUTs — the shared compass of the walk and
-    * the v21 refined shortlist (candidates broadcast into the code
-    * scan; no vector byte is read). */
-  private def scoredAdcOf(codes: org.apache.spark.sql.DataFrame,
-      qlut: org.apache.spark.sql.DataFrame,
-      cands: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    codes.join(broadcast(cands), Seq("cid"))
-      .join(broadcast(qlut), Seq("qid"))
-      .withColumn("score", pqScoreCol)
-      .select(col("qid"), col("cid"), col("score"))
-
-  /** Exact-cosine top-3 of a (qid, cid) candidate frame — the final
-    * full-vector touch shared by the ADC serving paths. */
-  private def exactRerankTop3(s: SparkSession, d: String,
-      cands: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    // query side localized once (r18, see localizedByQid): its
-    // broadcast into the re-rank join launches no job
-    val qn = localizedByQid(s, e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq")))
-    val cn = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-    val rr = cn.join(broadcast(cands), Seq("cid"))
-      .join(broadcast(qn), Seq("qid"))
-      .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-      .select(col("qid"), col("cid"), col("cos"))
-    graft.plans.TopKPerKey.topK(rr, Seq("qid"),
-      Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** v21's refined serving at DiskANN memory economics: v17d's
-    * candidate-union recall lever (walk final beam ∪ the query's
-    * `refine` nearest cells' members) with the union scored from the
-    * stored 32-bit CODES — integer ADC, no vector byte — and only the
-    * surviving `beam` shortlist re-ranked exactly. Where v17d's
-    * refinement reads refine x n/k VECTORS per query (the exact-tier
-    * price), v21 reads refine x n/k CODES (64x smaller — the RAM
-    * tier) and queries x beam vectors once: the recall-above-plateau
-    * lever at the memory budget that lets a billion-vector corpus
-    * serve from RAM-resident codes. The ADC compass is lossy, so the
-    * shortlist can drop true neighbors the exact tier keeps — the
-    * measured recall gap to v17d is the price of the 64x, the same
-    * tradeoff v19 gates against v17. */
-  private[graft] def graphAnnServeAdcRefined(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2, refine: Int = 2, shortlist: Int = 0)
-      : org.apache.spark.sql.DataFrame = {
-    val r = if (shortlist > 0) shortlist else beam // IVFADC+R's R knob
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    refinedAdcServe(s, d, edges, f0, beam, hops, kCells, refine, r)
-  }
-
-  /** The refined-ADC SERVE over an explicit (edges, f0) pair: ADC
-    * walk to the final frontier, then the refined tail. ONE copy of
-    * the wiring ABOVE refinedAdcTail (codes source, walk params,
-    * centroid artifact) shared by v21/v21b (artifact-built graph via
-    * graphAnnServeAdcRefined) and st19c (maintained graph) — an edit
-    * to the frontier construction can no longer desynchronize the
-    * refined gates while their shared tail stays green. */
-  private[graft] def refinedAdcServe(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
-      kCells: Int, refine: Int, shortlist: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val codes = TrainedIndex.codes(s, d)
-    // one LUT build serves both the walk and the tail; the 20-row
-    // frame is checkpointed so neither replays the codebook-literal
-    // projection over the corpus scan
-    val qlut = queryLuts(s, d).localCheckpoint(true)
-    val frontier = adcWalkFrontier(s, d, edges, f0, beam, hops,
-      Some(codes), Some(qlut))
-    refinedAdcTail(s, d, frontier,
-      TrainedIndex.centroids(s, d, k = kCells), refine, shortlist,
-      codes, Some(qlut))
-  }
-
-  /** The refined-ADC serving tail — walk frontier ∪ the query's
-    * `refine` nearest cells' members, the union ranked on INTEGER ADC
-    * scores from the stored codes, the surviving `shortlist` re-ranked
-    * exactly. ONE copy shared by v21/v21b (artifact-built graph) and
-    * st19c (maintained graph) — the GameTeamAggSql convention: an edit
-    * to the union, the integer compass, or the cut cannot
-    * desynchronize the refined serving gates. */
-  private[graft] def refinedAdcTail(s: SparkSession, d: String,
-      frontier: org.apache.spark.sql.DataFrame,
-      cent: Array[Array[Double]], refine: Int, shortlist: Int,
-      codes: org.apache.spark.sql.DataFrame,
-      qlutIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val cands = frontier.select(col("qid"), col("cid"))
-      .union(cellCandidates(s, d, cent, refine))
-      .distinct()
-    val qlut = qlutIn.getOrElse(queryLuts(s, d))
-    val sl = graft.plans.TopKPerKey.topK(
-      scoredAdcOf(codes, qlut, cands), Seq("qid"),
-      Seq(col("score").desc, col("cid").asc), shortlist)
-    exactRerankTop3(s, d, sl.select(col("qid"), col("cid")))
-  }
 
   /** The corpus-coupled shortlist rule (BENCH_SCALE r14: a FIXED R
     * keeps a shrinking fraction of a union that grows as
@@ -3595,8 +2889,8 @@ object VectorOps {
         "build + hub union, medoid argmax, then beam CTEs " +
         "b0->c1->b1->c2->b2->c3->top-3 — the hash matches only if " +
         "every beam cut agrees cross-engine at every hop.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServe(s, d, beam = 16, hops = 3, degree = 16)),
+      (s, d) => walkRecall(s, d, Walk.hubGraphAndEntry(s, d, degree = 16),
+        Walk(Walk.Exact, beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
         $TruthSql,
@@ -3616,7 +2910,7 @@ object VectorOps {
         "occupancy flat, so the build's pair volume grows linearly " +
         "with the corpus instead of quadratically. Same kernels " +
         "(buildHubGraph -> persisted TrainedIndex.graph artifact -> " +
-        "exactWalkServe), same (degree=16, beam=16, hops=3) " +
+        "Walk), same (degree=16, beam=16, hops=3) " +
         "operating point; entry medoids and hub escapes now come " +
         "from the k=25 cell geometry. The oracle replays the " +
         "identical 2-Lloyd chain at k=25 (KmeansSql.upToCent2(25) — " +
@@ -3624,9 +2918,9 @@ object VectorOps {
         "iterations for k=25 at every SF) plus the hub-graph and " +
         "beam-walk CTEs, so every beam cut must agree cross-engine " +
         "on the scaled geometry too.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServe(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25)),
+      (s, d) => walkRecall(s, d,
+        Walk.hubGraphAndEntry(s, d, degree = 16, kCells = 25),
+        Walk(Walk.Exact, beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3655,9 +2949,9 @@ object VectorOps {
         "corpus-size-independent like every other walk frame. " +
         "Oracle: the k=25 chain with the probes CTE widened to " +
         "rn<=8 feeding the same f0 medoid-entry construction.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServe(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25, entries = 8)),
+      (s, d) => walkRecall(s, d,
+        Walk.hubGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 8),
+        Walk(Walk.Exact, beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3693,9 +2987,10 @@ object VectorOps {
         "widened to 16 for the medoid entries, the walk CTEs, then " +
         "refpr/refc (the same deterministic probe ranking at width " +
         "8) unioned with the final beam and re-ranked exactly.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServeRefined(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25, entries = 16, refine = 8)),
+      (s, d) => walkRecall(s, d,
+        Walk.hubGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
+        Walk(Walk.Exact, beam = 16, maxHops = 3,
+          Walk.Refined(kCells = 25, refine = 8, shortlist = 16))),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3729,8 +3024,8 @@ object VectorOps {
         "identical chain: KMeans cells, hub graph, PQ codebook + " +
         "codes + LUTs, integer-ranked beam CTEs, exact re-rank of " +
         "the final beam.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServeAdc(s, d, beam = 16, hops = 3, degree = 16)),
+      (s, d) => walkRecall(s, d, Walk.hubGraphAndEntry(s, d, degree = 16),
+        Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
         $TruthSql,
@@ -3781,8 +3076,7 @@ object VectorOps {
         val lm = graft.sources.IndexArtifacts.loadFrame(s, dir.toString, "medoids")
         val lc = graft.sources.IndexArtifacts.loadFrame(s, dir.toString, "codes")
         val f0 = graphEntries(s, d, TrainedIndex.centroids(s, d, k = 8), lm)
-        recallOf(bruteTruth(s, d),
-          adcWalkServe(s, d, le, f0, beam = 32, hops = 3, Some(lc)))
+        walkRecall(s, d, (le, f0), Walk(Walk.Adc(lc), beam = 32, maxHops = 3))
       },
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
@@ -3819,9 +3113,10 @@ object VectorOps {
         "walk CTEs, then refpr/refc at width 8 unioned with the " +
         "final beam, ranked by adcall, cut at 128, re-ranked " +
         "exactly.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServeAdcRefined(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25, entries = 16, refine = 8, shortlist = 128)),
+      (s, d) => walkRecall(s, d,
+        Walk.hubGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
+        Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 16, maxHops = 3,
+          Walk.Refined(kCells = 25, refine = 8, shortlist = 128))),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3858,10 +3153,11 @@ object VectorOps {
         "exact re-rank of the shortlist).",
       (s, d) => {
         val n = Tables.embeddings(s, d).count()
-        recallOf(bruteTruth(s, d),
-          graphAnnServeAdcRefined(s, d, beam = 16, hops = 3,
-            degree = 16, kCells = 25, entries = 16, refine = 8,
-            shortlist = scaledShortlist(n, refine = 8, kCells = 25)))
+        walkRecall(s, d,
+          Walk.hubGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
+          Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 16, maxHops = 3,
+            Walk.Refined(kCells = 25, refine = 8,
+              shortlist = scaledShortlist(n, refine = 8, kCells = 25))))
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
@@ -3912,9 +3208,9 @@ object VectorOps {
         "first unchanged hop (the dm10e recipe applied to the " +
         "walk) — so a corpus jump that needs more hops moves both " +
         "engines together instead of silently starving the serve.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        vamanaAnnServeConverged(s, d, beam = 64, degree = 16,
-          kCells = 25, entries = 16)),
+      (s, d) => walkRecall(s, d,
+        Walk.vamanaGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
+        Walk(Walk.Exact, beam = 64)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3951,9 +3247,9 @@ object VectorOps {
         "Oracle: the vamana build CTEs composed with the converged " +
         "ADC walk CTEs — each piece gated separately (v22, v19), " +
         "here hashed as one composition.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        vamanaAnnServeAdcConverged(s, d, beam = 64, degree = 16,
-          kCells = 25, entries = 16)),
+      (s, d) => walkRecall(s, d,
+        Walk.vamanaGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
+        Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 64)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3977,16 +3273,17 @@ object VectorOps {
         "local-minimum basin never reaches. Cost: the walk's O(1) " +
         "term plus the refine x n/kCells union — O(sqrt n) per query " +
         "under the gated k~sqrt(n) rule, identical to v17d's " +
-        "economics. One tail kernel (refinedExactTail) is shared " +
+        "economics. One tail (Walk's Refined) is shared " +
         "with v17d so the refined tails cannot desynchronize; the " +
         "walk runs at v22's data-derived convergence stop (VERDICT " +
         "r15 #4, cap WalkMaxHops=16), and the oracle composes the " +
         "vamana build CTEs with the converged-walk refined tail " +
         "(beamHopsConvergedRefinedSql) — same union/re-rank SQL as " +
         "v17d's tail over the dispatched stop-hop beam.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        vamanaAnnServeRefinedConverged(s, d, beam = 64, degree = 16,
-          kCells = 25, entries = 16, refine = 8)),
+      (s, d) => walkRecall(s, d,
+        Walk.vamanaGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
+        Walk(Walk.Exact, beam = 64,
+          tail = Walk.Refined(kCells = 25, refine = 8, shortlist = 64))),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,

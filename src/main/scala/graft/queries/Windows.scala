@@ -1248,9 +1248,8 @@ object Windows {
       (s, d) => {
         val (edges, f0) = maintainedServe(s,
           buildMaintainedStore(s, d, kCells = 25, "graft_st19b_"))
-        VectorOps.recallOf(VectorOps.bruteTruth(s, d),
-          VectorOps.adcWalkServe(s, d, edges, f0, beam = 16, hops = 3,
-            Some(TrainedIndex.codes(s, d))))
+        VectorOps.walkRecall(s, d, (edges, f0),
+          Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 16, maxHops = 3))
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
@@ -1275,7 +1274,7 @@ object Windows {
         "cells' members, the union ranks on INTEGER ADC scores from " +
         "the persisted codes, and the corpus-coupled shortlist " +
         "(v21b's 20%-of-union rule, computed from the data on both " +
-        "sides) is re-ranked exactly — via the SAME refinedAdcServe " +
+        "sides) is re-ranked exactly — via the SAME Walk serve " +
         "kernel as v21/v21b, so the three refined gates cannot " +
         "desynchronize. The maintenance stream itself is st19b's " +
         "hashed subject, so this gate reads the maintained state " +
@@ -1294,11 +1293,11 @@ object Windows {
         val (edges, f0) = maintainedServe(s,
           maintainedStore(s, d, kCells = 25))
         val n = Tables.embeddings(s, d).count()
-        VectorOps.recallOf(VectorOps.bruteTruth(s, d),
-          VectorOps.refinedAdcServe(s, d, edges, f0, beam = 16,
-            hops = 3, kCells = 25, refine = 8,
-            shortlist = VectorOps.scaledShortlist(n, refine = 8,
-              kCells = 25)))
+        VectorOps.walkRecall(s, d, (edges, f0),
+          Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 16, maxHops = 3,
+            Walk.Refined(kCells = 25, refine = 8,
+              shortlist = VectorOps.scaledShortlist(n, refine = 8,
+                kCells = 25))))
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
@@ -1346,8 +1345,7 @@ object Windows {
       (s, d) => {
         val (edges, f0) = maintainedServe(s,
           maintainedVamanaStore(s, d, kCells = 25))
-        VectorOps.recallOf(VectorOps.bruteTruth(s, d),
-          VectorOps.exactWalkServeConverged(s, d, edges, f0, beam = 64))
+        VectorOps.walkRecall(s, d, (edges, f0), Walk(Walk.Exact, beam = 64))
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},

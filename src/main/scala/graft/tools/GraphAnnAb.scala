@@ -3,10 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.queries.VectorOps
+import graft.queries.{TrainedIndex, VectorOps, Walk}
 
 /** Recall/touches sweep for v17's graph-navigation serving: runs the
-  * shared graphAnnServe kernel (one copy with the gate) over a
+  * shared [[graft.queries.Walk]] (one copy with the gates) over a
   * (beam, hops) grid and prints recall@3 against the brute-force
   * truth plus wall time — the evidence behind the gate's pinned
   * operating point, the GraphAnn analogue of IvfProbe's nprobe table.
@@ -16,13 +16,16 @@ import graft.queries.VectorOps
   *                          [kCells] [entries] [refine] [shortlist]
   *   beams/hops/degrees/entries/refine/shortlist are comma lists
   *   (e.g. 4,8 2,3 8,16 2,8); a literal 5th arg `adc` switches to
-  *   v19's PQ-compassed walk (`-` keeps the exact walk); the 6th arg
+  *   v19's PQ-compassed walk (`-` keeps the exact walk; `vam`,
+  *   `vamadc` and `vamconv` run over the alpha-pruned graph, `vamconv`
+  *   being the exact walk with its stop hop printed — every walk stops
+  *   at its fixed point, so `hops` is a cap); the 6th arg
   *   sets the graph-build cell count (default 8 — pass the
   *   sqrt(n)-scaled k to measure the v17b geometry); the 7th sweeps
   *   the entry-medoid count (default 2 — the v17c multi-entry lever);
   *   the 8th sweeps the refinement cell-union width (default 0 = walk
-  *   only; >0 switches to the v17d refined kernel; with `adc` it is
-  *   the code-compassed v21 form); the 9th sweeps v21's exact-rerank
+  *   only; >0 adds the v17d refined tail; with `adc` it is the
+  *   code-compassed v21 form); the 9th sweeps v21's exact-rerank
   *   shortlist R (default 0 = beam; adc+refine only — it is what
   *   produced the gated R curve).
   */
@@ -36,11 +39,11 @@ object GraphAnnAb {
     val degrees = (if (args.length > 3) args(3) else "8")
       .split(",").map(_.trim.toInt).toSeq
     // 5th arg: `-` = v17 exact walk; `adc` = v19's PQ compass;
-    // `vam` / `vamadc` = the same two walks over the alpha-pruned
+    // `vam` / `vamadc` / `vamconv` = the walks over the alpha-pruned
     // Vamana graph (VERDICT r14 #3's A/B axis)
     val mode = if (args.length > 4) args(4) else "-"
     val adc = mode == "adc" || mode == "vamadc"
-    val vamana = mode == "vam" || mode == "vamadc"
+    val vamana = mode.startsWith("vam")
     val kCells = if (args.length > 5) args(5).toInt else 8
     val entriesList = (if (args.length > 6) args(6) else "2")
       .split(",").map(_.trim.toInt).toSeq
@@ -56,47 +59,25 @@ object GraphAnnAb {
     spark.sparkContext.setLogLevel("ERROR")
     val truth = VectorOps.bruteTruth(spark, sfDir).localCheckpoint(true)
     for (g <- degrees; b <- beams; h <- hopsList; ent <- entriesList;
-         // the vamana+adc kernel is walk-only — collapse the dead
-         // refine axis the same way shortlist collapses below
-         ref <- (if (vamana && adc) Seq(0) else refineList);
-         // the shortlist knob only exists on the adc+refine kernel —
+         ref <- refineList;
+         // the shortlist knob only exists on the adc+refine walk —
          // sweeping it in the other modes would re-run one identical
          // config per value and print rows that LOOK like a measured
          // R curve; collapse the dead axis to a single labeled-0 row
          sl <- (if (adc && ref > 0) shortlistList else Seq(0))) {
       val t0 = System.nanoTime()
-      var stopHop = -1 // vamconv only: the converged walk's measured stop
-      val served = if (mode == "vamconv") {
-        // the v22 converged form: `hops` is the CAP, the stop prints
-        val (top3, stop) = VectorOps.vamanaWalkStop(spark, sfDir,
-          beam = b, degree = g, kCells = kCells, entries = ent,
-          maxHops = h)
-        stopHop = stop
-        top3
-      } else if (vamana && adc)
-        VectorOps.vamanaAnnServeAdc(spark, sfDir, beam = b,
-          hops = h, degree = g, kCells = kCells, entries = ent)
-      else if (vamana && ref > 0)
-        VectorOps.vamanaAnnServeRefined(spark, sfDir, beam = b,
-          hops = h, degree = g, kCells = kCells, entries = ent,
-          refine = ref)
-      else if (vamana)
-        VectorOps.vamanaAnnServe(spark, sfDir, beam = b,
-          hops = h, degree = g, kCells = kCells, entries = ent)
-      else if (ref > 0 && adc)
-        VectorOps.graphAnnServeAdcRefined(spark, sfDir, beam = b,
-          hops = h, degree = g, kCells = kCells, entries = ent,
-          refine = ref, shortlist = sl)
-      else if (ref > 0)
-        VectorOps.graphAnnServeRefined(spark, sfDir, beam = b,
-          hops = h, degree = g, kCells = kCells, entries = ent,
-          refine = ref)
-      else if (adc)
-        VectorOps.graphAnnServeAdc(spark, sfDir, beam = b,
-          hops = h, degree = g, kCells = kCells, entries = ent)
-      else VectorOps.graphAnnServe(spark, sfDir, beam = b,
-        hops = h, degree = g, kCells = kCells, entries = ent)
-      val rec = VectorOps.recallOf(truth, served)
+      val (edges, f0) =
+        if (vamana) Walk.vamanaGraphAndEntry(spark, sfDir, degree = g,
+          kCells = kCells, entries = ent)
+        else Walk.hubGraphAndEntry(spark, sfDir, degree = g,
+          kCells = kCells, entries = ent)
+      val walk = Walk(
+        if (adc) Walk.Adc(TrainedIndex.codes(spark, sfDir)) else Walk.Exact,
+        beam = b, maxHops = h,
+        tail = if (ref > 0) Walk.Refined(kCells, ref,
+          shortlist = if (sl > 0) sl else b) else Walk.NoTail)
+      val served = walk.serve(spark, sfDir, edges, f0)
+      val rec = VectorOps.recallOf(truth, served.top3)
         .agg(sum(col("n_hit")).as("hit"), sum(col("n_truth")).as("tot"))
         .collect()(0)
       val secs = (System.nanoTime() - t0) / 1e9
@@ -104,7 +85,7 @@ object GraphAnnAb {
         f"beam=$b%-3d hops=$h%-2d " +
         f"entries=$ent%-2d refine=$ref%-2d shortlist=$sl%-3d recall@3=" +
         f"${rec.getLong(0)}%3d/${rec.getLong(1)}%d  wall=$secs%7.2f s" +
-        (if (stopHop >= 0) f"  stop=$stopHop%d" else ""))
+        (if (mode == "vamconv") f"  stop=${served.stop}%d" else ""))
     }
     spark.stop()
   }

@@ -21,8 +21,8 @@ class DotProductSpec extends SparkSpec {
     val b = raw.limit(7).select(col("embedding").as("be"))
     val pairs = a.crossJoin(b)
     val diffs = pairs.select(
-        (VectorOps.dot("ae", "be") - VectorOps.dotComposed("ae", "be")).as("d"),
-        (VectorOps.dot("ae", "ae") - VectorOps.dotComposed("ae", "ae")).as("dn"))
+        (VectorOps.dot("ae", "be") - ComposedTwins.dotComposed("ae", "be")).as("d"),
+        (VectorOps.dot("ae", "ae") - ComposedTwins.dotComposed("ae", "ae")).as("dn"))
       .agg(max(abs(col("d"))).as("md"), max(abs(col("dn"))).as("mdn"))
       .head()
     assert(diffs.getDouble(0) == 0.0) // identical accumulation order -> identical bits
@@ -46,7 +46,7 @@ class DotProductSpec extends SparkSpec {
       (4L, Seq(Some(1.0f), None), Seq(Some(3.0f), Some(4.0f))))    // null element
       .toDF("id", "a", "b")
     val both = mixed.select(col("id"),
-        VectorOps.dot("a", "b").as("n"), VectorOps.dotComposed("a", "b").as("c"))
+        VectorOps.dot("a", "b").as("n"), ComposedTwins.dotComposed("a", "b").as("c"))
       .collect()
     both.foreach { r =>
       assert(r.isNullAt(1), s"native not null for id=${r.getLong(0)}")

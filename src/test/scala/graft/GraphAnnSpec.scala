@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.Walk
+
 /** v17 graph-navigation serving: determinism, output contract, and the
   * hub-edge escape property that motivates the graph shape (a purely
   * cell-local graph caps recall at the entry cells' contents —
@@ -10,12 +12,25 @@ class GraphAnnSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Top-3 of `walk` served off the stored hub graph. */
+  private def hubServe(walk: Walk, degree: Int, kCells: Int = 8,
+      entries: Int = 2): org.apache.spark.sql.DataFrame = {
+    val (edges, f0) = Walk.hubGraphAndEntry(spark, sf, degree, kCells, entries)
+    walk.serve(spark, sf, edges, f0).top3
+  }
+
+  /** Top-3 of `walk` served off the stored k=8 Vamana graph. */
+  private def vamanaServe(walk: Walk): org.apache.spark.sql.DataFrame = {
+    val (edges, f0) = Walk.vamanaGraphAndEntry(spark, sf, degree = 16)
+    walk.serve(spark, sf, edges, f0).top3
+  }
+
+  private val exact16 = Walk(Walk.Exact, beam = 16, maxHops = 3)
+
   test("beam walk is deterministic: two runs serve identical sets") {
-    val a = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+    val a = hubServe(exact16, degree = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+    val b = hubServe(exact16, degree = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
     assert(a.nonEmpty)
@@ -23,8 +38,7 @@ class GraphAnnSpec extends SparkSpec {
 
   test("output contract: <=3 neighbors per query, never self, all " +
       "queries served") {
-    val rows = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+    val rows = hubServe(exact16, degree = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.forall { case (q, c) => q != c })
     val perQ = rows.groupBy(_._1).map { case (_, v) => v.length }
@@ -34,8 +48,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("final per-query cut is the TopKPerKey heap, not a window") {
-    val p = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+    val p = hubServe(exact16, degree = 16)
       .queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     assert(p.contains("TopKPerKey"), p.take(2000))
@@ -44,11 +57,11 @@ class GraphAnnSpec extends SparkSpec {
 
   test("ADC walk (v19): deterministic, contract-clean, and the final " +
       "answer comes from the exact re-rank of the last beam") {
-    val a = graft.queries.VectorOps
-      .graphAnnServeAdc(spark, sf, beam = 16, hops = 3, degree = 16)
+    val a = hubServe(Walk(Walk.Adc(graft.queries.TrainedIndex.codes(spark, sf)),
+        beam = 16, maxHops = 3), degree = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = graft.queries.VectorOps
-      .graphAnnServeAdc(spark, sf, beam = 16, hops = 3, degree = 16)
+    val b = hubServe(Walk(Walk.Adc(graft.queries.TrainedIndex.codes(spark, sf)),
+        beam = 16, maxHops = 3), degree = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
     assert(a.nonEmpty)
@@ -85,17 +98,17 @@ class GraphAnnSpec extends SparkSpec {
     import s.implicits._
     val (edges, _) = graft.queries.TrainedIndex
       .graph(spark, sf, degree = 16, kCells = 8)
-    val frontier = edges.select(col("src").as("cid")).distinct()
-      .orderBy(col("cid")).limit(3)
-      .withColumn("qid", lit(0L)).select(col("qid"), col("cid"))
-      .localCheckpoint(true)
-    val hop = graft.queries.VectorOps.hopEdges(edges, frontier)
+    val frontier = Walk.materialize(spark,
+      edges.select(col("src").as("cid")).distinct()
+        .orderBy(col("cid")).limit(3)
+        .withColumn("qid", lit(0L)).select(col("qid"), col("cid")))
+    val hop = Walk.hopEdgesOf(edges, frontier)
     val p = hop.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") &&
       Seq("In(src", "in(src").exists(p.contains), p.take(1200))
     // pruning is a semantic no-op: same rows as the plain join
     val plain = edges
-      .join(frontier.select(col("qid"), col("cid").as("src")), Seq("src"))
+      .join(frontier.df.select(col("qid"), col("cid").as("src")), Seq("src"))
       .select(col("qid"), col("dst").as("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val pruned = hop.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -112,27 +125,21 @@ class GraphAnnSpec extends SparkSpec {
     // RANGE — the pushed data-source filter is still In(src, ...)
     // (GraphAnnSpec's 3-id case never exercised this regime; the
     // src-sorted edge artifact is what keeps the range tight)
-    val frontier = edges.select(col("src").as("cid")).distinct()
-      .orderBy(col("cid")).limit(16)
-      .withColumn("qid", lit(0L)).select(col("qid"), col("cid"))
-      .localCheckpoint(true)
-    assert(frontier.count() == 16)
-    val hop = graft.queries.VectorOps.hopEdges(edges, frontier)
+    val frontier = Walk.materialize(spark,
+      edges.select(col("src").as("cid")).distinct()
+        .orderBy(col("cid")).limit(16)
+        .withColumn("qid", lit(0L)).select(col("qid"), col("cid")))
+    assert(frontier.df.count() == 16)
+    val hop = Walk.hopEdgesOf(edges, frontier)
     val p = hop.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") &&
       Seq("In(src", "in(src").exists(p.contains), p.take(1200))
     val plain = edges
-      .join(frontier.select(col("qid"), col("cid").as("src")), Seq("src"))
+      .join(frontier.df.select(col("qid"), col("cid").as("src")), Seq("src"))
       .select(col("qid"), col("dst").as("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val pruned = hop.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pruned == plain && pruned.nonEmpty)
-    // regression: an effectively-unbounded cap must not overflow the
-    // limit(cap+1) bound (Int.MaxValue + 1 was a negative limit)
-    val unbounded = graft.queries.VectorOps
-      .hopEdges(edges, frontier, maxPushIds = Int.MaxValue)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(unbounded == plain)
   }
 
   test("above the pushdown cap the hop flips to the plain broadcast " +
@@ -140,21 +147,38 @@ class GraphAnnSpec extends SparkSpec {
       "a fleet-sized frontier must not inline 10^5 literals)") {
     val (edges, _) = graft.queries.TrainedIndex
       .graph(spark, sf, degree = 16, kCells = 8)
-    val frontier = edges.select(col("src").as("cid")).distinct()
-      .orderBy(col("cid")).limit(16)
-      .withColumn("qid", lit(0L)).select(col("qid"), col("cid"))
-      .localCheckpoint(true)
-    val hop = graft.queries.VectorOps
-      .hopEdges(edges, frontier, maxPushIds = 8) // 16 ids > cap of 8
+    val frontier = Walk.materialize(spark,
+      edges.select(col("src").as("cid")).distinct()
+        .orderBy(col("cid")).limit(16)
+        .withColumn("qid", lit(0L)).select(col("qid"), col("cid")))
+    val hop = Walk
+      .hopEdgesOf(edges, frontier, maxPushIds = 8) // 16 ids > cap of 8
     val p = hop.queryExecution.executedPlan.toString
     assert(!Seq("In(src", "in(src").exists(p.contains),
       "above-cap arm must not inline frontier ids: " + p.take(1200))
     val plain = edges
-      .join(frontier.select(col("qid"), col("cid").as("src")), Seq("src"))
+      .join(frontier.df.select(col("qid"), col("cid").as("src")), Seq("src"))
       .select(col("qid"), col("dst").as("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val flipped = hop.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(flipped == plain && flipped.nonEmpty)
+  }
+
+  test("a hop expanding past frontier rows x MaxOutDegree edges throws " +
+      "HopOverflow instead of collecting it") {
+    val s = spark
+    import s.implicits._
+    val frontier = Walk.materialize(spark, Seq((0L, 1L)).toDF("qid", "cid"))
+    def edgesOf(outDegree: Int) =
+      (2L until 2L + outDegree).map(d => (1L, d)).toDF("src", "dst")
+    // at the bound the expansion is collected whole
+    val atBound = Walk.hopCands(spark, edgesOf(Walk.MaxOutDegree), frontier)
+    assert(atBound.count() == Walk.MaxOutDegree + 1)
+    val e = intercept[Walk.HopOverflow] {
+      Walk.hopCands(spark, edgesOf(Walk.MaxOutDegree + 1), frontier)
+    }
+    assert(e.getMessage.contains(s"past ${Walk.MaxOutDegree} edges"),
+      e.getMessage)
   }
 
   test("refined kernels (v17d exact / v21 ADC): deterministic, " +
@@ -172,12 +196,13 @@ class GraphAnnSpec extends SparkSpec {
       assert(p.contains("TopKPerKey"), p.take(2000))
       assert(!p.contains("Window"), p.take(2000))
     }
-    check(graft.queries.VectorOps.graphAnnServeRefined(spark, sf,
-      beam = 8, hops = 2, degree = 8, kCells = 8, entries = 4,
-      refine = 2))
-    check(graft.queries.VectorOps.graphAnnServeAdcRefined(spark, sf,
-      beam = 8, hops = 2, degree = 8, kCells = 8, entries = 4,
-      refine = 2, shortlist = 16))
+    check(hubServe(Walk(Walk.Exact, beam = 8, maxHops = 2,
+      Walk.Refined(kCells = 8, refine = 2, shortlist = 8)),
+      degree = 8, entries = 4))
+    check(hubServe(Walk(Walk.Adc(graft.queries.TrainedIndex.codes(spark, sf)),
+      beam = 8, maxHops = 2,
+      Walk.Refined(kCells = 8, refine = 2, shortlist = 16)),
+      degree = 8, entries = 4))
   }
 
   test("the refined union can only help: v17d's served set per query " +
@@ -196,13 +221,14 @@ class GraphAnnSpec extends SparkSpec {
       rows.groupBy(_._1).map { case (q, v) =>
         q -> v.map { case (_, c) => cos(vecs(q), vecs(c)) }.sum
       }
-    val walk = scoreOf(graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 8, hops = 2, degree = 8,
-        kCells = 8, entries = 4)
+    val walk = scoreOf(
+      hubServe(Walk(Walk.Exact, beam = 8, maxHops = 2), degree = 8,
+        entries = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))))
-    val refined = scoreOf(graft.queries.VectorOps
-      .graphAnnServeRefined(spark, sf, beam = 8, hops = 2, degree = 8,
-        kCells = 8, entries = 4, refine = 2)
+    val refined = scoreOf(
+      hubServe(Walk(Walk.Exact, beam = 8, maxHops = 2,
+        Walk.Refined(kCells = 8, refine = 2, shortlist = 8)), degree = 8,
+        entries = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))))
     walk.keys.foreach { q =>
       assert(refined(q) >= walk(q) - 1e-12,
@@ -228,8 +254,7 @@ class GraphAnnSpec extends SparkSpec {
       .select(col("qid"), (-col("pc.nc")).as("cell"))
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val served = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+    val served = hubServe(exact16, degree = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val escapes = served.count { case (q, c) =>
       !probes(q).contains(asg(c))
@@ -278,13 +303,9 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("v22 serve is deterministic and meets the output contract") {
-    val a = graft.queries.VectorOps
-      .vamanaAnnServe(spark, sf, beam = 16, hops = 2, degree = 16,
-        kCells = 8, entries = 2)
+    val a = vamanaServe(Walk(Walk.Exact, beam = 16, maxHops = 2))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = graft.queries.VectorOps
-      .vamanaAnnServe(spark, sf, beam = 16, hops = 2, degree = 16,
-        kCells = 8, entries = 2)
+    val b = vamanaServe(Walk(Walk.Exact, beam = 16, maxHops = 2))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b && a.nonEmpty)
     assert(a.forall { case (q, c) => q != c })
@@ -311,12 +332,11 @@ class GraphAnnSpec extends SparkSpec {
       "streamed lists + hub must equal the batch build edge for edge")
     // serve parity: the ADC walk off the maintained store equals the
     // walk off the batch artifacts (the demoted gate's hashed subject)
-    val maintained = graft.queries.VectorOps.adcWalkServe(
-        spark, sf, edges, f0, beam = 16, hops = 3,
-        Some(graft.queries.TrainedIndex.codes(spark, sf)))
+    val adc = Walk(Walk.Adc(graft.queries.TrainedIndex.codes(spark, sf)),
+      beam = 16, maxHops = 3)
+    val maintained = adc.serve(spark, sf, edges, f0).top3
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = graft.queries.VectorOps.graphAnnServeAdc(
-        spark, sf, beam = 16, hops = 3, degree = 16, kCells = 8)
+    val batch = hubServe(adc, degree = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(maintained == batch && maintained.nonEmpty)
   }
@@ -344,28 +364,41 @@ class GraphAnnSpec extends SparkSpec {
       "stop lands strictly inside the cap — headroom, not the " +
       "budget — and the converged serve equals the fixed-hop serve " +
       "run at the measured stop") {
-    val (served, stop) = graft.queries.VectorOps.vamanaWalkStop(
-      spark, sf, beam = 16, degree = 16, kCells = 8, entries = 2)
-    assert(stop >= 1 && stop < graft.queries.VectorOps.WalkMaxHops,
+    val maxHops = graft.queries.VectorOps.WalkMaxHops
+    val (edges, f0) = Walk.vamanaGraphAndEntry(spark, sf, degree = 16)
+    val walk = Walk(Walk.Exact, beam = 16, maxHops = maxHops)
+    val served = walk.serve(spark, sf, edges, f0)
+    val stop = served.stop
+    assert(stop >= 1 && stop < maxHops,
       s"stop=$stop hit the cap — the walk is budget-starved again " +
         "(raise WalkMaxHops and re-measure, BENCH_SCALE r15)")
-    val conv = served.collect()
+    val conv = served.top3.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the pinned-hop kernel at exactly the measured stop must serve
+    // the pinned-hop walk at exactly the measured stop must serve
     // the identical rows: convergence found the SAME fixed point
-    val pinned = graft.queries.VectorOps.vamanaAnnServe(
-        spark, sf, beam = 16, hops = stop, degree = 16, kCells = 8,
-        entries = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pinned = Walk(Walk.Exact, beam = 16, maxHops = stop)
+      .serve(spark, sf, edges, f0).top3.collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(conv == pinned && conv.nonEmpty)
-    // one hop PAST the stop changes nothing — the stop is a fixed
-    // point, not an arbitrary cut
-    val past = graft.queries.VectorOps.vamanaAnnServe(
-        spark, sf, beam = 16, hops = stop + 1, degree = 16, kCells = 8,
-        entries = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(past == conv,
+    // one explicit walk step applied to the stopped frontier changes
+    // nothing — the stop is a fixed point, not an arbitrary cut
+    val stopped = served.frontier.collect().toSet
+    val past = walk.step(spark, sf, edges, served.frontier).collect().toSet
+    assert(past == stopped,
       "frontier moved after the detected fixed point")
+    // the converged walk stepped explicitly from the hop-0 beam until a
+    // step leaves it unchanged stops where the serve with budget
+    // WalkMaxHops reported
+    var frontier = Walk(Walk.Exact, beam = 16, maxHops = 0)
+      .serve(spark, sf, edges, f0).frontier
+    var converged = -1
+    for (h <- 1 to maxHops if converged < 0) {
+      val next = walk.step(spark, sf, edges, frontier)
+      if (next.collect().toSet == frontier.collect().toSet) converged = h
+      frontier = next
+    }
+    assert(converged == stop,
+      s"stepped walk converged at hop $converged, the serve reported $stop")
   }
 
   test("st19d: the maintained-lake Vamana OPTIMIZE pass equals the " +

@@ -21,7 +21,7 @@ class NearestCellsSpec extends SparkSpec {
       Seq(1, 2, k).foreach { n =>
         val both = e.select(
           VectorOps.nearestCells(cent, col("embedding"), n).as("nat"),
-          VectorOps.nearestCellsComposed(cent, col("embedding"), n).as("cmp"))
+          ComposedTwins.nearestCellsComposed(cent, col("embedding"), n).as("cmp"))
         // struct-array equality covers both the dot doubles (bitwise,
         // via Spark's own ordering-equality) and the nc ranking
         val mismatches = both.filter(col("nat") =!= col("cmp")).count()

@@ -20,7 +20,7 @@ class PqSubspaceSpec extends SparkSpec {
     val both = e.select(
       (0 until VectorOps.PqM).flatMap { i =>
         Seq(VectorOps.pqCodeCol(cb, i).as(s"n$i"),
-          VectorOps.pqCodeColComposed(cb, i).as(s"c$i"))
+          ComposedTwins.pqCodeColComposed(cb, i).as(s"c$i"))
       }: _*)
     val mismatches = both.filter(
       (0 until VectorOps.PqM)
@@ -34,7 +34,7 @@ class PqSubspaceSpec extends SparkSpec {
     val both = e.select(
       (0 until VectorOps.PqM).flatMap { i =>
         Seq(VectorOps.pqLutCol(cb, i).as(s"n$i"),
-          VectorOps.pqLutColComposed(cb, i).as(s"c$i"))
+          ComposedTwins.pqLutColComposed(cb, i).as(s"c$i"))
       }: _*)
     val mismatches = both.filter(
       (0 until VectorOps.PqM)
