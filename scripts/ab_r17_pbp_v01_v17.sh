@@ -15,6 +15,8 @@ OUT=${4:-scripts/ab_r17_pbp_v01_v17.log}
 QUERIES="j01_broadcast_chain pbp01_game_team_stats pbp02_classifier_flags pbp03_full_chain pbp04_game_team_stats v01_knn_bruteforce v17_graph_ann_beam"
 ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 JARS=$(ls /opt/spark/jars/*.jar | tr '\n' ':')
+# QueryAb sizes its session from SPARK_GRAFT_CPUS; the logged runs used 32 cores
+export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
 : > "$OUT"
 for r in $(seq 1 "$ROUNDS"); do
   for side in r15 head; do

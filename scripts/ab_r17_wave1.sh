@@ -17,6 +17,8 @@ OUT=${4:-scripts/ab_r17_wave1.log}
 QUERIES="j01_broadcast_chain st16_streaming_decontamination st11_incremental_join_view g08_gold_runner d08_setsim_prefix_join d03_simhash gr01_triangle_count v21_refined_adc_serving st18_streaming_knn_graph v14_knn_graph v22_vamana_walk_serving"
 ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 JARS=$(ls /opt/spark/jars/*.jar | tr '\n' ':')
+# QueryAb sizes its session from SPARK_GRAFT_CPUS; the logged runs used 32 cores
+export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
 : > "$OUT"
 for r in $(seq 1 "$ROUNDS"); do
   for side in base head; do

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
   *
   * - Warmup pass at sf0.001 (when present) so JIT + codegen + catalog
   *   init don't land on the first timed query.
-  * - PASS-MAJOR run order: the whole suite runs SPARK_GRAFT_BENCH_RUNS
-  *   times (default 5) and each query's MEDIAN across passes is
+  * - PASS-MAJOR run order: the whole suite runs `runs` (5) times and
+  *   each query's MEDIAN across passes is
   *   reported. Query-major order (back-to-back runs) let a transient
   *   host-contention window pollute all samples of one query — r3's
   *   in-suite j08=11 s vs 1.9 s isolated; spreading samples across
@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *   polluted passes (r7's g06 showed median-of-3 does not).
   * - INTERLEAVED contention reference (the tools/QueryAb protocol wired
   *   into the driver path, VERDICT r7 #3): a fixed simple agg is
-  *   re-timed every REF_EVERY queries inside every pass. Each query
+  *   re-timed every `refEvery` queries inside every pass. Each query
   *   sample gets a ratio against the nearest-in-time reference sample;
   *   the per-query MEDIAN RATIO (detail file `ratios`) moves with host
   *   contention the same way the query does, so it is the
@@ -25,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   *   worst-sample-trimmed spread (see flagSpread) so one polluted pass
   *   can be outvoted by clean evidence.
   * - MINIMUM SAMPLE COUNT (VERDICT r16 #2): after the main passes,
-  *   every query tops up to SPARK_GRAFT_MIN_SAMPLES (8) raw samples —
+  *   every query tops up to `minSamples` (8) raw samples —
   *   the 2 s floor alone left queries ≥ floor/runs seconds with
   *   exactly `runs` samples, the very band every cross-round ratio
   *   dispute has lived in. Contention flags are judged on per-VISIT
@@ -45,6 +45,19 @@ import org.apache.spark.sql.SparkSession
   *   bench_out.json) for post-hoc analysis.
   */
 object Bench {
+
+  // The sampling protocol. Constants, not options: every committed
+  // bench_out_r17*/r18* file records these values, and the detail file
+  // still carries each one so an archived run names its protocol.
+  private val runs = 5            // main passes over the suite
+  private val refEvery = 8        // queries between reference re-timings
+  private val floorSec = 2.0      // per-query seconds of samples per suite
+  private val repCap = 16         // repetitions cap per visit
+  private val minSamples = 8      // raw samples every query tops up to
+  private val contBound = 1.0     // wall spread / median contention flag
+  private val rerunsMax = 2       // extra visits for a contended query
+  private val rerunsHeavy = 4     // ... whose median exceeds 2 s
+  private val ratioBound = 1.0    // ratio spread / median contention flag
 
   /** Query names whose cross-pass spread exceeds `bound × median` —
     * sampled through at least one host-contention window, so their
@@ -107,16 +120,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val refEvery = sys.env.getOrElse("SPARK_GRAFT_REF_EVERY", "8").toInt
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     // optional name-prefix filter for local iteration (driver sets none)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
@@ -185,10 +190,7 @@ object Bench {
     // reference sample. Sample counts land in the detail file
     // (`nsamples`) so the archive shows how much evidence backs each
     // median.
-    val floorSec =
-      sys.env.getOrElse("SPARK_GRAFT_TIME_FLOOR", "2.0").toDouble
     val perVisit = floorSec / runs
-    val repCap = sys.env.getOrElse("SPARK_GRAFT_REP_CAP", "16").toInt
     // One VISIT: repeat the query until ~perVisit seconds accumulate
     // (floor), recording each successful repetition as a raw sample
     // and the visit's MEDIAN as one flag-population entry. A throw
@@ -236,14 +238,12 @@ object Bench {
     // ran exactly `runs` times (5–6 samples), and that band is where
     // every cross-round ratio dispute has lived (g08 in r15, the
     // pbp01–04/v01/v17 cluster in r16). Every query now tops up to
-    // SPARK_GRAFT_MIN_SAMPLES (default 8) raw samples via extra
+    // `minSamples` (8) raw samples via extra
     // visits, spread pass-major across top-up rounds like the main
     // passes so they sample different host windows. Each top-up visit
     // is one more flag-population entry (one exclusion earned). A
     // permanently-failing query exits via the round cap — errors,
     // not samples, record its story.
-    val minSamples =
-      sys.env.getOrElse("SPARK_GRAFT_MIN_SAMPLES", "8").toInt
     var topupRound = 0
     def deficient = queries.filter { case (n, _) =>
       samples(n).size < minSamples }
@@ -256,19 +256,13 @@ object Bench {
       topupRound += 1
     }
     // ---- adaptive re-runs (VERDICT r9 #5): a query flagged contended
-    // after the main passes gets up to SPARK_GRAFT_CONTENTION_RERUNS
-    // (default 2) extra visits, each preceded by a fresh interleaved
+    // after the main passes gets up to `rerunsMax` (2; `rerunsHeavy`
+    // past 2 s) extra visits, each preceded by a fresh interleaved
     // reference run, BEFORE its median and flag are fixed. The flag is
     // judged on flagSpread over per-visit medians (worst visit
     // excluded per earned re-run) — one polluted pass stops flagging a
     // query once clean evidence outweighs it; genuinely noisy queries
     // stay flagged.
-    val contBound =
-      sys.env.getOrElse("SPARK_GRAFT_CONTENTION_BOUND", "1.0").toDouble
-    val rerunsMax =
-      sys.env.getOrElse("SPARK_GRAFT_CONTENTION_RERUNS", "2").toInt
-    val rerunsHeavy =
-      sys.env.getOrElse("SPARK_GRAFT_CONTENTION_RERUNS_HEAVY", "4").toInt
     (1 to math.max(rerunsMax, rerunsHeavy)).foreach { round =>
       val flagged = contendedFlags(
         visitMedians.toSeq.map { case (n, vs) =>
@@ -350,8 +344,6 @@ object Bench {
     // machinery over per-visit ratios: a query whose cleanest `runs`
     // visit-ratios still spread past ratioBound × median-ratio was
     // differentially contended and its cross-round ratio is suspect.
-    val ratioBound =
-      sys.env.getOrElse("SPARK_GRAFT_RATIO_BOUND", "1.0").toDouble
     val ratioFlagged = contendedFlags(
       visitRatios.toSeq.map { case (n, vs) =>
         (n, med(vs), flagSpread(vs, runs)) }, ratioBound)

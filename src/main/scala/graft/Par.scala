@@ -6,7 +6,8 @@ package graft
   * fresh never-shutdown pool per call site — g08 alone used to mint
   * two pools per bench invocation. 8-way (r18): the gold runner has 7
   * independent transforms and JobProfile read its average concurrency
-  * pegged at ~3.3 with the old 4-wide pool — the pool, not the
+  * (job seconds over wall; tools/QueryAb now prints JobProfile's jobs,
+  * job-seconds and gap columns) pegged at ~3.3 with the old 4-wide pool — the pool, not the
   * scheduler, was the binding constraint (guide §2.6: overlap
   * independent jobs so the next job's tasks back-fill the current
   * one's stragglers). These tasks are themselves Spark jobs, so width

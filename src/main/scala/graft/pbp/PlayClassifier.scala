@@ -34,7 +34,6 @@ final case class PlayFlags(
     isLastFt: Boolean = false,
     isPeriodEnd: Boolean = false) {
   def isFga: Boolean = isMadeFg || isMissedFg
-  def isFta: Boolean = isMadeFt || isMissedFt
   def endsPossession: Boolean =
     isTurnover || isDefRebound || isMadeFg || (isMadeFt && isLastFt) || isPeriodEnd
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * WHY: `zip_with`/`aggregate` are CodegenFallback — every one of the
   * 16 per-codeword dots in the composed pqCodeCol/pqLutCol costs a
   * lambda dispatch plus an intermediate array allocation PER ROW, and
-  * the profile (tools/BatchProfile at the 10x fixture) measured the
+  * the profile (tools/BatchProfile at the 10x fixture, re-runnable
+  * from commit c8a8826) measured the
   * encode+LUT stages at ~17 s for 60k rows — ~100x the raw flops —
   * while the 1e8-pair ADC join itself was pair-proportional and fine.
   * These expressions do the same math as ONE flat primitive loop in

@@ -113,12 +113,7 @@ object ValidateRunner {
   /** CLI: `graft.quality.ValidateRunner <lakeRoot> [--strict]`. */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ValidateRunner <lakeRoot> [--strict]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-validate").getOrCreate()
+    val spark = graft.Session.local()
     try validate(spark, args(0), strictSchema = args.contains("--strict"))
     finally spark.stop()
   }

@@ -78,8 +78,9 @@ object TextOps {
     * eval/train by the t05 md5 bucket, 8-grams exploded, each gram
     * hashed to its 48-bit md5-prefix long BEFORE any exchange. One
     * copy shared by the t28b gate, the bucketed-layout plan spec
-    * (BucketingSpec), and the A/B probe (tools.BucketAb) so the three
-    * claims about the same layout can never drift apart. */
+    * (BucketingSpec), and the A/B probe (tools.BucketAb, removed;
+    * re-run it from commit c8a8826) so the three claims about the same
+    * layout can never drift apart. */
   private[graft] def gramHashes(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     docs.select(col("doc_id"),
@@ -282,7 +283,8 @@ object TextOps {
     // is the corpus's heaviest per-row expression (K md5s per shingle,
     // ~12M digests at sf0.1) and the fixture's single-split scan ran
     // ALL of it in one task — measured 1.42 s -> 0.21 s with the rows
-    // spread to the session's parallelism first (tools/SpreadAb). At
+    // spread to the session's parallelism first (tools/SpreadAb,
+    // re-runnable from commit c8a8826). At
     // production scale the guard inside Tables.spread is false and
     // the plan is unchanged.
     Tables.spread(Tables.documents(s, d).select(col("doc_id"), col("text")))

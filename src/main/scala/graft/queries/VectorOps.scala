@@ -354,8 +354,9 @@ object VectorOps {
   /** v07's SemDeDup assignment kernel, k-parameterized: deterministic
     * md5-seed pick, broadcast seed assignment with a max_by argmax
     * that carries the embedding through the agg, repartitioned on the
-    * cluster key. Shared by the v07 gate (k=8) and tools.SemDedupKAb's
-    * k-scaling A/B so the kernel exists in exactly one copy.
+    * cluster key. Shared by the v07 gate (k=8) and, until its
+    * removal, tools.SemDedupKAb's k-scaling A/B (re-run it from commit
+    * c8a8826), so the kernel exists in exactly one copy.
     *
     * vec_id.isNotNull is explicit (it is never null in the data) so
     * constraint inference from the pair join's a_id < b_id can't add
@@ -937,8 +938,9 @@ object VectorOps {
   // (measured full-scan ADC recall@3 at the gate SF: 8/60 -> 12/60;
   // converged per-subspace Lloyd only reaches ~18/60 on this data,
   // which is why serving re-ranks an ADC SHORTLIST with exact
-  // vectors — v13 — instead of trusting ADC order; tools.IvfPqDebug
-  // prints the iteration and (nprobe, R) sweeps).
+  // vectors — v13 — instead of trusting ADC order; tools.IvfPqDebug,
+  // re-runnable from commit c8a8826, prints the iteration and
+  // (nprobe, R) sweeps).
   private[graft] val PqM = 8
   private[graft] val PqSubDim = 8
   private[graft] val PqK = 16
@@ -1030,7 +1032,8 @@ object VectorOps {
     * (dot - ||c||^2/2), argmax with ties to the smaller code — the
     * same math the composed struct-sort form (ComposedTwins, test-side)
     * declares, in one flat primitive loop. The composed form's
-    * zip_with/aggregate are CodegenFallback, and BatchProfile measured
+    * zip_with/aggregate are CodegenFallback, and BatchProfile (re-run
+    * it from commit c8a8826) measured
     * the 16-codeword tree at ~100x the raw flops per row; the native
     * swap is bit-identical (PqSubspaceSpec pins it), so every PQ hash
     * gate is unchanged. */
@@ -1151,8 +1154,9 @@ object VectorOps {
   /** v14's cell-local kNN-graph kernel, k-parameterized: per-point
     * top-3 cosine neighbors within the point's own KMeans cell. The
     * gate pins kCells=8 (the oracle-replayable KmeansSql chain);
-    * tools.KnnGraphAb measures the k~sqrt(n) scaling rule that keeps
-    * sum(cell_i^2) pair volume flat per point as the corpus grows. */
+    * tools.KnnGraphAb (re-run it from commit c8a8826) measured the
+    * k~sqrt(n) scaling rule that keeps sum(cell_i^2) pair volume flat
+    * per point as the corpus grows. */
   private[graft] def knnGraph(s: SparkSession, d: String, kCells: Int,
       degree: Int = 3): org.apache.spark.sql.DataFrame = {
     val e = Tables.embeddings(s, d)
@@ -1820,7 +1824,7 @@ object VectorOps {
         "searches the cell that is geometrically nearest the query. " +
         "Same exact integer-intersection recall gate as v02b. " +
         "MEASURED recall@3 at the gate SF (tools.IvfProbe, " +
-        "reproducible), v09 KMeans cells vs v02b/c label cells at " +
+        "re-runnable from commit c8a8826), v09 KMeans cells vs v02b/c label cells at " +
         "equal nprobe:\n" +
         "    nprobe      1      2      3      4\n" +
         "    label       4/60  13/60  22/60  32/60\n" +
@@ -2018,7 +2022,8 @@ object VectorOps {
         "bounds the quadratic: pair volume is the sum of per-cluster " +
         "m², never corpus n², and k GROWS with n at scale — the " +
         "paper's k ~ sqrt(n) balances the n*k assignment term against " +
-        "the n²/k pair term (tools.SemDedupKAb measures it: at 10x " +
+        "the n²/k pair term (tools.SemDedupKAb, re-runnable from " +
+        "commit c8a8826, measured it: at 10x " +
         "data, fixed k=8 pays ~100x the pair volume, sqrt-scaled k=25 " +
         "cuts that 3.1x and halves the pair-stage wall time — " +
         "BENCH_SCALE). Seeds are broadcast; the pair join shuffles " +
@@ -2079,7 +2084,8 @@ object VectorOps {
         "drops. Per-cell keep/drop stats out. Same quadratic-bounding " +
         "scale story as v07 (pair volume = sum of per-cell m^2; k " +
         "grows ~sqrt(n), the assignment-vs-pair-cost balance point - " +
-        "measured in tools.SemDedupKAb / BENCH_SCALE), now with cells " +
+        "measured in tools.SemDedupKAb, re-runnable from commit " +
+        "c8a8826, and BENCH_SCALE), now with cells " +
         "that are geometrically real: " +
         "near-dups actually co-locate, so the within-cell compare " +
         "FINDS them instead of missing cross-seed pairs. Oracle " +
@@ -2568,8 +2574,8 @@ object VectorOps {
         "machinery (recallOf/bruteTruth - no float thresholds in the " +
         "comparison). MEASURED at the gate SF: full-scan ADC-only " +
         "recall@3 = 12/60 (and converged per-subspace Lloyd only " +
-        "reaches ~18/60 - tools.IvfPqDebug prints the iteration " +
-        "sweep): at 32 bits the quantization noise swamps the small " +
+        "reaches ~18/60 - tools.IvfPqDebug, re-runnable from commit " +
+        "c8a8826, prints the iteration sweep): at 32 bits the quantization noise swamps the small " +
         "cosine gaps between this corpus's tightly-packed " +
         "candidates. That number is the POINT of the gate - it is " +
         "why production never serves from ADC order directly but " +
@@ -2605,7 +2611,8 @@ object VectorOps {
         "cells - i.e. the codes buy a 5x cut in full-vector touches " +
         "for 3 of 60 hits, which is precisely the role ADC plays in " +
         "production (the shortlist generator, never the final " +
-        "ranker; tools.IvfPqDebug prints the (nprobe, R) sweep). " +
+        "ranker; tools.IvfPqDebug at commit c8a8826 prints the " +
+        "(nprobe, R) sweep). " +
         "Shortlist rank key is the exact integer micro-unit ADC " +
         "score (the t31 fixed-point convention applied to the LUT " +
         "entries - no cross-engine float tie can flip it); the " +
@@ -2639,7 +2646,7 @@ object VectorOps {
         "39/60, vs 45/60 for v09-style exact scoring of the same 3 " +
         "cells - 87% of the exact in-cell recall while touching 50 " +
         "full vectors per query instead of ~190 (tools.IvfPqDebug " +
-        "prints the whole (nprobe, R) sweep). Shares every stage " +
+        "at commit c8a8826 prints the whole (nprobe, R) sweep). Shares every stage " +
         "with v13 (ivfAdcRerank + the KMeans/PQ/ADC/re-rank CTE " +
         "helpers); only the operating point differs.",
       (s, d) => recallOf(bruteTruth(s, d),
@@ -2678,7 +2685,7 @@ object VectorOps {
         "corpus^2/k for " +
         "balanced cells; cell-size skew is the AQE skew-join case, " +
         "and k grows ~sqrt(n) with the corpus (the SemDedupKAb " +
-        "prescription) to hold per-cell occupancy flat. Isolated " +
+        "prescription; re-run it from commit c8a8826) to hold per-cell occupancy flat. Isolated " +
         "singleton cells emit no rows for their vector - the " +
         "documented recall limit of cell-local graphs (SemDeDup " +
         "accepts it; a higher-recall build unions nprobe>1 cell " +
@@ -2707,7 +2714,8 @@ object VectorOps {
     Q(
       "v14b_knn_graph_scaled",
       "v14 at the sqrt(n)-scaled operating point (kCells=25 - the " +
-        "SemDedupKAb/KnnGraphAb prescription the v14 doc string " +
+        "SemDedupKAb/KnnGraphAb prescription (both re-runnable from " +
+        "commit c8a8826) the v14 doc string " +
         "cites, now GATED rather than A/B evidence only, mirroring " +
         "how v13b gates v13's operating point): per-cell pair volume " +
         "is sum(cell_i^2) ~ n^2/k, so holding per-cell occupancy " +
@@ -2826,7 +2834,8 @@ object VectorOps {
     Q(
       "v16b_batch_ann_serving_scaled",
       "v16 at the sqrt(n)-scaled cell count (kCells=25), GATING the " +
-        "operating point BatchServeAb measures — the v13b/v14b " +
+        "operating point BatchServeAb (re-runnable from commit " +
+        "c8a8826) measured — the v13b/v14b " +
         "convention applied to batch serving: with every corpus " +
         "vector querying the index, the cell-co-partitioned ADC " +
         "join's pair volume is nprobe*n^2/k, so a FIXED cell count " +

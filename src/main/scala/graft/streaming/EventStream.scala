@@ -139,10 +139,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 2).as("total"))
 
-  def hoppingWindowAggStreaming(events: DataFrame, width: String = "6 hours",
-      slide: String = "3 hours", watermark: String = "1 hour"): DataFrame =
-    hoppingWindowAgg(events.withWatermark("ts", watermark), width, slide)
-
   /** Left-semi event-time interval join — left rows that have AT LEAST
     * one same-key right row inside [l.ts, l.ts + window], emitted once
     * each with no right-side columns (the existence filter: "views

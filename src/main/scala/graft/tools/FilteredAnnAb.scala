@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.queries.{TrainedIndex, VectorOps}
 import graft.sources.Tables
@@ -26,11 +26,7 @@ object FilteredAnnAb {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nprobe = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val e = Tables.embeddings(spark, sfDir)

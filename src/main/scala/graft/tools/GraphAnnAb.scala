@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.{TrainedIndex, VectorOps, Walk}
@@ -9,7 +8,8 @@ import graft.queries.{TrainedIndex, VectorOps, Walk}
   * shared [[graft.queries.Walk]] (one copy with the gates) over a
   * (beam, hops) grid and prints recall@3 against the brute-force
   * truth plus wall time — the evidence behind the gate's pinned
-  * operating point, the GraphAnn analogue of IvfProbe's nprobe table.
+  * operating point, the GraphAnn analogue of IvfProbe's nprobe table
+  * (IvfProbe was removed; re-run it from commit c8a8826).
   *
   * Usage:
   *   graft.tools.GraphAnnAb <sfDir> [beams] [hops] [degrees] [adc|-]
@@ -51,11 +51,7 @@ object GraphAnnAb {
       .split(",").map(_.trim.toInt).toSeq
     val shortlistList = (if (args.length > 8) args(8) else "0")
       .split(",").map(_.trim.toInt).toSeq // 0 = beam; adc+refine only
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val truth = VectorOps.bruteTruth(spark, sfDir).localCheckpoint(true)
     for (g <- degrees; b <- beams; h <- hopsList; ent <- entriesList;

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ratings.IterativeRatings
 
 /** Per-sweep max-|Δ| of the iterative ratings solver on the dm10
@@ -24,11 +22,7 @@ object RatingsConvergenceProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val maxN = if (args.length > 1) args(1).toInt else 25
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val games = graft.queries.CarveOutGate.dm10Games(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generated per-round recall artifact (VERDICT r14 #6): the serving
   * tiers' recall@3 numbers used to live scattered through BENCH_SCALE
   * prose, hand-typed from ad-hoc tool runs — a recall regression was
@@ -45,11 +43,7 @@ object RecallReport {
       else DefaultQueries
     require(dirs.nonEmpty, "need at least one fixture dir")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val registry = graft.SparkEntry.queries

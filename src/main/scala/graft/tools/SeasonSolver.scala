@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Full-season warm-start solver measurement (VERDICT r11 #4): drives
@@ -19,11 +18,7 @@ object SeasonSolver {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val nDates = args.lift(1).map(_.toInt).getOrElse(150)
     val nTeams = args.lift(2).map(_.toInt).getOrElse(360)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val g0 = graft.queries.GoldGate.games(spark, sfDir, nTeams)
