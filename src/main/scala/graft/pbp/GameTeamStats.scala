@@ -58,14 +58,16 @@ object GameTeamStats {
       .withColumn("possessions_formula",
         col("fga") - col("oreb") + col("tov") + lit(0.44) * col("fta"))
 
-    // opponent self-join (J8): the other team's row in the same game
-    val o = t.select(col("gameId"),
+    // opponent self-join (J8): the other team's row in the same game,
+    // keyed on a renamed game id so the condition cannot resolve to the
+    // same attribute on both sides
+    val o = t.select(col("gameId").as("__opp_gid"),
       col("teamId").as("__opp_tid"), col("pts").as("opp_pts"),
       col("possessions_formula").as("opp_poss_formula"),
       col("dreb").as("opp_dreb"), col("fga").as("opp_fga"))
     val joined = t.join(o,
-      t("gameId") === o("gameId") && t("teamId") =!= o("__opp_tid"))
-      .drop(o("gameId"))
+      col("gameId") === col("__opp_gid") && col("teamId") =!= col("__opp_tid"))
+      .drop("__opp_gid")
 
     joined
       .withColumn("opponentId", col("__opp_tid"))

@@ -589,8 +589,7 @@ object VectorOps {
     * capped at `poolCap`, the one-shot alpha-occlusion test as an
     * EXISTS over closer pool rows, and the (occluded ASC, dsq ASC,
     * cand ASC) fill to `degree`. Emits `edges` + `f0` with the same
-    * shape as hubGraphSql so the beamHops CTE chains compose
-    * unchanged. Expects a3 / d3g / probes in scope (KmeansSql chain +
+    * shape as hubGraphSql so walkSql composes with either. Expects a3 / d3g / probes in scope (KmeansSql chain +
     * geoCellsSql). */
   private[queries] def vamanaGraphSql(degree: Int,
       poolCap: Int = VamanaPoolCap): String = s"""
@@ -644,293 +643,75 @@ object VectorOps {
                FROM probes p JOIN md m USING (cell)
                WHERE m.mid <> p.qid)"""
 
-  /** Oracle CTEs replaying the ADC [[Walk]]: like beamHopsSql
-    * but every beam cut ranks on the INTEGER ADC score from `adcall`,
-    * and the final `ann` is the exact-cosine re-rank of the last
-    * beam (bf already holds every cosine). */
-  /** The ADC walk's CTEs up to the final beam cut b<hops> — shared by
-    * the plain (v19/v20/st19) and refined (v21) oracle tails. */
-  private def beamHopsAdcCtes(beam: Int, hops: Int): String = {
-    val sb = new StringBuilder
-    sb.append(s"""
-        s0 AS (SELECT f.qid, f.cid, a.score
-               FROM f0 f JOIN adcall a ON a.qid = f.qid AND a.cid = f.cid),
-        b0 AS (SELECT qid, cid FROM (
+  /** Oracle CTEs replaying [[Walk]] with the engine's own parameters:
+    * `adc` is the scorer (the exact cosine from `bf`, or the INTEGER
+    * ADC score from `adcall`), `beam` and `maxHops` the budget, and
+    * `refine = Some((cells, shortlist))` the Refined tail. Entry
+    * scoring s0/b0 ranks f0's medoid entries; then per hop h the
+    * candidate union c<h> (previous beam + its out-edges, exact
+    * DISTINCT, self excluded), its score s<h> and the beam cut b<h>.
+    *
+    * All `maxHops` hops are unrolled, with no stop test: the first
+    * beam that is a subset of the previous one is a fixed point (the
+    * [[Walk]] Scaladoc's argument, per query), so b<maxHops> is the
+    * beam at the engine's data-derived stop. Every s/b is MATERIALIZED:
+    * c<h> reads b<h-1> twice and DuckDB inlines a plain CTE per
+    * reference, which grows exponentially down a 16-hop chain.
+    *
+    * Tail: the final beam, or its union `cu` with the query's `cells`
+    * nearest cells' members (the d3g dot frame re-ranked at that width,
+    * the same (dot DESC, cluster ASC) probe order as geoCellsSql) scored
+    * by the walk's scorer and cut to `shortlist` (a SQL expression, so
+    * v21b/st19c pass the corpus-coupled scaledShortlistSql), re-ranked
+    * exactly through bf to the top-3 `ann` the recall tail joins.
+    * Expects f0/edges (hubGraphSql or vamanaGraphSql), bf, d3g/a3 and,
+    * for `adc`, adcall upstream. */
+  private[graft] def walkSql(adc: Boolean, beam: Int,
+      maxHops: Int = WalkMaxHops,
+      refine: Option[(Int, String)] = None): String = {
+    val (score, scorer) =
+      if (adc) ("a.score", "adcall a ON a.qid = x.qid AND a.cid = x.cid")
+      else ("bf.cos AS score", "bf ON bf.qid = x.qid AND bf.cid = x.cid")
+    def cut(s: String, b: String, from: String, n: String) = s"""
+        $s AS MATERIALIZED (SELECT x.qid, x.cid, $score
+               FROM $from x JOIN $scorer),
+        $b AS MATERIALIZED (SELECT qid, cid FROM (
                  SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY score DESC, cid ASC) rn FROM s0)
-               WHERE rn <= $beam)""")
-    for (h <- 1 to hops) {
-      val p = h - 1
-      sb.append(s""",
+                   ORDER BY score DESC, cid ASC) rn FROM $s)
+               WHERE rn <= $n)"""
+    val hops = (1 to maxHops).map { h =>
+      s"""
         c$h AS (SELECT DISTINCT qid, cid FROM (
-                 SELECT qid, cid FROM b$p
+                 SELECT qid, cid FROM b${h - 1}
                  UNION ALL
                  SELECT b.qid, e.dst AS cid
-                 FROM b$p b JOIN edges e ON e.src = b.cid)
-               WHERE cid <> qid),
-        s$h AS (SELECT x.qid, x.cid, a.score
-               FROM c$h x JOIN adcall a ON a.qid = x.qid AND a.cid = x.cid),
-        b$h AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY score DESC, cid ASC) rn FROM s$h)
-               WHERE rn <= $beam)""")
+                 FROM b${h - 1} b JOIN edges e ON e.src = b.cid)
+               WHERE cid <> qid),""" + cut(s"s$h", s"b$h", s"c$h", beam.toString)
     }
-    sb.toString
-  }
-
-  private[queries] def beamHopsAdcSql(beam: Int, hops: Int): String =
-    beamHopsAdcCtes(beam, hops) + s""",
-        rr AS (SELECT b.qid, b.cid, bf.cos
-               FROM b$hops b JOIN bf ON bf.qid = b.qid AND bf.cid = b.cid),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM rr)
-               WHERE rn <= 3)"""
-
-  /** v21's refined ADC tail: the refine union ranked on the INTEGER
-    * ADC scores (adcall — the code compass, no vector reads), the
-    * surviving `shortlist` re-ranked exactly, top 3. */
-  private[queries] def beamHopsAdcRefinedSql(beam: Int, hops: Int,
-      refine: Int, shortlist: Int): String =
-    beamHopsAdcRefinedSql(beam, hops, refine, shortlist.toString)
-
-  /** Same tail with the shortlist cut as a SQL expression — v21b/st19c
-    * pass the corpus-coupled `scaledShortlistSql` scalar subquery here
-    * so the oracle derives R from the data exactly like the engine. */
-  private[queries] def beamHopsAdcRefinedSql(beam: Int, hops: Int,
-      refine: Int, shortlistSql: String): String =
-    beamHopsAdcCtes(beam, hops) + "," + refineUnionCtes(refine, hops) + s""",
-        su AS (SELECT x.qid, x.cid, a.score
-               FROM cu x JOIN adcall a ON a.qid = x.qid AND a.cid = x.cid),
-        sl AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY score DESC, cid ASC) rn FROM su)
-               WHERE rn <= ($shortlistSql)),
-        rr AS (SELECT b.qid, b.cid, bf.cos
-               FROM sl b JOIN bf ON bf.qid = b.qid AND bf.cid = b.cid),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM rr)
-               WHERE rn <= 3)"""
-
-  /** The ADC walk's converged twin (the v22b form of
-    * beamHopsConvergedCtes): every beam cut ranks on the INTEGER ADC
-    * score from `adcall`; the stop derives from per-hop new-row
-    * counts exactly like the exact walk's. Ends with sk/bk dispatch
-    * CTEs. */
-  private def beamHopsAdcConvergedCtes(beam: Int, maxHops: Int): String = {
-    val sb = new StringBuilder
-    sb.append(s"""
-        s0 AS MATERIALIZED (SELECT f.qid, f.cid, a.score
-               FROM f0 f JOIN adcall a ON a.qid = f.qid AND a.cid = f.cid),
-        b0 AS MATERIALIZED (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY score DESC, cid ASC) rn FROM s0)
-               WHERE rn <= $beam)""")
-    for (h <- 1 to maxHops) {
-      val p = h - 1
-      sb.append(s""",
-        c$h AS (SELECT DISTINCT qid, cid FROM (
-                 SELECT qid, cid FROM b$p
-                 UNION ALL
-                 SELECT b.qid, e.dst AS cid
-                 FROM b$p b JOIN edges e ON e.src = b.cid)
-               WHERE cid <> qid),
-        s$h AS MATERIALIZED (SELECT x.qid, x.cid, a.score
-               FROM c$h x JOIN adcall a ON a.qid = x.qid AND a.cid = x.cid),
-        b$h AS MATERIALIZED (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY score DESC, cid ASC) rn FROM s$h)
-               WHERE rn <= $beam),
-        dl$h AS (SELECT count(*) AS d FROM b$h t
-                 LEFT JOIN b$p pb ON pb.qid = t.qid AND pb.cid = t.cid
-                 WHERE pb.qid IS NULL)""")
-    }
-    val deltas = (1 to maxHops)
-      .map(h => s"SELECT $h AS h, (SELECT d FROM dl$h) AS d")
-      .mkString("\n          UNION ALL ")
-    val bk = (1 to maxHops)
-      .map(h => s"SELECT qid, cid FROM b$h WHERE (SELECT k FROM wstop) = $h")
-      .mkString("\n               UNION ALL ")
-    sb.append(s""",
-        wdeltas AS MATERIALIZED (
-          $deltas),
-        wstop AS MATERIALIZED (
-          SELECT coalesce(min(h), $maxHops) AS k FROM wdeltas WHERE d = 0),
-        bk AS ($bk)""")
-    sb.toString
-  }
-
-  /** Converged ADC plain tail: exact re-rank of the dispatched final
-    * beam, top 3 (beamHopsAdcSql's rr/ann over bk). */
-  private[queries] def beamHopsAdcConvergedSql(beam: Int,
-      maxHops: Int): String =
-    beamHopsAdcConvergedCtes(beam, maxHops) + s""",
-        rr AS (SELECT b.qid, b.cid, bf.cos
-               FROM bk b JOIN bf ON bf.qid = b.qid AND bf.cid = b.cid),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM rr)
-               WHERE rn <= 3)"""
-
-  /** Oracle CTEs replaying the exact [[Walk]] hop by hop:
-    * entry scoring (s0/b0 — f0's medoid entries ranked), then per hop
-    * h: candidate union c<h> (previous beam + its out-edges, exact
-    * DISTINCT, self excluded), exact re-score s<h> (bf already holds
-    * every qid x cid cosine — the truth side computes it anyway), and
-    * beam cut b<h>. Ends with the top-3 `ann` the recall tail joins. */
-  /** The exact walk's CTEs up to the final beam cut b<hops> — shared
-    * by the plain (v17) and refined (v17d) oracle tails. */
-  private def beamHopsCtes(beam: Int, hops: Int): String = {
-    val sb = new StringBuilder
-    sb.append(s"""
-        s0 AS (SELECT f.qid, f.cid, bf.cos
-               FROM f0 f JOIN bf ON bf.qid = f.qid AND bf.cid = f.cid),
-        b0 AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM s0)
-               WHERE rn <= $beam)""")
-    for (h <- 1 to hops) {
-      val p = h - 1
-      sb.append(s""",
-        c$h AS (SELECT DISTINCT qid, cid FROM (
-                 SELECT qid, cid FROM b$p
-                 UNION ALL
-                 SELECT b.qid, e.dst AS cid
-                 FROM b$p b JOIN edges e ON e.src = b.cid)
-               WHERE cid <> qid),
-        s$h AS (SELECT x.qid, x.cid, bf.cos
-               FROM c$h x JOIN bf ON bf.qid = x.qid AND bf.cid = x.cid),
-        b$h AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM s$h)
-               WHERE rn <= $beam)""")
-    }
-    sb.toString
-  }
-
-  private def beamHopsSql(beam: Int, hops: Int): String =
-    beamHopsCtes(beam, hops) + s""",
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM s$hops)
-               WHERE rn <= 3)"""
-
-  /** The refine-union CTEs (refpr/refc/cu): the query's `refine`
-    * nearest cells' members (the d3g dot frame re-ranked at width
-    * `refine` — the same deterministic (dot DESC, cluster ASC) probe
-    * order as geoCellsSql, self excluded) UNIONED with the walk's
-    * final beam b<hops>. ONE copy shared by the v17d (exact) and v21
-    * (ADC) tails — the GameTeamAggSql convention: an edit to the
-    * probe predicate or tie-break cannot desynchronize the two
-    * refined oracles. */
-  private def refineUnionCtes(refine: Int, hops: Int): String =
-    refineUnionCtes(refine, s"b$hops")
-
-  /** Same union with the walk's final beam as an explicit CTE NAME —
-    * the converged tails pass the dispatched `bk`. */
-  private def refineUnionCtes(refine: Int, beamCte: String): String = s"""
+    val (refined, last) = refine match {
+      case None => ("", s"b$maxHops")
+      case Some((cells, shortlist)) => (s""",
         refpr AS (SELECT vec_id AS qid, cluster AS cell FROM (
                    SELECT vec_id, cluster,
                           row_number() OVER (PARTITION BY vec_id
                             ORDER BY dot DESC, cluster ASC) AS rn
-                   FROM d3g WHERE vec_id < 20) WHERE rn <= $refine),
+                   FROM d3g WHERE vec_id < 20) WHERE rn <= $cells),
         refc AS (SELECT DISTINCT p.qid, g.g_cid AS cid
                  FROM refpr p JOIN a3 g
                    ON g.cell = p.cell AND g.g_cid <> p.qid),
-        cu AS (SELECT qid, cid FROM $beamCte
-               UNION SELECT qid, cid FROM refc)"""
-
-  /** v17d's refined tail: the refine union, one exact re-rank, top 3. */
-  private[queries] def beamHopsRefinedSql(beam: Int, hops: Int,
-      refine: Int): String =
-    beamHopsCtes(beam, hops) + "," + refineUnionCtes(refine, hops) + s""",
-        su AS (SELECT x.qid, x.cid, bf.cos
-               FROM cu x JOIN bf ON bf.qid = x.qid AND bf.cid = x.cid),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM su)
-               WHERE rn <= 3)"""
-
-  /** The exact walk with the hop count as a DATA-DERIVED convergence
-    * test (VERDICT r15 #4 — the dm10e recipe applied to the walk):
-    * `maxHops` hop CTEs unrolled MATERIALIZED (each s/b is referenced
-    * by the next hop, its delta, and the stop dispatch — plain CTEs
-    * inline per reference in DuckDB and go exponential down the
-    * chain), each hop's NEW-ROW count dl<h> computed as data via an
-    * anti-join (correlated EXISTS does not decorrelate through CTEs),
-    * the stop k = min{h : dl<h> = 0} (cap when the walk never settles
-    * — mirroring the engine loop, which runs exactly maxHops then),
-    * and sk/bk dispatching the stop hop's scored candidates / beam.
-    * Each hop's candidates contain the previous beam, so dl<h> = 0 is
-    * exactly frontier-set equality — the engine's left-anti probe. */
-  private def beamHopsConvergedCtes(beam: Int, maxHops: Int): String = {
-    val sb = new StringBuilder
-    sb.append(s"""
-        s0 AS MATERIALIZED (SELECT f.qid, f.cid, bf.cos
-               FROM f0 f JOIN bf ON bf.qid = f.qid AND bf.cid = f.cid),
-        b0 AS MATERIALIZED (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM s0)
-               WHERE rn <= $beam)""")
-    for (h <- 1 to maxHops) {
-      val p = h - 1
-      sb.append(s""",
-        c$h AS (SELECT DISTINCT qid, cid FROM (
-                 SELECT qid, cid FROM b$p
-                 UNION ALL
-                 SELECT b.qid, e.dst AS cid
-                 FROM b$p b JOIN edges e ON e.src = b.cid)
-               WHERE cid <> qid),
-        s$h AS MATERIALIZED (SELECT x.qid, x.cid, bf.cos
-               FROM c$h x JOIN bf ON bf.qid = x.qid AND bf.cid = x.cid),
-        b$h AS MATERIALIZED (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM s$h)
-               WHERE rn <= $beam),
-        dl$h AS (SELECT count(*) AS d FROM b$h t
-                 LEFT JOIN b$p pb ON pb.qid = t.qid AND pb.cid = t.cid
-                 WHERE pb.qid IS NULL)""")
+        cu AS (SELECT qid, cid FROM b$maxHops
+               UNION SELECT qid, cid FROM refc),""" +
+        cut("su", "sl", "cu", s"($shortlist)"), "sl")
     }
-    val deltas = (1 to maxHops)
-      .map(h => s"SELECT $h AS h, (SELECT d FROM dl$h) AS d")
-      .mkString("\n          UNION ALL ")
-    val sk = (1 to maxHops)
-      .map(h => s"SELECT qid, cid, cos FROM s$h WHERE (SELECT k FROM wstop) = $h")
-      .mkString("\n               UNION ALL ")
-    val bk = (1 to maxHops)
-      .map(h => s"SELECT qid, cid FROM b$h WHERE (SELECT k FROM wstop) = $h")
-      .mkString("\n               UNION ALL ")
-    sb.append(s""",
-        wdeltas AS MATERIALIZED (
-          $deltas),
-        wstop AS MATERIALIZED (
-          SELECT coalesce(min(h), $maxHops) AS k FROM wdeltas WHERE d = 0),
-        sk AS ($sk),
-        bk AS ($bk)""")
-    sb.toString
+    (cut("s0", "b0", "f0", beam.toString) +: hops).mkString(",") + refined +
+      s""",
+        rr AS (SELECT b.qid, b.cid, bf.cos
+               FROM $last b JOIN bf ON bf.qid = b.qid AND bf.cid = b.cid),
+        ann AS (SELECT qid, cid FROM (
+                 SELECT *, row_number() OVER (PARTITION BY qid
+                   ORDER BY cos DESC, cid ASC) rn FROM rr)
+               WHERE rn <= 3)"""
   }
-
-  /** Converged-walk plain tail: top-3 of the stop hop's scored set. */
-  private[queries] def beamHopsConvergedSql(beam: Int, maxHops: Int): String =
-    beamHopsConvergedCtes(beam, maxHops) + s""",
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM sk)
-               WHERE rn <= 3)"""
-
-  /** Converged-walk refined tail: the refine union over the
-    * dispatched final beam, one exact re-rank, top 3. */
-  private[queries] def beamHopsConvergedRefinedSql(beam: Int,
-      maxHops: Int, refine: Int): String =
-    beamHopsConvergedCtes(beam, maxHops) + "," +
-      refineUnionCtes(refine, "bk") + s""",
-        su AS (SELECT x.qid, x.cid, bf.cos
-               FROM cu x JOIN bf ON bf.qid = x.qid AND bf.cid = x.cid),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM su)
-               WHERE rn <= 3)"""
 
   // m=8 subspaces of 8 dims, k=16 codewords each: 1024 codebook
   // doubles, 8x4 = 32 bits per vector. r11 retune from (4, 16, 16) —
@@ -2905,7 +2686,7 @@ object VectorOps {
         $TruthSql,
         ${geoCellsSql(nprobe = 2)},
         ${hubGraphSql(degree = 16)},
-        ${beamHopsSql(beam = 16, hops = 3)},
+        ${walkSql(adc = false, beam = 16, maxHops = 3)},
         $RecallTailSql""")),
 
     Q(
@@ -2935,7 +2716,7 @@ object VectorOps {
         $TruthSql,
         ${geoCellsSql(nprobe = 2)},
         ${hubGraphSql(degree = 16)},
-        ${beamHopsSql(beam = 16, hops = 3)},
+        ${walkSql(adc = false, beam = 16, maxHops = 3)},
         $RecallTailSql""")),
 
     Q(
@@ -2966,7 +2747,7 @@ object VectorOps {
         $TruthSql,
         ${geoCellsSql(nprobe = 8)},
         ${hubGraphSql(degree = 16)},
-        ${beamHopsSql(beam = 16, hops = 3)},
+        ${walkSql(adc = false, beam = 16, maxHops = 3)},
         $RecallTailSql""")),
 
     Q(
@@ -3005,7 +2786,8 @@ object VectorOps {
         $TruthSql,
         ${geoCellsSql(nprobe = 16)},
         ${hubGraphSql(degree = 16)},
-        ${beamHopsRefinedSql(beam = 16, hops = 3, refine = 8)},
+        ${walkSql(adc = false, beam = 16, maxHops = 3,
+          refine = Some((8, "16")))},
         $RecallTailSql""")),
 
     Q(
@@ -3042,7 +2824,7 @@ object VectorOps {
         ${hubGraphSql(degree = 16)},
         ${pqChainSql("p")},
         $adcAllSql,
-        ${beamHopsAdcSql(beam = 16, hops = 3)},
+        ${walkSql(adc = true, beam = 16, maxHops = 3)},
         $RecallTailSql""")),
 
     Q(
@@ -3094,7 +2876,7 @@ object VectorOps {
         ${hubGraphSql(degree = 16)},
         ${pqChainSql("p")},
         $adcAllSql,
-        ${beamHopsAdcSql(beam = 32, hops = 3)},
+        ${walkSql(adc = true, beam = 32, maxHops = 3)},
         $RecallTailSql""")),
 
     Q(
@@ -3133,8 +2915,8 @@ object VectorOps {
         ${hubGraphSql(degree = 16)},
         ${pqChainSql("p")},
         $adcAllSql,
-        ${beamHopsAdcRefinedSql(beam = 16, hops = 3, refine = 8,
-          shortlist = 128)},
+        ${walkSql(adc = true, beam = 16, maxHops = 3,
+          refine = Some((8, "128")))},
         $RecallTailSql""")),
 
     Q(
@@ -3175,8 +2957,8 @@ object VectorOps {
         ${hubGraphSql(degree = 16)},
         ${pqChainSql("p")},
         $adcAllSql,
-        ${beamHopsAdcRefinedSql(beam = 16, hops = 3, refine = 8,
-          shortlistSql = scaledShortlistSql(refine = 8, kCells = 25))},
+        ${walkSql(adc = true, beam = 16, maxHops = 3,
+          refine = Some((8, scaledShortlistSql(refine = 8, kCells = 25))))},
         $RecallTailSql""")),
 
     Q(
@@ -3211,12 +2993,12 @@ object VectorOps {
         "WalkMaxHops=16 — a runaway bound; measured stops are hop 6 " +
         "at sf0.1 and hop 9 at 10x, and a candidate cap of 8 was " +
         "measured BINDING at 10x, the exact silent starvation this " +
-        "replaces), and the oracle derives " +
-        "the SAME stop from the data — maxHops materialized hop " +
-        "CTEs, per-hop new-row counts as data, dispatch of the " +
-        "first unchanged hop (the dm10e recipe applied to the " +
-        "walk) — so a corpus jump that needs more hops moves both " +
-        "engines together instead of silently starving the serve.",
+        "replaces). The oracle unrolls all WalkMaxHops hops as " +
+        "MATERIALIZED CTEs: the first unchanged beam is a fixed " +
+        "point (the beam cut is a total order), so the capped " +
+        "unroll ends on the SAME beam as the engine's stop, and a " +
+        "corpus jump that needs more hops moves both engines " +
+        "together instead of silently starving the serve.",
       (s, d) => walkRecall(s, d,
         Walk.vamanaGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
         Walk(Walk.Exact, beam = 64)),
@@ -3225,7 +3007,7 @@ object VectorOps {
         $TruthSql,
         ${geoCellsSql(nprobe = 16)},
         ${vamanaGraphSql(degree = 16)},
-        ${beamHopsConvergedSql(beam = 64, maxHops = WalkMaxHops)},
+        ${walkSql(adc = false, beam = 64)},
         $RecallTailSql""")),
 
     Q(
@@ -3252,10 +3034,10 @@ object VectorOps {
         "vectors), and exact reads are bounded at queries x beam. " +
         "The hop count is the v22 convergence rule on the integer " +
         "compass (r16): walk to the score fixed point, cap " +
-        "WalkMaxHops, oracle dispatching the data-derived stop. " +
-        "Oracle: the vamana build CTEs composed with the converged " +
-        "ADC walk CTEs — each piece gated separately (v22, v19), " +
-        "here hashed as one composition.",
+        "WalkMaxHops; the oracle unrolls to the cap, which the " +
+        "fixed point makes the same beam. Oracle: the vamana build " +
+        "CTEs composed with the ADC walk CTEs — each piece gated " +
+        "separately (v22, v19), here hashed as one composition.",
       (s, d) => walkRecall(s, d,
         Walk.vamanaGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
         Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 64)),
@@ -3266,7 +3048,7 @@ object VectorOps {
         ${vamanaGraphSql(degree = 16)},
         ${pqChainSql("p")},
         $adcAllSql,
-        ${beamHopsAdcConvergedSql(beam = 64, maxHops = WalkMaxHops)},
+        ${walkSql(adc = true, beam = 64)},
         $RecallTailSql""")),
 
     Q(
@@ -3286,9 +3068,9 @@ object VectorOps {
         "with v17d so the refined tails cannot desynchronize; the " +
         "walk runs at v22's data-derived convergence stop (VERDICT " +
         "r15 #4, cap WalkMaxHops=16), and the oracle composes the " +
-        "vamana build CTEs with the converged-walk refined tail " +
-        "(beamHopsConvergedRefinedSql) — same union/re-rank SQL as " +
-        "v17d's tail over the dispatched stop-hop beam.",
+        "vamana build CTEs with walkSql's refined tail — the same " +
+        "union/re-rank SQL as v17d's, over the beam unrolled to the " +
+        "cap, which the fixed point makes the stop-hop beam.",
       (s, d) => walkRecall(s, d,
         Walk.vamanaGraphAndEntry(s, d, degree = 16, kCells = 25, entries = 16),
         Walk(Walk.Exact, beam = 64,
@@ -3298,8 +3080,8 @@ object VectorOps {
         $TruthSql,
         ${geoCellsSql(nprobe = 16)},
         ${vamanaGraphSql(degree = 16)},
-        ${beamHopsConvergedRefinedSql(beam = 64,
-          maxHops = WalkMaxHops, refine = 8)},
+        ${walkSql(adc = false, beam = 64,
+          refine = Some((8, "64")))},
         $RecallTailSql""")),
 
     Q(

@@ -25,8 +25,9 @@ import graft.sources.Tables
   *    serve is therefore the same loop with `maxHops = hops`, bit-
   *    identical to running all `hops` hops, and the converged serve is
   *    `maxHops =` [[VectorOps.WalkMaxHops]] (a runaway cap, not the
-  *    search budget). The oracle either unrolls the fixed hop count or
-  *    dispatches the data-derived stop (beamHopsConvergedSql).
+  *    search budget). The oracle (VectorOps.walkSql) always unrolls
+  *    all `maxHops` hops: past the stop every beam equals the fixed
+  *    point, so the unroll ends on the engine's final beam.
   *  - TAIL: [[Walk.NoTail]] cuts the final beam to top-3;
   *    [[Walk.Refined]] (v17d/v21) unions the final beam with the
   *    query's `refine` nearest cells' members, scores the union with

@@ -1258,7 +1258,7 @@ object Windows {
         ${VectorOps.hubGraphSql(degree = 16)},
         ${VectorOps.pqChainSql("p")},
         ${VectorOps.adcAllSql},
-        ${VectorOps.beamHopsAdcSql(beam = 16, hops = 3)},
+        ${VectorOps.walkSql(adc = true, beam = 16, maxHops = 3)},
         ${VectorOps.RecallTailSql}""")),
 
     Q(
@@ -1306,10 +1306,9 @@ object Windows {
         ${VectorOps.hubGraphSql(degree = 16)},
         ${VectorOps.pqChainSql("p")},
         ${VectorOps.adcAllSql},
-        ${VectorOps.beamHopsAdcRefinedSql(beam = 16, hops = 3,
-          refine = 8,
-          shortlistSql = VectorOps.scaledShortlistSql(refine = 8,
-            kCells = 25))},
+        ${VectorOps.walkSql(adc = true, beam = 16, maxHops = 3,
+          refine = Some((8, VectorOps.scaledShortlistSql(refine = 8,
+            kCells = 25))))},
         ${VectorOps.RecallTailSql}""")),
 
     Q(
@@ -1329,9 +1328,10 @@ object Windows {
         "degree 16) over the maintained LAKE instead of the raw " +
         "table, persists (edges, f0) through the versioned store, " +
         "and serves v22's converged exact walk (beam 64, " +
-        "data-derived stop, cap WalkMaxHops). The one-shot occlusion " +
-        "is ORDER-INDEPENDENT — a pure function of the pool, unlike " +
-        "the paper's sequential sieve — so the optimize pass off the " +
+        "data-derived stop, cap WalkMaxHops; the oracle unrolls to " +
+        "the cap, which the fixed point makes the same beam). The " +
+        "one-shot occlusion is ORDER-INDEPENDENT — a pure function " +
+        "of the pool, unlike the paper's sequential sieve — so the optimize pass off the " +
         "lake equals the batch build bit for bit, which is exactly " +
         "what hashing against v22's batch oracle proves (streamed " +
         "lake = corpus AND prune determinism). Economics at 100 TB: " +
@@ -1352,8 +1352,7 @@ object Windows {
         ${VectorOps.TruthSql},
         ${VectorOps.geoCellsSql(nprobe = 16)},
         ${VectorOps.vamanaGraphSql(degree = 16)},
-        ${VectorOps.beamHopsConvergedSql(beam = 64,
-          maxHops = VectorOps.WalkMaxHops)},
+        ${VectorOps.walkSql(adc = false, beam = 64)},
         ${VectorOps.RecallTailSql}"""))
   )
 

@@ -208,48 +208,4 @@ object IterativeRatings {
     * iterative_ratings.py:48-55); halfLife <= 0 disables decay. */
   def decayWeight(daysAgo: Double, halfLife: Double): Double =
     if (halfLife <= 0) 1.0 else math.pow(0.5, daysAgo / halfLife)
-
-  /** Additive fixed-iteration variant (reference
-    * scripts/build_pbp_team_daily_rollup_adj.py:80-146): off[t] =
-    * mean(off_eff − opp_def − hca_sign·hca) over games, re-centered to
-    * the league mean each pass; fixed iteration count, no convergence
-    * test. */
-  def solveAdditive(
-      gamesIn: Seq[GameObs],
-      iterations: Int = 25,
-      hca: Double = 4.0266): Map[Long, (Double, Double)] = {
-    val games = gamesIn.sortBy(g => (g.team, g.opp, g.pts, g.oppPts))
-    val teams = games.map(_.team).distinct.sorted
-    if (teams.isEmpty) return Map.empty
-    val byTeam = games.groupBy(_.team)
-    val league = leagueAverage(games)
-    var off = teams.map(_ -> league).toMap
-    var deff = teams.map(_ -> league).toMap
-    for (_ <- 0 until iterations) {
-      val nOff = teams.map { t =>
-        val gs = byTeam(t)
-        var s = 0.0
-        gs.foreach { g =>
-          val (go, _) = gameEff(g, hca)
-          s += go - (deff(g.opp) - league)
-        }
-        t -> s / gs.size
-      }.toMap
-      val nDef = teams.map { t =>
-        val gs = byTeam(t)
-        var s = 0.0
-        gs.foreach { g =>
-          val (_, gd) = gameEff(g, hca)
-          s += gd - (off(g.opp) - league)
-        }
-        t -> s / gs.size
-      }.toMap
-      // re-center so the league mean is invariant across passes
-      val mo = nOff.toSeq.sortBy(_._1).map(_._2).sum / teams.size
-      val md = nDef.toSeq.sortBy(_._1).map(_._2).sum / teams.size
-      off = nOff.map { case (t, v) => t -> (v - mo + league) }
-      deff = nDef.map { case (t, v) => t -> (v - md + league) }
-    }
-    teams.map(t => t -> (off(t), deff(t))).toMap
-  }
 }

@@ -47,12 +47,12 @@ object DailyRollup {
       col("fg3m").as("team_fg3m"), col("fta").as("team_fta"),
       col("ftm").as("team_ftm"), col("tov").as("team_tov"),
       col("oreb").as("team_oreb"), col("dreb").as("team_dreb"))
-    val opp = own.toDF("gameId", "__opp", "opp_points", "opp_poss", "__gm2",
+    val opp = own.toDF("__opp_gid", "__opp", "opp_points", "opp_poss", "__gm2",
       "opp_fga", "opp_fgm", "opp_fg3m", "opp_fta", "opp_ftm", "opp_tov",
       "opp_oreb", "opp_dreb")
     own.join(opp,
-        own("gameId") === opp("gameId") && own("teamId") =!= opp("__opp"))
-      .drop(opp("gameId")).drop("__opp", "__gm2")
+        col("gameId") === col("__opp_gid") && col("teamId") =!= col("__opp"))
+      .drop("__opp_gid", "__opp", "__gm2")
       .join(gameDates.select(col("gameId"),
         col("startDate").cast("string").as("startdate")), Seq("gameId"))
       .withColumnRenamed("teamId", "teamid")

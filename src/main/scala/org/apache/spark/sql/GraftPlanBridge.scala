@@ -38,6 +38,14 @@ object GraftPlanBridge {
     case _ => df
   }
 
+  /** Drops a cached RDD's blocks. `RDD.unpersist` does the same but
+    * first logs a WARN for every locally checkpointed RDD that its
+    * lineage cannot be recomputed; a caller that frees a checkpoint
+    * nothing reads any more gains nothing from that line.
+    * `SparkContext.unpersistRDD` is `private[spark]`. */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking)
+
   /** catalyst Expression -> Column, for expressions Spark ships but does
     * not expose through `functions` (e.g. the runtime-filter bloom pair). */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =

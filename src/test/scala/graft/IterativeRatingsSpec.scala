@@ -106,20 +106,6 @@ class IterativeRatingsSpec extends AnyFunSuite {
     }
   }
 
-  test("additive variant keeps the league mean invariant") {
-    val games =
-      twoSided(1, 2, 80, 70, neutral = true) ++
-        twoSided(2, 3, 75, 72, neutral = true) ++
-        twoSided(3, 1, 68, 78, neutral = true)
-    val league = IterativeRatings.leagueAverage(games)
-    val r = IterativeRatings.solveAdditive(games, iterations = 25)
-    val meanOff = r.values.map(_._1).sum / r.size
-    assert(math.abs(meanOff - league) < 1e-9)
-    // ordering: team 1 undefeated, team 3 winless
-    assert(r(1L)._1 - r(1L)._2 > r(2L)._1 - r(2L)._2)
-    assert(r(2L)._1 - r(2L)._2 > r(3L)._1 - r(3L)._2)
-  }
-
   test("post-convergence shrinkage contracts toward the league average") {
     val games = twoSided(1, 2, 90, 60) ++ twoSided(2, 3, 80, 70) ++
       twoSided(1, 3, 95, 55)
