@@ -5,18 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, SparkSession}
 import graft.sources.Tables
 
-/** Embedding similarity-search surface over the `embeddings` table
-  * (64-dim float vectors): brute-force cosine top-k as the exact
-  * baseline, IVF-style cluster-probed ANN as the scale path, and
-  * hyperplane-LSH bucketed near-duplicate pairing.
-  *
-  * Scale design: the query set is broadcast and the corpus is scanned
-  * once (never corpus x corpus); IVF probes one cluster; LSH pairs only
-  * within equal 8-bit codes. Dot products run as codegen'd higher-order
-  * array functions (zip_with + aggregate) — no UDFs — with float→double
-  * casts so the math matches the oracle's DOUBLE[] list_dot_product.
-  */
-
 /** The v05c/v05d oracle CTE chain — a full SQL replay of
   * KMeans.fitConverged's two Lloyd iterations over the embeddings
   * table (deterministic md5 seeds, assignment, mean update with
@@ -84,7 +72,26 @@ private[queries] object KmeansSql {
   val UpToCent2: String = upToCent2(8)
 }
 
+/** Embedding similarity-search surface over the `embeddings` table
+  * (64-dim float vectors): brute-force cosine top-k as the exact
+  * baseline, IVF-style cluster-probed ANN as the scale path, and
+  * hyperplane-LSH bucketed near-duplicate pairing.
+  *
+  * The serving kernels are [[Retrieve]] and [[Walk]]; this object holds
+  * their oracle generators (retrieveSql, walkSql), the index builds and
+  * the gate registry.
+  *
+  * Scale design: the query set is broadcast and the corpus is scanned
+  * once (never corpus x corpus); IVF probes one cluster; LSH pairs only
+  * within equal 8-bit codes. Dot products run as the native codegen'd
+  * dot_product expression (plans/DotProduct) — no UDFs — with
+  * float→double casts so the math matches the oracle's DOUBLE[]
+  * list_dot_product.
+  */
 object VectorOps {
+  import Retrieve.{Adc, Cells, Int8, Label, Post, Pre, SameLabel,
+    SameLabelResidue}
+
 
   /** Left-to-right double dot product over two float-array columns —
     * the native codegen expression (plans/DotProduct, r17): the
@@ -100,81 +107,6 @@ object VectorOps {
   private[graft] def cosine(a: String, b: String): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  // ===== shared recall-gate machinery (v02b / v02c / v09 / v09b) ==========
-  // One truth builder, one ANN builder per cell scheme, one recall join —
-  // the v02b/v02c twins used to carry ~50 duplicated lines each (ADVICE
-  // r9); any fix to the truth/recall construction now lands everywhere.
-
-  /** Exact brute-force cosine top-3 (qid, cid) ground truth for the
-    * broadcast query set (vec_id < 20) — what every recall gate
-    * measures against. */
-  private[graft] def bruteTruth(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    // norms ride the row (the v14 convention): sqrt(dot(x,x)) is the
-    // same double whether computed per row or per pair, so the cosine
-    // values — and the oracle hash — are unchanged, but each pair
-    // costs one dot product instead of three
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq"))
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** v02's label-partitioned IVF top-3 at a given probe count:
-    * per-label centroids in long form, each query routed to its
-    * `nprobe` max-dot centroids (deterministic (dot desc, label asc)
-    * ranking), cosine ranked within the probed partitions only. */
-  private[graft] def labelAnn(s: SparkSession, d: String, nprobe: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val long = e.select(col("vec_id"), col("label"),
-        posexplode(col("embedding")))
-      .select(col("vec_id"), col("label"), col("pos"),
-        col("col").cast("double").as("v"))
-    val cent = long.groupBy(col("label").as("c_label"), col("pos"))
-      .agg(avg(col("v")).as("cv"))
-    val qlong = long.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("pos"), col("v").as("qv"))
-    val assignW = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("c_label").asc)
-    val probes = qlong.join(cent, Seq("pos"))
-      .groupBy(col("qid"), col("c_label"))
-      .agg(sum(col("qv") * col("cv")).as("dot"))
-      .withColumn("rn", row_number().over(assignW))
-      .filter(col("rn") <= nprobe)
-      .select(col("qid"), col("c_label").as("probe_label"))
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val c = e.select(col("vec_id").as("cid"), col("label").as("c_lab"),
-      col("embedding").as("ce"))
-    val rankW = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    c.join(broadcast(probes.join(q, Seq("qid"))),
-        col("c_lab") === col("probe_label") && col("cid") =!= col("qid"))
-      .withColumn("cos", cosine("qe", "ce"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** Geometric (KMeans-cell) IVF top-3 at a given probe count — the
-    * production fix v02b's doc names: coarse cells are the CONVERGED
-    * Lloyd centroids of v05d (k=8, tol=0.12 → stops at exactly 2
-    * iterations, bracketing-pinned there), not label partitions.
-    * Corpus vectors are assigned to their max-dot centroid in one
-    * broadcast pass (centroids are k×dim driver doubles — tiny);
-    * queries route to their `nprobe` nearest centroids; cosine ranks
-    * within the probed cells only. At 100 TB the corpus is written
-    * bucketed by cell id and a probe reads ~nprobe/k of it — the same
-    * scan shape as v02, now with geometric locality behind it. */
   /** Top-`n` nearest cells of a vector column against driver-held
     * centroids, as ONE map-side expression: per-cell dots via
     * codegen'd zip_with/aggregate over centroid LITERALS, ranked by
@@ -194,162 +126,9 @@ object VectorOps {
   private[graft] def nearestCells(cent: Array[Array[Double]], vec: Column,
       n: Int): Column = graft.plans.NearestCellsExpr.ofCol(vec, cent, n)
 
-  private[graft] def geoAnn(s: SparkSession, d: String, nprobe: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val cent = TrainedIndex.centroids(s, d, k = 8)
-    // corpus assignment is map-only (no exchange anywhere before the
-    // broadcast probe join — the 100-TB index build writes this frame
-    // partitioned by cell, BucketingSpec pins the pruned probe scan)
-    val asg = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      .filter(col("cid").isNotNull)
-      .withColumn("cell",
-        -element_at(nearestCells(cent, "ce", 1), 1).getField("nc"))
-    val probes = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        explode(nearestCells(cent, "embedding", nprobe)).as("pc"))
-      .select(col("qid"), (-col("pc.nc")).as("cell"), col("qe"))
-    val rankW = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    asg.join(broadcast(probes), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .withColumn("cos", cosine("qe", "ce"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** Exact brute-force cosine top-3 truth RESTRICTED to candidates
-    * sharing the query's label — what a metadata-filtered search is
-    * graded against (the v18 gates). */
-  private[graft] def bruteTruthFiltered(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("label").as("q_lab"),
-        col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq"))
-    val c = e.select(col("vec_id").as("cid"), col("label").as("c_lab"),
-      col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    c.join(broadcast(q),
-        col("qid") =!= col("cid") && col("c_lab") === col("q_lab"))
-      .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** Metadata-filtered IVF serving: the query carries an equality
-    * constraint (here: its own label — "similar items in my
-    * category") and candidates must satisfy it. `preFilter = true`
-    * applies the predicate BEFORE the per-query rank (the correct
-    * plan: the label rides the same map-side projection as the cell
-    * assignment, so filtering costs nothing and the top-3 budget is
-    * spent only on eligible rows); `preFilter = false` is the naive
-    * post-filter (rank the unfiltered cell top-3, then drop
-    * non-matching rows) — same scan budget, but the rank budget is
-    * wasted on ineligible rows and recall collapses at selective
-    * filters, which is the production trap the gate pair measures. */
-  private[graft] def filteredGeoAnn(s: SparkSession, d: String,
-      nprobe: Int, preFilter: Boolean): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val cent = TrainedIndex.centroids(s, d, k = 8)
-    val asg = e.select(col("vec_id").as("cid"), col("label").as("c_lab"),
-        col("embedding").as("ce"))
-      .filter(col("cid").isNotNull)
-      .withColumn("cell",
-        -element_at(nearestCells(cent, "ce", 1), 1).getField("nc"))
-    val probes = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("label").as("q_lab"),
-        col("embedding").as("qe"),
-        explode(nearestCells(cent, "embedding", nprobe)).as("pc"))
-      .select(col("qid"), col("q_lab"), (-col("pc.nc")).as("cell"),
-        col("qe"))
-    val rankW = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val joined = asg.join(broadcast(probes), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-    val ranked = (if (preFilter) joined.filter(col("c_lab") === col("q_lab"))
-      else joined)
-      .withColumn("cos", cosine("qe", "ce"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
-    (if (preFilter) ranked
-      else ranked.filter(col("c_lab") === col("q_lab")))
-      .select(col("qid"), col("cid"))
-  }
-
-  /** The RARE-predicate serving plan (v18c): when the filter keeps
-    * ~sel*n rows with sel << 1/kCells, cell routing starves — the
-    * probed cells hold ~sel*n*nprobe/k eligible rows (<1 at the gate
-    * point: measured 17/49 recall for the cell-routed pre-filter,
-    * 0/49 for post-filter, vs 49/49 here at 0.66% selectivity) — so
-    * the correct plan inverts: the predicate becomes the JOIN KEY
-    * (label, residue) and the exact rank runs over the equi-joined
-    * eligible subset only. No index is consulted at all; at 100 TB
-    * the lake's label/tenant partitioning turns the join into
-    * partition-pruned point lookups reading sel of the corpus,
-    * cheaper than any probe. The complement regime (90.4%
-    * selectivity) is where pre/post-filter CONVERGE (measured 32/60
-    * vs 31/60) — the full selectivity sweep is tools.FilteredAnnAb's
-    * table in BENCH_SCALE. */
-  /** The composite-key modulus of the rare-filter regime (label AND
-    * vec_id % this — ~0.66% selectivity at the gate SF). One constant
-    * shared by the gate pair below AND tools.FilteredAnnAb, so the
-    * gate and the A/B sweep can never measure different predicates. */
-  private[graft] val RareResidueMod = 16
-
-  /** The (query, corpus) frames of the rare-filter regime — labels,
-    * residues, embeddings and norms, built once and shared by the
-    * truth and serving plans so the predicate columns exist in
-    * exactly one copy. */
-  private def rareFrames(s: SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("label").as("q_lab"),
-        pmod(col("vec_id"), lit(RareResidueMod)).as("q_res"),
-        col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq"))
-    val c = e.select(col("vec_id").as("cid"), col("label").as("c_lab"),
-      pmod(col("vec_id"), lit(RareResidueMod)).as("c_res"),
-      col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-    (q, c)
-  }
-
-  private[graft] def rareFilteredExact(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val (q, c) = rareFrames(s, d)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    c.join(broadcast(q),
-        col("c_lab") === col("q_lab") && col("c_res") === col("q_res") &&
-          col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** Brute-force truth for the rare composite predicate — all-pairs
-    * scored, THEN filtered and ranked (the grading frame v18c's
-    * equi-join plan must reproduce). */
-  private[graft] def bruteTruthRare(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val (q, c) = rareFrames(s, d)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-      .filter(col("c_lab") === col("q_lab") && col("c_res") === col("q_res"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
-  }
+  /** The exact cosine top-3 of the broadcast query set: the truth every
+    * recall gate grades against. */
+  private[graft] val Truth = Retrieve()
 
   /** v07's SemDeDup assignment kernel, k-parameterized: deterministic
     * md5-seed pick, broadcast seed assignment with a max_by argmax
@@ -427,110 +206,130 @@ object VectorOps {
   private[queries] def walkRecall(s: SparkSession, d: String,
       graph: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
       walk: Walk): org.apache.spark.sql.DataFrame =
-    recallOf(bruteTruth(s, d), walk.serve(s, d, graph._1, graph._2).top3)
+    recallOf(Truth.serve(s, d), walk.serve(s, d, graph._1, graph._2).top3)
 
-  /** Oracle CTEs for the brute-force truth set (q, c, bf, truth). */
-  private[queries] val TruthSql = """
-        q AS (SELECT vec_id qid, embedding::DOUBLE[] qe FROM embeddings WHERE vec_id < 20),
-        c AS (SELECT vec_id cid, label c_lab, embedding::DOUBLE[] ce FROM embeddings),
-        bf AS (SELECT qid, cid, list_dot_product(qe, ce)
-                      / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ce, ce))) AS cos
-               FROM q, c WHERE qid <> cid),
-        truth AS (SELECT qid, cid
-                  FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                          ORDER BY cos DESC, cid ASC) rn FROM bf)
-                  WHERE rn <= 3)"""
+  /** The cell-routing CTEs over KmeansSql's cent2, `p`-prefixed: one
+    * dot frame d3g feeds the corpus assignment a3 (g_cid, cell) and the
+    * `nprobe` probes (qid, cell) of the rows matching `qPred`, both
+    * ranked (dot DESC, cluster ASC). Shared by retrieveSql's Cells
+    * route, the graph replays and the v14/v16/st18 oracles. */
+  private[graft] def geoCellsSql(nprobe: Int,
+      qPred: String = "vec_id < 20", p: String = "") = s"""
+        ${p}d3g AS (SELECT l.vec_id, c2.cluster, sum(l.v * c2.cv) AS dot
+                FROM long l JOIN cent2 c2 USING (pos) GROUP BY 1, 2),
+        ${p}a3 AS (SELECT vec_id AS g_cid, cluster AS cell FROM (
+                 SELECT vec_id, cluster,
+                        row_number() OVER (PARTITION BY vec_id
+                          ORDER BY dot DESC, cluster ASC) AS rn
+                 FROM ${p}d3g) WHERE rn = 1),
+        ${p}probes AS (SELECT vec_id AS qid, cluster AS cell FROM (
+                 SELECT vec_id, cluster,
+                        row_number() OVER (PARTITION BY vec_id
+                          ORDER BY dot DESC, cluster ASC) AS rn
+                 FROM ${p}d3g WHERE $qPred) WHERE rn <= $nprobe)"""
 
-  /** Oracle CTEs for the label-FILTERED truth (qf, cf, bff, truth):
-    * brute-force top-3 among candidates sharing the query's label —
-    * the grading set of the v18 filtered-serving pair. bff carries
-    * both labels so the ann CTEs can place the predicate below
-    * (v18) or above (v18b) the rank. */
-  private val FilteredTruthSql = """
-        qf AS (SELECT vec_id qid, label q_lab, embedding::DOUBLE[] qe
-               FROM embeddings WHERE vec_id < 20),
-        cf AS (SELECT vec_id cid, label c_lab, embedding::DOUBLE[] ce
-               FROM embeddings),
-        bff AS (SELECT qid, cid, c_lab, q_lab,
-                       list_dot_product(qe, ce)
-                       / (sqrt(list_dot_product(qe, qe))
-                          * sqrt(list_dot_product(ce, ce))) AS cos
-                FROM qf, cf WHERE qid <> cid),
-        truth AS (SELECT qid, cid
-                  FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                          ORDER BY cos DESC, cid ASC) rn
-                        FROM bff WHERE c_lab = q_lab)
-                  WHERE rn <= 3)"""
-
-  /** Oracle CTEs for the label-partitioned ANN side (…, ann). */
-  private[graft] def labelAnnSql(nprobe: Int) = s"""
-        long AS (SELECT vec_id, label, unnest(embedding)::DOUBLE AS v,
+  /** Oracle CTEs replaying [[Retrieve]] `r` as the CTE `out` (qid, cid,
+    * rank, score, route[, idot | code_key]). Every helper CTE is named
+    * `out_…`, so a truth and an ann compose in one WITH next to
+    * KmeansSql and PqChainSql. `out_x` holds the exact cosine of every
+    * (query, corpus) pair: it scores the Exact scorer and the re-rank,
+    * and as `truth_x` it is walkSql's exact compass. The artifacts
+    * replay upstream: a Cells route expects KmeansSql's long/cent2, an
+    * Adc scorer PqChainSql's pcodes/pd2/pck. A Lake corpus replays as
+    * the embeddings table, all at once. */
+  private[graft] def retrieveSql(r: Retrieve, out: String): String = {
+    import Retrieve._
+    val o = out + "_"
+    val route = r.route match {
+      case All => s"${o}p AS (SELECT qid, cid, NULL AS route FROM ${o}x)"
+      case Label(nprobe) => s"""${o}long AS (SELECT vec_id, label, unnest(embedding)::DOUBLE AS v,
                         unnest(range(len(embedding))) AS pos
                  FROM embeddings),
-        cent AS (SELECT label AS c_label, pos, avg(v) AS cv
-                 FROM long GROUP BY 1, 2),
-        qlong AS (SELECT vec_id AS qid, pos, v AS qv FROM long WHERE vec_id < 20),
-        assign AS (SELECT qid, c_label, sum(qv * cv) AS dot
-                   FROM qlong JOIN cent USING (pos) GROUP BY 1, 2),
-        probes AS (SELECT qid, c_label AS probe_label
+        ${o}cent AS (SELECT label AS c_label, pos, avg(v) AS cv
+                 FROM ${o}long GROUP BY 1, 2),
+        ${o}qlong AS (SELECT vec_id AS qid, pos, v AS qv FROM ${o}long WHERE vec_id < 20),
+        ${o}assign AS (SELECT qid, c_label, sum(qv * cv) AS dot
+                   FROM ${o}qlong JOIN ${o}cent USING (pos) GROUP BY 1, 2),
+        ${o}probes AS (SELECT qid, c_label AS route
                    FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                           ORDER BY dot DESC, c_label ASC) rn FROM assign)
+                           ORDER BY dot DESC, c_label ASC) rn FROM ${o}assign)
                    WHERE rn <= $nprobe),
-        sc AS (SELECT p.qid, c.cid,
-                      list_dot_product(q.qe, c.ce)
-                      / (sqrt(list_dot_product(q.qe, q.qe)) * sqrt(list_dot_product(c.ce, c.ce))) AS cos
-               FROM probes p JOIN q ON p.qid = q.qid
-               JOIN c ON c.c_lab = p.probe_label AND c.cid <> p.qid),
-        ann AS (SELECT qid, cid
-                FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                        ORDER BY cos DESC, cid ASC) rn FROM sc)
-                WHERE rn <= 3)"""
-
-  /** Oracle CTEs for the KMeans-cell ANN side: one dot frame vs the
-    * v05d-pinned cent2 centroids feeds BOTH the corpus assignment and
-    * the query probes (…, ann). */
-  /** Just the cell-routing part (d3g, a3, probes) — corpus assignment
-    * plus query probes against cent2 — so v13's IVF-PQ oracle can
-    * reuse the routing with a different (ADC) scoring tail. */
-  private[graft] def geoCellsSql(nprobe: Int,
-      qPred: String = "vec_id < 20") = s"""
-        d3g AS (SELECT l.vec_id, c2.cluster, sum(l.v * c2.cv) AS dot
-                FROM long l JOIN cent2 c2 USING (pos) GROUP BY 1, 2),
-        a3 AS (SELECT vec_id AS g_cid, cluster AS cell FROM (
-                 SELECT vec_id, cluster,
-                        row_number() OVER (PARTITION BY vec_id
-                          ORDER BY dot DESC, cluster ASC) AS rn
-                 FROM d3g) WHERE rn = 1),
-        probes AS (SELECT vec_id AS qid, cluster AS cell FROM (
-                 SELECT vec_id, cluster,
-                        row_number() OVER (PARTITION BY vec_id
-                          ORDER BY dot DESC, cluster ASC) AS rn
-                 FROM d3g WHERE $qPred) WHERE rn <= $nprobe)"""
-
-  private[graft] def geoAnnSql(nprobe: Int) = s"""${geoCellsSql(nprobe)},
-        sc AS (SELECT p.qid, g.g_cid AS cid,
-                      list_dot_product(q.qe, c.ce)
-                      / (sqrt(list_dot_product(q.qe, q.qe)) * sqrt(list_dot_product(c.ce, c.ce))) AS cos
-               FROM probes p
-               JOIN a3 g ON g.cell = p.cell AND g.g_cid <> p.qid
-               JOIN q ON q.qid = p.qid
-               JOIN c ON c.cid = g.g_cid),
-        ann AS (SELECT qid, cid
-                FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                        ORDER BY cos DESC, cid ASC) rn FROM sc)
-                WHERE rn <= 3)"""
-
-  /** Oracle CTEs for v06-convention int8 quantization (sc, quant) —
-    * shared by the v08 and v08b serving gates. */
-  private val QuantSql = """
-        sc AS (SELECT vec_id, label, embedding::DOUBLE[] AS de,
+        ${o}p AS (SELECT p.qid, c.cid, p.route
+               FROM ${o}probes p JOIN ${o}c c ON c.c_lab = p.route AND c.cid <> p.qid)"""
+      case c: Cells => geoCellsSql(c.nprobe, p = o).trim + s""",
+        ${o}p AS (SELECT p.qid, g.g_cid AS cid, p.cell AS route
+               FROM ${o}probes p JOIN ${o}a3 g ON g.cell = p.cell AND g.g_cid <> p.qid)"""
+    }
+    val (score, joins, scoring) = r.scorer match {
+      case Exact => ("x.score", "", "")
+      case Int8 => ("""CAST(list_sum(list_transform(range(len(qa.q)), i ->
+                        qa.q[i + 1] * qb.q[i + 1])) AS BIGINT) AS idot,
+                      idot * qa.scale * qb.scale AS score""", s"""
+               JOIN ${o}quant qa ON qa.vec_id = p.qid
+               JOIN ${o}quant qb ON qb.vec_id = p.cid""", s""",
+        ${o}sc AS (SELECT vec_id, embedding::DOUBLE[] AS de,
                       greatest(list_max(list_transform(embedding::DOUBLE[], x -> abs(x))), 1e-30)
                         / 127.0 AS scale
                FROM embeddings),
-        quant AS (SELECT vec_id, label, scale,
+        ${o}quant AS (SELECT vec_id, scale,
                          list_transform(de, x ->
                            CAST(least(greatest(floor(x / scale + 0.5), -127.0), 127.0) AS BIGINT)) AS q
-                  FROM sc)"""
+                  FROM ${o}sc)""")
+      case Adc(_) => ("a.score, k.code_key", s"""
+               JOIN ${o}adc a ON a.qid = p.qid AND a.cid = p.cid
+               JOIN pck k ON k.vec_id = p.cid""", s""",
+        ${o}adc AS (SELECT p.qid, p.cid,
+                       ${pqAdcTermsSql("pc", "l")} AS score
+                FROM ${o}p p
+                JOIN pcodes pc ON pc.vec_id = p.cid
+                JOIN pd2 l ON l.vec_id = p.qid AND l.sub = pc.sub
+                          AND l.code = pc.code
+                GROUP BY 1, 2)""")
+    }
+    val own = r.scorer match {
+      case Exact => ""
+      case Int8 => ", idot"
+      case Adc(_) => ", code_key"
+    }
+    val (pre, post) = r.filter match {
+      case NoFilter => ("", "")
+      case Pre(p) => (s" WHERE ${p.sql}", "")
+      case Post(p) => ("", s" AND ${p.sql}")
+    }
+    val top = r.rerank match {
+      case None => s"""
+        $out AS (SELECT qid, cid, CAST(rn AS INT) AS rank, score, route$own
+               FROM ${o}r WHERE rn <= ${r.k}$post)"""
+      case Some(n) => s"""
+        ${o}sl AS (SELECT qid, cid FROM ${o}r WHERE rn <= $n$post),""" +
+        exactTopSql(s"${o}sl", s"${o}x", out, r.k)
+    }
+    s"""${o}q AS (SELECT vec_id AS qid, label AS q_lab, embedding::DOUBLE[] AS qe
+               FROM embeddings WHERE vec_id < 20),
+        ${o}c AS (SELECT vec_id AS cid, label AS c_lab, embedding::DOUBLE[] AS ce
+               FROM embeddings),
+        ${o}x AS (SELECT qid, cid, q_lab, c_lab,
+                      list_dot_product(qe, ce)
+                      / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ce, ce))) AS score
+               FROM ${o}q, ${o}c WHERE qid <> cid),
+        $route$scoring,
+        ${o}s AS (SELECT p.qid, p.cid, p.route, x.q_lab, x.c_lab, $score
+               FROM ${o}p p JOIN ${o}x x ON x.qid = p.qid AND x.cid = p.cid$joins),
+        ${o}r AS (SELECT *, row_number() OVER (PARTITION BY qid
+                   ORDER BY score DESC, cid ASC) AS rn FROM ${o}s$pre),$top"""
+  }
+
+  /** The exact re-rank tail of walkSql and of retrieveSql's re-rank:
+    * `from`'s (qid, cid) rows scored through the exact pair table
+    * `exact` (qid, cid, score) and cut to the top `k` as `out`. */
+  private def exactTopSql(from: String, exact: String, out: String,
+      k: Int): String = s"""
+        ${out}_rr AS (SELECT b.qid, b.cid, x.score
+               FROM $from b JOIN $exact x ON x.qid = b.qid AND x.cid = b.cid),
+        $out AS (SELECT qid, cid, CAST(rn AS INT) AS rank, score FROM (
+                 SELECT *, row_number() OVER (PARTITION BY qid
+                   ORDER BY score DESC, cid ASC) rn FROM ${out}_rr)
+               WHERE rn <= $k)"""
 
   /** Oracle tail: the exact-intersection recall rollup. */
   private[queries] val RecallTailSql = """
@@ -644,7 +443,7 @@ object VectorOps {
                WHERE m.mid <> p.qid)"""
 
   /** Oracle CTEs replaying [[Walk]] with the engine's own parameters:
-    * `adc` is the scorer (the exact cosine from `bf`, or the INTEGER
+    * `adc` is the scorer (the exact cosine from `truth_x`, or the INTEGER
     * ADC score from `adcall`), `beam` and `maxHops` the budget, and
     * `refine = Some((cells, shortlist))` the Refined tail. Entry
     * scoring s0/b0 ranks f0's medoid entries; then per hop h the
@@ -663,15 +462,16 @@ object VectorOps {
     * the same (dot DESC, cluster ASC) probe order as geoCellsSql) scored
     * by the walk's scorer and cut to `shortlist` (a SQL expression, so
     * v21b/st19c pass the corpus-coupled scaledShortlistSql), re-ranked
-    * exactly through bf to the top-3 `ann` the recall tail joins.
-    * Expects f0/edges (hubGraphSql or vamanaGraphSql), bf, d3g/a3 and,
-    * for `adc`, adcall upstream. */
+    * exactly through truth_x to the top-3 `ann` the recall tail joins
+    * (exactTopSql, the tail retrieveSql's re-rank shares). Expects
+    * f0/edges (hubGraphSql or vamanaGraphSql), the recall truth
+    * (retrieveSql as `truth`), d3g/a3 and, for `adc`, adcall upstream. */
   private[graft] def walkSql(adc: Boolean, beam: Int,
       maxHops: Int = WalkMaxHops,
       refine: Option[(Int, String)] = None): String = {
     val (score, scorer) =
       if (adc) ("a.score", "adcall a ON a.qid = x.qid AND a.cid = x.cid")
-      else ("bf.cos AS score", "bf ON bf.qid = x.qid AND bf.cid = x.cid")
+      else ("bf.score", "truth_x bf ON bf.qid = x.qid AND bf.cid = x.cid")
     def cut(s: String, b: String, from: String, n: String) = s"""
         $s AS MATERIALIZED (SELECT x.qid, x.cid, $score
                FROM $from x JOIN $scorer),
@@ -704,13 +504,7 @@ object VectorOps {
         cut("su", "sl", "cu", s"($shortlist)"), "sl")
     }
     (cut("s0", "b0", "f0", beam.toString) +: hops).mkString(",") + refined +
-      s""",
-        rr AS (SELECT b.qid, b.cid, bf.cos
-               FROM $last b JOIN bf ON bf.qid = b.qid AND bf.cid = b.cid),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM rr)
-               WHERE rn <= 3)"""
+      "," + exactTopSql(last, "truth_x", "ann", 3)
   }
 
   // m=8 subspaces of 8 dims, k=16 codewords each: 1024 codebook
@@ -726,13 +520,14 @@ object VectorOps {
   private[graft] val PqSubDim = 8
   private[graft] val PqK = 16
 
-  /** PQ codebook training, one copy shared by v12/v12b (pqAdcTop3) and
-    * v13 (ivfPqTop3): per-subspace codebooks (m=4 subspaces of 16
-    * dims, k=16 codewords; deterministic md5 seeds + ONE Lloyd update
-    * per subspace — the v05b recipe), collected as m*k*16 = 1024
-    * driver doubles (the KMeans-centroid bounded class: the codebook
-    * trains on a driver-sized sample at 100 TB and rides every
-    * executor as literals). */
+  /** PQ codebook training, one copy behind every ADC serve (Retrieve's
+    * Adc scorer, the stored codes of Walk and the streamed lake):
+    * per-subspace codebooks (m=8 subspaces of 8 dims, k=16 codewords;
+    * deterministic md5 seeds + ONE Lloyd update per subspace — the v05b
+    * recipe), collected as m*k*subDim = 1024 driver doubles (the
+    * KMeans-centroid bounded class: the codebook trains on a
+    * driver-sized sample at 100 TB and rides every executor as
+    * literals). */
   private[graft] def pqCodebook(s: SparkSession, d: String)
       : Array[Array[Array[Double]]] = {
     val m = PqM; val subDim = PqSubDim; val k = PqK
@@ -864,74 +659,6 @@ object VectorOps {
         lit(math.pow(PqK, PqM - 1 - i).toLong)
     }.reduce(_ + _)
 
-  private[graft] def pqAdcTop3(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val cb = TrainedIndex.codebook(s, d)
-    // score is an exact integer (micro-unit LUT entries — pqLutCol),
-    // so the rank key needs no rounding: identical cross-engine by
-    // construction, ties resolved by the cid tiebreak
-    val rankW = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    pqCorpus(e, cb).join(broadcast(pqQueries(e, cb)),
-        col("cid") =!= col("qid"))
-      .withColumn("score", pqScoreCol)
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"), pqCodeKeyCol.as("code_key"),
-        col("score"), col("rank"))
-  }
-
-  /** IVF-PQ fused serving (v13) — the production composition the
-    * v09/v12 pair sets up: queries route to their `nprobe` nearest
-    * geometric cells (v09's centroid-literal argmax, zero shuffle)
-    * and ONLY those cells' candidates are scored, via the PQ/ADC
-    * lookup tables (v12's 4-array-lookup score over stored codes).
-    * Scan budget is nprobe/k of the corpus AND each candidate costs
-    * 4 code lookups instead of 64 floats — the two axes (which rows,
-    * how many bytes per row) compose multiplicatively, which is how
-    * a 100-TB index actually serves (Jegou et al. TPAMI'11 §V,
-    * IVFADC). The rank key is the exact integer micro-unit ADC
-    * score (pqLutCol's fixed-point quantization), so no cross-engine
-    * float tie can flip it. */
-  private[graft] def ivfPqTop3(s: SparkSession, d: String, nprobe: Int)
-      : org.apache.spark.sql.DataFrame =
-    ivfPqShortlist(s, d, nprobe, 3)
-
-  /** Cell-routed ADC top-`r` shortlist per query — the candidate
-    * generation stage of IVFADC+R. Artifacts come from the
-    * train-once TrainedIndex cache (VERDICT r11 #3). */
-  private[graft] def ivfPqShortlist(s: SparkSession, d: String,
-      nprobe: Int, r: Int): org.apache.spark.sql.DataFrame =
-    ivfPqShortlistWith(s, d, nprobe, r,
-      TrainedIndex.centroids(s, d, k = 8), TrainedIndex.codebook(s, d))
-
-  /** Shortlist generation against EXPLICIT artifacts — the serving
-    * path v15 drives from a loaded IndexArtifacts store. */
-  private[graft] def ivfPqShortlistWith(s: SparkSession, d: String,
-      nprobe: Int, r: Int, cent: Array[Array[Double]],
-      cb: Array[Array[Array[Double]]]): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val corpus = e.select(col("vec_id").as("cid") +:
-      (-element_at(nearestCells(cent, col("embedding"), 1), 1)
-        .getField("nc")).as("cell") +:
-      (0 until PqM).map(i => pqCodeCol(cb, i).as(s"c$i")): _*)
-    val queries = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid") +:
-        explode(nearestCells(cent, col("embedding"), nprobe)).as("pc") +:
-        (0 until PqM).map(i => pqLutCol(cb, i).as(s"l$i")): _*)
-      .select(col("qid") +: (-col("pc.nc")).as("cell") +:
-        (0 until PqM).map(i => col(s"l$i")): _*)
-    val rankW = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    corpus.join(broadcast(queries), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .withColumn("score", pqScoreCol)
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= r)
-      .select(col("qid"), col("cid"))
-  }
-
   /** v14's cell-local kNN-graph kernel, k-parameterized: per-point
     * top-3 cosine neighbors within the point's own KMeans cell. The
     * gate pins kCells=8 (the oracle-replayable KmeansSql chain);
@@ -980,33 +707,6 @@ object VectorOps {
       .select(col("a_id").as("vec_id"), col("rank"),
         col("b_id").as("neighbor_id"),
         round(col("cos"), 4).as("cosine"))
-  }
-
-  /** IVFADC+R (Jegou et al. TPAMI'11 §VI): exact-cosine re-rank of the
-    * cell-routed ADC shortlist. The shortlist is query-count bounded
-    * (|queries| x r rows), so it broadcasts into the corpus scan and
-    * only the shortlisted rows' full vectors are ever touched. */
-  private[graft] def ivfAdcRerank(s: SparkSession, d: String,
-      nprobe: Int, r: Int): org.apache.spark.sql.DataFrame =
-    ivfAdcRerankWith(s, d, nprobe, r,
-      TrainedIndex.centroids(s, d, k = 8), TrainedIndex.codebook(s, d))
-
-  /** Re-ranked serving against EXPLICIT artifacts (the v15 path). */
-  private[graft] def ivfAdcRerankWith(s: SparkSession, d: String,
-      nprobe: Int, r: Int, cent: Array[Array[Double]],
-      cb: Array[Array[Array[Double]]]): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val sl = ivfPqShortlistWith(s, d, nprobe, r, cent, cb)
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    c.join(broadcast(sl.join(q, Seq("qid"))), Seq("cid"))
-      .withColumn("cos", cosine("qe", "ce"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
   }
 
   /** BATCH IVFADC+R serving (v16): every corpus vector is a query —
@@ -1072,27 +772,6 @@ object VectorOps {
         col("cid").as("neighbor_id"), round(col("cos"), 4).as("cosine"))
   }
 
-  /** Greedy beam-search ANN serving over the STORED kNN graph (v17) —
-    * the graph-navigation serving pattern (HNSW layer 0, Malkov &
-    * Yashunin TPAMI'18 §4; NSG, Fu et al. VLDB'19) re-expressed as a
-    * fixed number of bounded relational hops. Where IVF serving
-    * (v09/v13) scans whole cells, graph serving touches only
-    * `beam * degree` graph rows per query per hop: enter at the
-    * query's nprobe=2 nearest cells' MEDOIDS (the corpus vector with
-    * the max dot against its own cell centroid — k driver rows, the
-    * TrainedIndex artifact pattern), then each hop expands the
-    * current beam's out-edges, scores the candidate union exactly,
-    * and keeps the top-`beam` per query. Every per-hop frame is
-    * queries x beam x (1 + degree) rows — corpus-size-independent —
-    * so the hop joins broadcast the frontier into the stored edge /
-    * embedding tables; at 100 TB those tables are id-bucketed and
-    * each hop is a bucket-pruned point-lookup join, never a scan.
-    * The graph itself is v14's kernel built ONCE (the eager local
-    * checkpoint stands in for the stored edge table so hop joins
-    * read it instead of replaying the build per hop). Determinism:
-    * ranks order by (cos DESC, cid ASC) like every serving gate, and
-    * candidate sets are exact-distinct, so the walk is replayable in
-    * SQL hop by hop. */
   /** The graph-tier BUILD shared by the graph-serving gates (v17
     * exact-cosine walk, v19 ADC walk): v14's cell-local kernel at
     * `degree` edges per node UNION one long-range HUB edge (node ->
@@ -1318,14 +997,6 @@ object VectorOps {
     s"SELECT ($refine*count(*) + ${den - 1}) // $den FROM embeddings"
   }
 
-  /** Oracle CTEs for the PQ codebook build + encode (<p>longp …
-    * <p>codes, <p>ck): per-subspace md5-seeded one-step-Lloyd
-    * codebooks, corpus encode, and the query-side dot frame <p>d2
-    * (restricted to qids it IS the ADC lookup table). The CTE names
-    * are prefix-parameterized because v13 composes this chain with
-    * KmeansSql.UpToCent2, whose CTE names (seeds0/seeds/sg/d1/a1/
-    * sums/d2) it would otherwise collide with; v12/v12b use the
-    * unprefixed form via PqAdcSql. */
   /** `CASE sub` arms of the base-k positional code packing. */
   private def pqCkWeightsSql: String =
     (0 until PqM).map(i =>
@@ -1352,72 +1023,69 @@ object VectorOps {
                    WHERE l.vec_id < 20 AND l.vec_id <> pc.vec_id
                    GROUP BY 1, 2)"""
 
-  private[graft] def pqChainSql(p: String): String = s"""${p}longp AS (
+  /** Oracle CTEs for the PQ codebook build + encode (plongp …
+    * pcodes, pck): per-subspace md5-seeded one-step-Lloyd codebooks,
+    * corpus encode, and the dot frame pd2 (restricted to qids it IS
+    * the ADC lookup table). The `p` prefix keeps the names apart from
+    * KmeansSql's (seeds0/seeds/sg/d1/a1/sums/d2), which every cell-
+    * routed ADC oracle composes next to it. */
+  private[graft] val PqChainSql: String = s"""plongp AS (
                          SELECT vec_id, unnest(embedding)::DOUBLE AS v,
                                 unnest(range(len(embedding))) AS pos
                          FROM embeddings),
-        ${p}subv AS (SELECT vec_id, CAST(pos // $PqSubDim AS INT) AS sub,
+        psubv AS (SELECT vec_id, CAST(pos // $PqSubDim AS INT) AS sub,
                         pos % $PqSubDim AS lpos, v
-                 FROM ${p}longp),
-        ${p}seeds0 AS (SELECT vec_id AS sid, embedding::DOUBLE[] AS se
+                 FROM plongp),
+        pseeds0 AS (SELECT vec_id AS sid, embedding::DOUBLE[] AS se
                    FROM embeddings
                    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC, vec_id ASC
                    LIMIT $PqK),
-        ${p}seeds AS (SELECT sid, se,
+        pseeds AS (SELECT sid, se,
                          row_number() OVER (ORDER BY CAST(sid AS VARCHAR) ASC) - 1 AS code
-                  FROM ${p}seeds0),
-        ${p}sgl AS (SELECT code, unnest(se) AS sv, unnest(range(len(se))) AS pos
-                FROM ${p}seeds),
-        ${p}sg AS (SELECT code, CAST(pos // $PqSubDim AS INT) AS sub,
+                  FROM pseeds0),
+        psgl AS (SELECT code, unnest(se) AS sv, unnest(range(len(se))) AS pos
+                FROM pseeds),
+        psg AS (SELECT code, CAST(pos // $PqSubDim AS INT) AS sub,
                       pos % $PqSubDim AS lpos, sv
-               FROM ${p}sgl),
-        ${p}sgn AS (SELECT sub, code, sum(sv * sv) / 2 AS hn
-                FROM ${p}sg GROUP BY 1, 2),
-        ${p}d1 AS (SELECT s.vec_id, g.sub, g.code, sum(s.v * g.sv) AS dot
-               FROM ${p}subv s JOIN ${p}sg g ON s.sub = g.sub AND s.lpos = g.lpos
+               FROM psgl),
+        psgn AS (SELECT sub, code, sum(sv * sv) / 2 AS hn
+                FROM psg GROUP BY 1, 2),
+        pd1 AS (SELECT s.vec_id, g.sub, g.code, sum(s.v * g.sv) AS dot
+               FROM psubv s JOIN psg g ON s.sub = g.sub AND s.lpos = g.lpos
                GROUP BY 1, 2, 3),
-        ${p}a1 AS (SELECT vec_id, sub, code FROM (
+        pa1 AS (SELECT vec_id, sub, code FROM (
                  SELECT d.vec_id, d.sub, d.code,
                         row_number() OVER (PARTITION BY d.vec_id, d.sub
                           ORDER BY d.dot - n.hn DESC, d.code ASC) AS rn
-                 FROM ${p}d1 d JOIN ${p}sgn n
+                 FROM pd1 d JOIN psgn n
                    ON d.sub = n.sub AND d.code = n.code) WHERE rn = 1),
-        ${p}sums AS (SELECT a.sub, a.code, s.lpos, sum(s.v) AS sm, count(*) AS n
-                 FROM ${p}subv s JOIN ${p}a1 a ON s.vec_id = a.vec_id AND s.sub = a.sub
+        psums AS (SELECT a.sub, a.code, s.lpos, sum(s.v) AS sm, count(*) AS n
+                 FROM psubv s JOIN pa1 a ON s.vec_id = a.vec_id AND s.sub = a.sub
                  GROUP BY 1, 2, 3),
-        ${p}cb1 AS (SELECT g.sub, g.code, g.lpos, coalesce(m.sm / m.n, g.sv) AS cv
-                FROM ${p}sg g LEFT JOIN ${p}sums m
+        pcb1 AS (SELECT g.sub, g.code, g.lpos, coalesce(m.sm / m.n, g.sv) AS cv
+                FROM psg g LEFT JOIN psums m
                   ON g.sub = m.sub AND g.code = m.code AND g.lpos = m.lpos),
-        ${p}cbn AS (SELECT sub, code, sum(cv * cv) / 2 AS hn
-                FROM ${p}cb1 GROUP BY 1, 2),
-        ${p}d2 AS (SELECT s.vec_id, c.sub, c.code, sum(s.v * c.cv) AS dot
-               FROM ${p}subv s JOIN ${p}cb1 c ON s.sub = c.sub AND s.lpos = c.lpos
+        pcbn AS (SELECT sub, code, sum(cv * cv) / 2 AS hn
+                FROM pcb1 GROUP BY 1, 2),
+        pd2 AS (SELECT s.vec_id, c.sub, c.code, sum(s.v * c.cv) AS dot
+               FROM psubv s JOIN pcb1 c ON s.sub = c.sub AND s.lpos = c.lpos
                GROUP BY 1, 2, 3),
-        ${p}codes AS (SELECT vec_id, sub, code FROM (
+        pcodes AS (SELECT vec_id, sub, code FROM (
                     SELECT d.vec_id, d.sub, d.code,
                            row_number() OVER (PARTITION BY d.vec_id, d.sub
                              ORDER BY d.dot - n.hn DESC, d.code ASC) AS rn
-                    FROM ${p}d2 d JOIN ${p}cbn n
+                    FROM pd2 d JOIN pcbn n
                       ON d.sub = n.sub AND d.code = n.code) WHERE rn = 1),
-        ${p}ck AS (SELECT vec_id,
+        pck AS (SELECT vec_id,
                       CAST(sum((CASE sub $pqCkWeightsSql
                                 ELSE 1 END) * code) AS BIGINT) AS code_key
-               FROM ${p}codes GROUP BY 1)"""
+               FROM pcodes GROUP BY 1)"""
 
-  /** pqChainSql plus the all-candidates fixed-order per-subspace ADC
-    * score. Shared by the v12 gate and the v12b recall gate. */
-  private val PqAdcSql = pqChainSql("") + s""",
-        adc AS (SELECT l.vec_id AS qid, c.vec_id AS cid,
-                       ${pqAdcTermsSql("c", "l")} AS score
-                FROM codes c
-                JOIN d2 l ON l.sub = c.sub AND l.code = c.code
-                WHERE l.vec_id < 20 AND l.vec_id <> c.vec_id
-                GROUP BY 1, 2)"""
-
-  /** In-cell ADC scoring of the probed candidates (adc) — composes
-    * after geoCellsSql (probes, a3) and pqChainSql("p") (pcodes,
-    * pd2). Shared by the v13 gate and the st17 streamed-index gate. */
-  private[graft] def ivfAdcCellSql: String = s"""
+  /** v16/v16b's all-vectors IVFADC+R replay (adc, bq, bc, sl, rr)
+    * after geoCellsSql(qPred = "TRUE") and PqChainSql: in-cell ADC
+    * scores, the top-`r` shortlist on them and its exact cosines. The
+    * corpus-sized query side is a different plan from retrieveSql's. */
+  private def batchAdcRerankSql(r: Int): String = s"""
         adc AS (SELECT p.qid, g.g_cid AS cid,
                        ${pqAdcTermsSql("pc", "l")} AS score
                 FROM probes p
@@ -1425,133 +1093,87 @@ object VectorOps {
                 JOIN pcodes pc ON pc.vec_id = g.g_cid
                 JOIN pd2 l ON l.vec_id = p.qid AND l.sub = pc.sub
                           AND l.code = pc.code
-                GROUP BY 1, 2)"""
-
-  /** The +R stage (sl, rr): ADC top-`r` shortlist on the rounded
-    * score, exact-cosine re-rank of the shortlist only. qT/cT name
-    * CTEs exposing (qid, qe) / (cid, ce). Shared by v13 and st17. */
-  private[graft] def ivfAdcRerankSql(r: Int, qT: String, cT: String)
-      : String = s"""
+                GROUP BY 1, 2),
+        bq AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
+               FROM embeddings),
+        bc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce
+               FROM embeddings),${"\n        "}
         sl AS (SELECT qid, cid
                FROM (SELECT *, row_number() OVER (PARTITION BY qid
                        ORDER BY score DESC, cid ASC) rn FROM adc)
                WHERE rn <= $r),
         rr AS (SELECT s.qid, s.cid,
-                      list_dot_product($qT.qe, $cT.ce)
-                      / (sqrt(list_dot_product($qT.qe, $qT.qe))
-                         * sqrt(list_dot_product($cT.ce, $cT.ce))) AS cos
-               FROM sl s JOIN $qT ON $qT.qid = s.qid
-               JOIN $cT ON $cT.cid = s.cid)"""
+                      list_dot_product(bq.qe, bc.ce)
+                      / (sqrt(list_dot_product(bq.qe, bq.qe))
+                         * sqrt(list_dot_product(bc.ce, bc.ce))) AS cos
+               FROM sl s JOIN bq ON bq.qid = s.qid
+               JOIN bc ON bc.cid = s.cid)"""
+
+  /** v13's IVFADC+R operating point, also served off the streamed lake
+    * (st17): route 2 cells, ADC top-25, exact re-rank. */
+  private[graft] val IvfAdcR =
+    Retrieve(Cells(2), scorer = Adc(), rerank = Some(25))
+
+  /** v01/v04's exact top-5 output columns. */
+  private val KnnSqlCols =
+    "qid AS query_id, rank, cid AS neighbor_id, round(score, 4) AS cosine"
+
+  /** A serving gate's oracle: `r` replayed as `ann` after `upstream`
+    * (the artifact replays), `cols` selected from it. */
+  private[queries] def serveSql(r: Retrieve, cols: String,
+      upstream: String*): String = s"""
+        WITH ${(upstream :+ retrieveSql(r, "ann")).mkString(",\n        ")}
+        SELECT $cols
+        FROM ann"""
+
+  /** A serving gate: one [[Retrieve]] configuration, its rows selected
+    * as `cols` by the engine and as `sqlCols` by the oracle. */
+  private def serveQ(name: String, doc: String, r: Retrieve,
+      cols: Seq[Column], sqlCols: String, upstream: String*): Q =
+    Q(name, doc, (s, d) => r.serve(s, d).select(cols: _*),
+      Some(serveSql(r, sqlCols, upstream: _*)))
+
+  /** A recall gate: `ann`'s top-3 graded against `truth`'s by recallOf,
+    * and by RecallTailSql over their replays. */
+  private def recallQ(name: String, doc: String, truth: Retrieve,
+      ann: Retrieve, upstream: String*): Q =
+    Q(name, doc, (s, d) => recallOf(truth.serve(s, d), ann.serve(s, d)),
+      Some(s"""
+        WITH ${(upstream ++ Seq(retrieveSql(truth, "truth"),
+          retrieveSql(ann, "ann"))).mkString(",\n        ")},
+        $RecallTailSql"""))
 
   def defs: Seq[Q] = Seq(
 
     // ----- exact brute-force top-k --------------------------------------------
-    Q(
+    serveQ(
       "v01_knn_bruteforce",
       "Brute-force cosine top-5 neighbors for a broadcast query set " +
         "(vec_id < 20): one corpus scan x |queries|, ranked per query " +
         "with a deterministic id tiebreak. The exact baseline every ANN " +
         "variant is measured against.",
-      (s, d) => {
-        val e = Tables.embeddings(s, d)
-        // norms ride the row (the v14/bruteTruth convention): same
-        // doubles, one dot per pair instead of three
-        val q = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            sqrt(dot("embedding", "embedding")).as("nq"))
-        val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-          sqrt(dot("embedding", "embedding")).as("nc"))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("cid").asc)
-        c.join(broadcast(q), col("qid") =!= col("cid"))
-          .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select(col("qid").as("query_id"), col("rank"),
-            col("cid").as("neighbor_id"), round(col("cos"), 4).as("cosine"))
-      },
-      Some("""
-        WITH q AS (SELECT vec_id qid, embedding::DOUBLE[] qe FROM embeddings WHERE vec_id < 20),
-        c AS (SELECT vec_id cid, embedding::DOUBLE[] ce FROM embeddings),
-        s AS (SELECT qid, cid, list_dot_product(qe, ce)
-                     / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ce, ce))) AS cos
-              FROM q, c WHERE qid <> cid)
-        SELECT qid AS query_id, CAST(rn AS INT) AS rank, cid AS neighbor_id,
-               round(cos, 4) AS cosine
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY cos DESC, cid ASC) rn FROM s)
-        WHERE rn <= 5""")),
+      Retrieve(k = 5),
+      Seq(col("qid").as("query_id"), col("rank"), col("cid").as("neighbor_id"),
+        round(col("score"), 4).as("cosine")),
+      KnnSqlCols),
 
     // ----- IVF-style cluster-probed ANN ----------------------------------------
-    Q(
+    serveQ(
       "v02_ivf_ann",
       "IVF-style ANN: per-label centroids (long-form avg over posexplode), " +
         "assign each query to its max-dot-product centroid, then search " +
         "only that cluster for cosine top-3. At 100 TB the corpus is " +
         "bucketed by cluster id, so a probe reads ~1/n_clusters of the " +
         "data.",
-      (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val long = e.select(col("vec_id"), col("label"),
-            posexplode(col("embedding")))
-          .select(col("vec_id"), col("label"), col("pos"),
-            col("col").cast("double").as("v"))
-        val cent = long.groupBy(col("label").as("c_label"), col("pos"))
-          .agg(avg(col("v")).as("cv"))
-        val qlong = long.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("pos"), col("v").as("qv"))
-        val assignW = Window.partitionBy(col("qid"))
-          .orderBy(col("dot").desc, col("c_label").asc)
-        val probe = qlong.join(cent, Seq("pos"))
-          .groupBy(col("qid"), col("c_label"))
-          .agg(sum(col("qv") * col("cv")).as("dot"))
-          .withColumn("rn", row_number().over(assignW))
-          .filter(col("rn") === 1)
-          .select(col("qid"), col("c_label").as("probe_label"))
-        val q = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        val c = e.select(col("vec_id").as("cid"), col("label").as("c_lab"),
-          col("embedding").as("ce"))
-        val rankW = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("cid").asc)
-        graft.plans.CosineSimilarity.register(s)
-        c.join(broadcast(probe.join(q, Seq("qid"))),
-            col("c_lab") === col("probe_label") && col("cid") =!= col("qid"))
-          .withColumn("cos", expr("cosine_sim(qe, ce)"))
-          .withColumn("rank", row_number().over(rankW))
-          .filter(col("rank") <= 3)
-          .select(col("qid").as("query_id"), col("probe_label"),
-            col("rank"), col("cid").as("neighbor_id"),
-            round(col("cos"), 4).as("cosine"))
-      },
-      Some("""
-        WITH long AS (SELECT vec_id, label, unnest(embedding)::DOUBLE AS v,
-                             unnest(range(len(embedding))) AS pos
-                      FROM embeddings),
-        cent AS (SELECT label AS c_label, pos, avg(v) AS cv
-                 FROM long GROUP BY 1, 2),
-        qlong AS (SELECT vec_id AS qid, pos, v AS qv FROM long WHERE vec_id < 20),
-        assign AS (SELECT qid, c_label, sum(qv * cv) AS dot
-                   FROM qlong JOIN cent USING (pos) GROUP BY 1, 2),
-        probe AS (SELECT qid, c_label AS probe_label
-                  FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                          ORDER BY dot DESC, c_label ASC) rn FROM assign)
-                  WHERE rn = 1),
-        q AS (SELECT vec_id qid, embedding::DOUBLE[] qe FROM embeddings WHERE vec_id < 20),
-        c AS (SELECT vec_id cid, label c_lab, embedding::DOUBLE[] ce FROM embeddings),
-        s AS (SELECT p.qid, p.probe_label, c.cid,
-                     list_dot_product(q.qe, c.ce)
-                     / (sqrt(list_dot_product(q.qe, q.qe)) * sqrt(list_dot_product(c.ce, c.ce))) AS cos
-              FROM probe p JOIN q ON p.qid = q.qid
-              JOIN c ON c.c_lab = p.probe_label AND c.cid <> p.qid)
-        SELECT qid AS query_id, probe_label, CAST(rn AS INT) AS rank,
-               cid AS neighbor_id, round(cos, 4) AS cosine
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY cos DESC, cid ASC) rn FROM s)
-        WHERE rn <= 3""")),
+      Retrieve(Label(1)),
+      Seq(col("qid").as("query_id"), col("route").as("probe_label"),
+        col("rank"), col("cid").as("neighbor_id"),
+        round(col("score"), 4).as("cosine")),
+      "qid AS query_id, route AS probe_label, rank, cid AS neighbor_id, " +
+        "round(score, 4) AS cosine"),
 
     // ----- ANN recall@k vs exact ground truth -----------------------------------
-    Q(
+    recallQ(
       "v02b_ann_recall",
       "Recall@3 of the v02 IVF probe vs the exact brute-force top-3 - " +
         "the number a user actually tunes nprobe against (v02 " +
@@ -1569,14 +1191,10 @@ object VectorOps {
         "nprobe=n_clusters degenerates to v01's exact scan. Scale: " +
         "both sides are top-3-per-query frames (query-set-sized), so " +
         "the recall join is broadcast-sized regardless of corpus size.",
-      (s, d) => recallOf(bruteTruth(s, d), labelAnn(s, d, nprobe = 1)),
-      Some(s"""
-        WITH $TruthSql,
-        ${labelAnnSql(nprobe = 1)},
-        $RecallTailSql""")),
+      Truth, Retrieve(Label(1))),
 
     // ----- multi-probe recall: the nprobe knob demonstrated ----------------------
-    Q(
+    recallQ(
       "v02c_ann_recall_multiprobe",
       "v02b's recall gate at nprobe=2 - the tradeoff made concrete: " +
         "each query searches its TWO nearest centroids' partitions " +
@@ -1588,16 +1206,12 @@ object VectorOps {
         "probe set is rn <= 2 of the same deterministic (dot desc, " +
         "label asc) centroid ranking; truth, ANN ranking and the " +
         "exact-intersection recall join are the shared gate " +
-        "machinery (recallOf/labelAnn - one copy, v02b the other " +
-        "caller).",
-      (s, d) => recallOf(bruteTruth(s, d), labelAnn(s, d, nprobe = 2)),
-      Some(s"""
-        WITH $TruthSql,
-        ${labelAnnSql(nprobe = 2)},
-        $RecallTailSql""")),
+        "machinery (Retrieve's Label route and recallOf, v02b the " +
+        "other caller).",
+      Truth, Retrieve(Label(2))),
 
     // ----- geometric IVF: KMeans cells as the coarse quantizer -------------------
-    Q(
+    recallQ(
       "v09_ivf_geo_recall",
       "Geometric IVF recall@3 (the production fix v02b/v02c's measured " +
         "4/60-13/60 recall names): coarse cells are v05d's CONVERGED " +
@@ -1627,14 +1241,9 @@ object VectorOps {
         "chain, KmeansSql.UpToCent2) plus assignment, probe and " +
         "recall in SQL - the hash matches only if the END-TO-END " +
         "index build + probe pipeline agrees cross-engine.",
-      (s, d) => recallOf(bruteTruth(s, d), geoAnn(s, d, nprobe = 1)),
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        $TruthSql,
-        ${geoAnnSql(nprobe = 1)},
-        $RecallTailSql""")),
+      Truth, Retrieve(Cells(1)), KmeansSql.UpToCent2),
 
-    Q(
+    recallQ(
       "v09b_ivf_geo_recall_multiprobe",
       "v09 at nprobe=2 (33/60 measured vs v02c's 13/60 at the same " +
         "probe budget) - the recall/scan-fraction curve of a real IVF " +
@@ -1643,13 +1252,9 @@ object VectorOps {
         "nearest cells hold most true neighbors, where the label " +
         "scheme's near-linear curve showed its cells carried no " +
         "locality at all. Shares every stage with v09 " +
-        "(geoAnn/recallOf + the KmeansSql oracle chain).",
-      (s, d) => recallOf(bruteTruth(s, d), geoAnn(s, d, nprobe = 2)),
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        $TruthSql,
-        ${geoAnnSql(nprobe = 2)},
-        $RecallTailSql""")),
+        "(Retrieve's Cells route, recallOf and the KmeansSql oracle " +
+        "chain).",
+      Truth, Retrieve(Cells(2)), KmeansSql.UpToCent2),
 
     // ----- codegen'd Catalyst expression variant ---------------------------------
     Q(
@@ -1675,17 +1280,7 @@ object VectorOps {
           .select(col("qid").as("query_id"), col("rank"),
             col("cid").as("neighbor_id"), round(col("cos"), 4).as("cosine"))
       },
-      Some("""
-        WITH q AS (SELECT vec_id qid, embedding::DOUBLE[] qe FROM embeddings WHERE vec_id < 20),
-        c AS (SELECT vec_id cid, embedding::DOUBLE[] ce FROM embeddings),
-        s AS (SELECT qid, cid, list_dot_product(qe, ce)
-                     / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ce, ce))) AS cos
-              FROM q, c WHERE qid <> cid)
-        SELECT qid AS query_id, CAST(rn AS INT) AS rank, cid AS neighbor_id,
-               round(cos, 4) AS cosine
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY cos DESC, cid ASC) rn FROM s)
-        WHERE rn <= 5""")),
+      Some(serveSql(Retrieve(k = 5), KnnSqlCols))),
 
     // ----- IVF index build (k-means) ---------------------------------------------
     Q(
@@ -1924,7 +1519,7 @@ object VectorOps {
         GROUP BY 1""")),
 
     // ----- IVF + int8 quantized scoring (the IVF-PQ serving shape) --------------
-    Q(
+    serveQ(
       "v08_ivf_pq",
       "IVF probe with int8 quantized scoring (the IVF-PQ serving " +
         "pattern, scalar-quantization flavor: coarse centroids route " +
@@ -1936,88 +1531,15 @@ object VectorOps {
         "are bit-identical cross-engine; at scale the scored payload " +
         "is a quarter of the float corpus and the probe reads " +
         "~1/n_clusters of it.",
-      (s, d) => {
-        val e = Tables.embeddings(s, d)
-        // v06's quantization: per-vector absmax scale, q in [-127, 127]
-        val quant = e.select(col("vec_id"), col("label"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("de"))
-          .select(col("vec_id"), col("label"),
-            expr("greatest(array_max(transform(de, x -> abs(x))), 1e-30d) / 127.0d")
-              .as("scale"),
-            col("de"))
-          .select(col("vec_id"), col("label"), col("scale"),
-            expr("transform(de, x -> CAST(least(greatest(floor(x / scale + 0.5d), " +
-              "-127.0d), 127.0d) AS BIGINT))").as("q"))
-        // v02's float coarse probe: per-label centroids, argmax by dot
-        val long = e.select(col("vec_id"), col("label"),
-            posexplode(col("embedding")))
-          .select(col("vec_id"), col("label"), col("pos"),
-            col("col").cast("double").as("v"))
-        val cent = long.groupBy(col("label").as("c_label"), col("pos"))
-          .agg(avg(col("v")).as("cv"))
-        val qlong = long.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("pos"), col("v").as("qv"))
-        val assignW = Window.partitionBy(col("qid"))
-          .orderBy(col("dot").desc, col("c_label").asc)
-        val probe = qlong.join(cent, Seq("pos"))
-          .groupBy(col("qid"), col("c_label"))
-          .agg(sum(col("qv") * col("cv")).as("dot"))
-          .withColumn("rn", row_number().over(assignW))
-          .filter(col("rn") === 1)
-          .select(col("qid"), col("c_label").as("probe_label"))
-        val qq = quant.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("scale").as("q_scale"),
-            col("q").as("qa"))
-        val cq = quant.select(col("vec_id").as("cid"), col("label").as("c_lab"),
-          col("scale").as("c_scale"), col("q").as("qb"))
-        val rankW = Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("cid").asc)
-        cq.join(broadcast(probe.join(qq, Seq("qid"))),
-            col("c_lab") === col("probe_label") && col("cid") =!= col("qid"))
-          .withColumn("idot",
-            expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-          .withColumn("score", col("idot") * col("q_scale") * col("c_scale"))
-          .withColumn("rank", row_number().over(rankW))
-          .filter(col("rank") <= 3)
-          .select(col("qid").as("query_id"), col("probe_label"), col("rank"),
-            col("cid").as("neighbor_id"), col("idot"),
-            round(col("score"), 6).as("approx_ip"))
-      },
-      Some(s"""
-        WITH $QuantSql,
-        long AS (SELECT vec_id, label, unnest(embedding)::DOUBLE AS v,
-                        unnest(range(len(embedding))) AS pos
-                 FROM embeddings),
-        cent AS (SELECT label AS c_label, pos, avg(v) AS cv
-                 FROM long GROUP BY 1, 2),
-        qlong AS (SELECT vec_id AS qid, pos, v AS qv FROM long WHERE vec_id < 20),
-        assign AS (SELECT qid, c_label, sum(qv * cv) AS dot
-                   FROM qlong JOIN cent USING (pos) GROUP BY 1, 2),
-        probe AS (SELECT qid, c_label AS probe_label
-                  FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                          ORDER BY dot DESC, c_label ASC) rn FROM assign)
-                  WHERE rn = 1),
-        qq AS (SELECT vec_id AS qid, scale AS q_scale, q AS qa
-               FROM quant WHERE vec_id < 20),
-        cq AS (SELECT vec_id AS cid, label AS c_lab, scale AS c_scale, q AS qb
-               FROM quant),
-        cand AS (SELECT p.qid, p.probe_label, c.cid,
-                        CAST(list_sum(list_transform(range(len(q.qa)), i ->
-                          q.qa[i + 1] * c.qb[i + 1])) AS BIGINT) AS idot,
-                        q.q_scale, c.c_scale
-                 FROM probe p JOIN qq q ON p.qid = q.qid
-                 JOIN cq c ON c.c_lab = p.probe_label AND c.cid <> p.qid),
-        scored AS (SELECT qid, probe_label, cid, idot,
-                          idot * q_scale * c_scale AS score
-                   FROM cand)
-        SELECT qid AS query_id, probe_label, CAST(rn AS INT) AS rank,
-               cid AS neighbor_id, idot, round(score, 6) AS approx_ip
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY score DESC, cid ASC) rn FROM scored)
-        WHERE rn <= 3""")),
+      Retrieve(Label(1), scorer = Int8),
+      Seq(col("qid").as("query_id"), col("route").as("probe_label"),
+        col("rank"), col("cid").as("neighbor_id"), col("idot"),
+        round(col("score"), 6).as("approx_ip")),
+      "qid AS query_id, route AS probe_label, rank, cid AS neighbor_id, " +
+        "idot, round(score, 6) AS approx_ip"),
 
     // ----- IVF-PQ serving on GEOMETRIC cells (both production fixes composed) ----
-    Q(
+    serveQ(
       "v08b_ivf_pq_geo",
       "The production ANN serving shape with BOTH fixes composed: " +
         "v08's int8 quantized scoring routed by v09's geometric KMeans " +
@@ -2029,76 +1551,16 @@ object VectorOps {
         "codes; the integer dot is exact in both engines, making " +
         "scores bit-identical cross-engine. The oracle replays the " +
         "whole thing: 2-Lloyd-iteration centroid build (KmeansSql), " +
-        "quantization (QuantSql), assignment, probe, quantized " +
+        "quantization (retrieveSql's Int8 scorer), assignment, probe, " +
+        "quantized " +
         "scoring.",
-      (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val cent = TrainedIndex.centroids(s, d, k = 8)
-        def quantized(df: org.apache.spark.sql.DataFrame) = df
-          .withColumn("de", expr("transform(__v, x -> CAST(x AS DOUBLE))"))
-          .withColumn("__scale",
-            expr("greatest(array_max(transform(de, x -> abs(x))), 1e-30d) / 127.0d"))
-          .withColumn("__q", expr(
-            "transform(de, x -> CAST(least(greatest(floor(x / __scale + 0.5d), " +
-              "-127.0d), 127.0d) AS BIGINT))"))
-        val corpus = quantized(
-          e.select(col("vec_id").as("cid"), col("embedding").as("__v"))
-            .filter(col("cid").isNotNull)
-            .withColumn("cell",
-              -element_at(nearestCells(cent, "__v", 1), 1).getField("nc")))
-          .select(col("cid"), col("cell"),
-            col("__scale").as("c_scale"), col("__q").as("qb"))
-        val probes = quantized(
-          e.filter(col("vec_id") < 20)
-            .select(col("vec_id").as("qid"), col("embedding").as("__v"))
-            .withColumn("pc", explode(nearestCells(cent, "__v", 1)))
-            .withColumn("cell", -col("pc.nc")))
-          .select(col("qid"), col("cell"),
-            col("__scale").as("q_scale"), col("__q").as("qa"))
-        val rankW = Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("cid").asc)
-        corpus.join(broadcast(probes), Seq("cell"))
-          .filter(col("cid") =!= col("qid"))
-          .withColumn("idot",
-            expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
-          .withColumn("score", col("idot") * col("q_scale") * col("c_scale"))
-          .withColumn("rank", row_number().over(rankW))
-          .filter(col("rank") <= 3)
-          .select(col("qid").as("query_id"), col("cell"), col("rank"),
-            col("cid").as("neighbor_id"), col("idot"),
-            round(col("score"), 6).as("approx_ip"))
-      },
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        $QuantSql,
-        d3g AS (SELECT l.vec_id, c2.cluster, sum(l.v * c2.cv) AS dot
-                FROM long l JOIN cent2 c2 USING (pos) GROUP BY 1, 2),
-        a3 AS (SELECT vec_id, cluster AS cell FROM (
-                 SELECT vec_id, cluster,
-                        row_number() OVER (PARTITION BY vec_id
-                          ORDER BY dot DESC, cluster ASC) AS rn
-                 FROM d3g) WHERE rn = 1),
-        probes AS (SELECT vec_id AS qid, cluster AS cell FROM (
-                 SELECT vec_id, cluster,
-                        row_number() OVER (PARTITION BY vec_id
-                          ORDER BY dot DESC, cluster ASC) AS rn
-                 FROM d3g WHERE vec_id < 20) WHERE rn <= 1),
-        cand AS (SELECT p.qid, p.cell, a.vec_id AS cid,
-                        CAST(list_sum(list_transform(range(len(qq.q)), i ->
-                          qq.q[i + 1] * cq.q[i + 1])) AS BIGINT) AS idot,
-                        qq.scale AS q_scale, cq.scale AS c_scale
-                 FROM probes p
-                 JOIN a3 a ON a.cell = p.cell AND a.vec_id <> p.qid
-                 JOIN quant qq ON qq.vec_id = p.qid
-                 JOIN quant cq ON cq.vec_id = a.vec_id),
-        scored AS (SELECT qid, cell, cid, idot,
-                          idot * q_scale * c_scale AS score
-                   FROM cand)
-        SELECT qid AS query_id, cell, CAST(rn AS INT) AS rank,
-               cid AS neighbor_id, idot, round(score, 6) AS approx_ip
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY score DESC, cid ASC) rn FROM scored)
-        WHERE rn <= 3""")),
+      Retrieve(Cells(1), scorer = Int8),
+      Seq(col("qid").as("query_id"), col("route").as("cell"), col("rank"),
+        col("cid").as("neighbor_id"), col("idot"),
+        round(col("score"), 6).as("approx_ip")),
+      "qid AS query_id, route AS cell, rank, cid AS neighbor_id, idot, " +
+        "round(score, 6) AS approx_ip",
+      KmeansSql.UpToCent2),
 
     // ----- hybrid retrieval: reciprocal-rank fusion ------------------------------
     Q(
@@ -2302,7 +1764,7 @@ object VectorOps {
         UNION ALL SELECT 5, cid, round(mmr, 6) FROM p5""")),
 
     // ----- true product quantization + ADC serving -------------------------------
-    Q(
+    serveQ(
       "v12_pq_adc",
       "TRUE product quantization with asymmetric distance computation " +
         "(Jegou et al. TPAMI'11 - the codebook form v08's scalar " +
@@ -2330,29 +1792,23 @@ object VectorOps {
         "returned neighbor, so the hash gates the ENCODING, not just " +
         "the ranking. Oracle replays seeds, the per-subspace Lloyd " +
         "update, Euclidean encode, LUT and ADC relationally.",
-      (s, d) => pqAdcTop3(s, d)
-        .select(col("qid").as("query_id"), col("rank"),
-          col("cid").as("neighbor_id"), col("code_key"),
-          round(col("score").cast("double") / lit(1e6), 4)
-            .as("approx_ip")),
-      Some(s"""
-        WITH $PqAdcSql
-        SELECT a.qid AS query_id, CAST(a.rn AS INT) AS rank,
-               a.cid AS neighbor_id, k.code_key,
-               round(CAST(a.score AS DOUBLE) / 1000000, 4) AS approx_ip
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY score DESC, cid ASC) rn FROM adc) a
-        JOIN ck k ON k.vec_id = a.cid
-        WHERE a.rn <= 3""")),
+      Retrieve(scorer = Adc()),
+      Seq(col("qid").as("query_id"), col("rank"),
+        col("cid").as("neighbor_id"), col("code_key"),
+        round(col("score").cast("double") / lit(1e6), 4).as("approx_ip")),
+      "qid AS query_id, rank, cid AS neighbor_id, code_key, " +
+        "round(CAST(score AS DOUBLE) / 1000000, 4) AS approx_ip",
+      PqChainSql),
 
-    Q(
+    recallQ(
       "v12b_pq_recall",
       "Recall@3 of the v12 PQ/ADC probe vs the exact brute-force " +
         "top-3 - the compression-loss number a user tunes (m, k) " +
         "against, completing the family symmetry: every ANN tier has " +
         "a measured recall gate (v02b label cells, v09 geometric " +
         "cells, v12b quantized codes). Same exact integer-intersection " +
-        "machinery (recallOf/bruteTruth - no float thresholds in the " +
+        "machinery (recallOf over Retrieve's exact truth - no float " +
+        "thresholds in the " +
         "comparison). MEASURED at the gate SF: full-scan ADC-only " +
         "recall@3 = 12/60 (and converged per-subspace Lloyd only " +
         "reaches ~18/60 - tools.IvfPqDebug, re-runnable from commit " +
@@ -2363,20 +1819,11 @@ object VectorOps {
         "re-ranks an ADC shortlist with exact vectors (v13: 30/60 at " +
         "nprobe=2/R=25, within 3 hits of exact in-cell scoring at " +
         "1/5 the full-vector touches). The oracle replays the whole " +
-        "codebook build + encode + LUT + ADC chain (PqAdcSql, one " +
+        "codebook build + encode + LUT + ADC chain (PqChainSql, one " +
         "copy with v12) before the recall join.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        pqAdcTop3(s, d).select(col("qid"), col("cid"))),
-      Some(s"""
-        WITH $PqAdcSql,
-        $TruthSql,
-        ann AS (SELECT qid, cid
-                FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                        ORDER BY score DESC, cid ASC) rn FROM adc)
-                WHERE rn <= 3),
-        $RecallTailSql""")),
+      Truth, Retrieve(scorer = Adc()), PqChainSql),
 
-    Q(
+    recallQ(
       "v13_ivf_pq_recall",
       "IVFADC+R fused serving (Jegou et al. TPAMI'11 SV-VI - the " +
         "production composition the v09/v12 pair sets up), three " +
@@ -2402,22 +1849,9 @@ object VectorOps {
         "to-end (KmeansSql.UpToCent2 cell chain + the p-prefixed PQ " +
         "chain) plus routing, in-cell ADC shortlist, exact re-rank " +
         "and the recall join.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        ivfAdcRerank(s, d, nprobe = 2, r = 25)),
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        ${geoCellsSql(nprobe = 2)},
-        ${pqChainSql("p")},
-        $ivfAdcCellSql,
-        $TruthSql,
-        ${ivfAdcRerankSql(r = 25, qT = "q", cT = "c")},
-        ann AS (SELECT qid, cid
-                FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                        ORDER BY cos DESC, cid ASC) rn FROM rr)
-                WHERE rn <= 3),
-        $RecallTailSql""")),
+      Truth, IvfAdcR, KmeansSql.UpToCent2, PqChainSql),
 
-    Q(
+    recallQ(
       "v13b_ivf_pq_recall_scaled",
       "v13 with the R~nprobe coupling applied (nprobe=3, R=50): a " +
         "FIXED shortlist caps recall as the candidate pool grows - " +
@@ -2427,23 +1861,11 @@ object VectorOps {
         "39/60, vs 45/60 for v09-style exact scoring of the same 3 " +
         "cells - 87% of the exact in-cell recall while touching 50 " +
         "full vectors per query instead of ~190 (tools.IvfPqDebug " +
-        "at commit c8a8826 prints the whole (nprobe, R) sweep). Shares every stage " +
-        "with v13 (ivfAdcRerank + the KMeans/PQ/ADC/re-rank CTE " +
-        "helpers); only the operating point differs.",
-      (s, d) => recallOf(bruteTruth(s, d),
-        ivfAdcRerank(s, d, nprobe = 3, r = 50)),
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        ${geoCellsSql(nprobe = 3)},
-        ${pqChainSql("p")},
-        $ivfAdcCellSql,
-        $TruthSql,
-        ${ivfAdcRerankSql(r = 50, qT = "q", cT = "c")},
-        ann AS (SELECT qid, cid
-                FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                        ORDER BY cos DESC, cid ASC) rn FROM rr)
-                WHERE rn <= 3),
-        $RecallTailSql""")),
+        "at commit c8a8826 prints the whole (nprobe, R) sweep). v13's " +
+        "Retrieve configuration and retrieveSql replay; only the " +
+        "operating point differs.",
+      Truth, IvfAdcR.copy(route = Cells(3), rerank = Some(50)),
+      KmeansSql.UpToCent2, PqChainSql),
 
     Q(
       "v14_knn_graph",
@@ -2559,23 +1981,12 @@ object VectorOps {
           Some(TrainedIndex.codebook(s, d)))
         val cent = graft.sources.IndexArtifacts.loadCentroids(s, dir.toString)
         val cb = graft.sources.IndexArtifacts.loadCodebook(s, dir.toString).get
-        val sl = ivfAdcRerankWith(s, d, nprobe = 2, r = 10, cent, cb)
-        sl.select(col("qid"), col("cid"))
+        Retrieve(Cells(2, cent = Some(cent)),
+            scorer = Adc(Some(cb)), rerank = Some(10))
+          .serve(s, d).select(col("qid"), col("cid"))
       },
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        ${geoCellsSql(nprobe = 2)},
-        ${pqChainSql("p")},
-        $ivfAdcCellSql,
-        qq AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
-               FROM embeddings WHERE vec_id < 20),
-        cc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce
-               FROM embeddings),
-        ${ivfAdcRerankSql(r = 10, qT = "qq", cT = "cc")}
-        SELECT qid, cid
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY cos DESC, cid ASC) rn FROM rr)
-        WHERE rn <= 3""")),
+      Some(serveSql(IvfAdcR.copy(rerank = Some(10)), "qid, cid",
+        KmeansSql.UpToCent2, PqChainSql))),
 
     Q(
       "v16_batch_ann_serving",
@@ -2599,13 +2010,8 @@ object VectorOps {
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
         ${geoCellsSql(nprobe = 2, qPred = "TRUE")},
-        ${pqChainSql("p")},
-        $ivfAdcCellSql,
-        bq AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
-               FROM embeddings),
-        bc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce
-               FROM embeddings),
-        ${ivfAdcRerankSql(r = 25, qT = "bq", cT = "bc")}
+        $PqChainSql,
+        ${batchAdcRerankSql(r = 25)}
         SELECT qid AS query_id, CAST(rn AS INT) AS rank,
                cid AS neighbor_id, round(cos, 4) AS cosine
         FROM (SELECT *, row_number() OVER (PARTITION BY qid
@@ -2632,13 +2038,8 @@ object VectorOps {
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         ${geoCellsSql(nprobe = 2, qPred = "TRUE")},
-        ${pqChainSql("p")},
-        $ivfAdcCellSql,
-        bq AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
-               FROM embeddings),
-        bc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce
-               FROM embeddings),
-        ${ivfAdcRerankSql(r = 25, qT = "bq", cT = "bc")}
+        $PqChainSql,
+        ${batchAdcRerankSql(r = 25)}
         SELECT qid AS query_id, CAST(rn AS INT) AS rank,
                cid AS neighbor_id, round(cos, 4) AS cosine
         FROM (SELECT *, row_number() OVER (PARTITION BY qid
@@ -2683,7 +2084,7 @@ object VectorOps {
         Walk(Walk.Exact, beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 2)},
         ${hubGraphSql(degree = 16)},
         ${walkSql(adc = false, beam = 16, maxHops = 3)},
@@ -2713,7 +2114,7 @@ object VectorOps {
         Walk(Walk.Exact, beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 2)},
         ${hubGraphSql(degree = 16)},
         ${walkSql(adc = false, beam = 16, maxHops = 3)},
@@ -2744,7 +2145,7 @@ object VectorOps {
         Walk(Walk.Exact, beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 8)},
         ${hubGraphSql(degree = 16)},
         ${walkSql(adc = false, beam = 16, maxHops = 3)},
@@ -2783,7 +2184,7 @@ object VectorOps {
           Walk.Refined(kCells = 25, refine = 8, shortlist = 16))),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 16)},
         ${hubGraphSql(degree = 16)},
         ${walkSql(adc = false, beam = 16, maxHops = 3,
@@ -2819,10 +2220,10 @@ object VectorOps {
         Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 16, maxHops = 3)),
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 2)},
         ${hubGraphSql(degree = 16)},
-        ${pqChainSql("p")},
+        $PqChainSql,
         $adcAllSql,
         ${walkSql(adc = true, beam = 16, maxHops = 3)},
         $RecallTailSql""")),
@@ -2871,10 +2272,10 @@ object VectorOps {
       },
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 2)},
         ${hubGraphSql(degree = 16)},
-        ${pqChainSql("p")},
+        $PqChainSql,
         $adcAllSql,
         ${walkSql(adc = true, beam = 32, maxHops = 3)},
         $RecallTailSql""")),
@@ -2910,10 +2311,10 @@ object VectorOps {
           Walk.Refined(kCells = 25, refine = 8, shortlist = 128))),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 16)},
         ${hubGraphSql(degree = 16)},
-        ${pqChainSql("p")},
+        $PqChainSql,
         $adcAllSql,
         ${walkSql(adc = true, beam = 16, maxHops = 3,
           refine = Some((8, "128")))},
@@ -2952,10 +2353,10 @@ object VectorOps {
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 16)},
         ${hubGraphSql(degree = 16)},
-        ${pqChainSql("p")},
+        $PqChainSql,
         $adcAllSql,
         ${walkSql(adc = true, beam = 16, maxHops = 3,
           refine = Some((8, scaledShortlistSql(refine = 8, kCells = 25))))},
@@ -3004,7 +2405,7 @@ object VectorOps {
         Walk(Walk.Exact, beam = 64)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 16)},
         ${vamanaGraphSql(degree = 16)},
         ${walkSql(adc = false, beam = 64)},
@@ -3043,10 +2444,10 @@ object VectorOps {
         Walk(Walk.Adc(TrainedIndex.codes(s, d)), beam = 64)),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 16)},
         ${vamanaGraphSql(degree = 16)},
-        ${pqChainSql("p")},
+        $PqChainSql,
         $adcAllSql,
         ${walkSql(adc = true, beam = 64)},
         $RecallTailSql""")),
@@ -3077,14 +2478,14 @@ object VectorOps {
           tail = Walk.Refined(kCells = 25, refine = 8, shortlist = 64))),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        $TruthSql,
+        ${retrieveSql(Truth, "truth")},
         ${geoCellsSql(nprobe = 16)},
         ${vamanaGraphSql(degree = 16)},
         ${walkSql(adc = false, beam = 64,
           refine = Some((8, "64")))},
         $RecallTailSql""")),
 
-    Q(
+    recallQ(
       "v18_filtered_ann",
       "Metadata-FILTERED ANN serving, pre-filter form (the hard " +
         "production case every vector store special-cases: the query " +
@@ -3103,24 +2504,11 @@ object VectorOps {
         "the IDENTICAL scan budget — the pair is the measured case " +
         "for why filtered search must push predicates below the " +
         "rank, not above it.",
-      (s, d) => recallOf(bruteTruthFiltered(s, d),
-        filteredGeoAnn(s, d, nprobe = 2, preFilter = true)),
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        $FilteredTruthSql,
-        ${geoCellsSql(nprobe = 2)},
-        sc18 AS (SELECT p.qid, g.g_cid AS cid, b.cos
-                 FROM probes p
-                 JOIN a3 g ON g.cell = p.cell AND g.g_cid <> p.qid
-                 JOIN bff b ON b.qid = p.qid AND b.cid = g.g_cid
-                 WHERE b.c_lab = b.q_lab),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM sc18)
-               WHERE rn <= 3),
-        $RecallTailSql""")),
+      Retrieve(filter = Pre(SameLabel)),
+      Retrieve(Cells(2), Pre(SameLabel)),
+      KmeansSql.UpToCent2),
 
-    Q(
+    recallQ(
       "v18b_filtered_ann_postfilter",
       "v18's naive twin: rank the UNFILTERED cell top-3 first, then " +
         "drop non-matching rows (the plan a bolted-on WHERE clause " +
@@ -3132,24 +2520,11 @@ object VectorOps {
         "replaces it). Gated deliberately: the pre/post gap is the " +
         "measured justification for v18's plan shape, the way v03b " +
         "gates the fixed-width-LSH failure mode.",
-      (s, d) => recallOf(bruteTruthFiltered(s, d),
-        filteredGeoAnn(s, d, nprobe = 2, preFilter = false)),
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        $FilteredTruthSql,
-        ${geoCellsSql(nprobe = 2)},
-        sc18 AS (SELECT p.qid, g.g_cid AS cid, b.cos,
-                        b.c_lab, b.q_lab
-                 FROM probes p
-                 JOIN a3 g ON g.cell = p.cell AND g.g_cid <> p.qid
-                 JOIN bff b ON b.qid = p.qid AND b.cid = g.g_cid),
-        ann AS (SELECT qid, cid FROM (
-                 SELECT *, row_number() OVER (PARTITION BY qid
-                   ORDER BY cos DESC, cid ASC) rn FROM sc18)
-               WHERE rn <= 3 AND c_lab = q_lab),
-        $RecallTailSql""")),
+      Retrieve(filter = Pre(SameLabel)),
+      Retrieve(Cells(2), Post(SameLabel)),
+      KmeansSql.UpToCent2),
 
-    Q(
+    recallQ(
       "v18c_filtered_ann_rare",
       "Filtered ANN at the RARE-selectivity extreme (VERDICT r12 #6 — " +
         "the regime where the v18 plan choice FLIPS): the query's " +
@@ -3160,37 +2535,22 @@ object VectorOps {
         "so v18's own pre-filter plan collapses (measured via " +
         "tools.FilteredAnnAb; the full selectivity sweep is the " +
         "BENCH_SCALE table). The correct plan INVERTS the index: " +
-        "the predicate becomes the JOIN KEY — queries broadcast-" +
-        "equi-join the corpus on (label, residue), and the exact " +
-        "cosine rank runs over the eligible subset only, no ANN " +
-        "structure consulted. At 100 TB the lake's label/tenant " +
-        "partitioning turns that join into partition-pruned point " +
-        "lookups reading 0.6% of the data — cheaper than any cell " +
-        "probe, and EXACT. The gate grades the equi-join plan " +
-        "against the all-pairs-then-filter truth: hash equality " +
-        "pins that filter-as-join-key below the rank reproduces " +
-        "filter-inside-the-global-rank row for row — the plan-" +
-        "equivalence that makes the flip safe to serve.",
-      (s, d) => recallOf(bruteTruthRare(s, d), rareFilteredExact(s, d)),
-      Some(s"""
-        WITH qr AS (SELECT vec_id qid, label q_lab, vec_id % 16 AS q_res,
-                           embedding::DOUBLE[] qe
-                    FROM embeddings WHERE vec_id < 20),
-        cr AS (SELECT vec_id cid, label c_lab, vec_id % 16 AS c_res,
-                      embedding::DOUBLE[] ce
-               FROM embeddings),
-        bfr AS (SELECT qid, cid,
-                       list_dot_product(qe, ce)
-                       / (sqrt(list_dot_product(qe, qe))
-                          * sqrt(list_dot_product(ce, ce))) AS cos
-                FROM qr, cr
-                WHERE qid <> cid AND c_lab = q_lab AND c_res = q_res),
-        truth AS (SELECT qid, cid
-                  FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                          ORDER BY cos DESC, cid ASC) rn FROM bfr)
-                  WHERE rn <= 3),
-        ann AS (SELECT qid, cid FROM truth),
-        $RecallTailSql"""))
+        "no cell is probed, and the predicate is a Pre filter on " +
+        "the All route — queries broadcast-equi-join the corpus on " +
+        "(label, residue), and the exact cosine rank runs over the " +
+        "eligible subset only. The optimiser supplies the plan-" +
+        "equivalence that makes the flip safe to serve: Catalyst " +
+        "pushes the filter into the broadcast join's condition and " +
+        "extracts (label, residue) as its hash keys, so filter-as-" +
+        "join-key below the rank and filter-inside-the-global-rank " +
+        "are ONE physical plan, and the served top-3 and its graded " +
+        "truth are one configuration. At 100 TB the lake's " +
+        "label/tenant partitioning turns that join into partition-" +
+        "pruned point lookups reading 0.6% of the data — cheaper " +
+        "than any cell probe, and EXACT. The hash pins the served " +
+        "rows against the oracle's all-pairs-then-filter replay.",
+      Retrieve(filter = Pre(SameLabelResidue)),
+      Retrieve(filter = Pre(SameLabelResidue)))
   )
 
   /** Random-hyperplane LSH near-dup pairing at a given code width:

@@ -30,8 +30,9 @@ import graft.sources.Tables
   *    point, so the unroll ends on the engine's final beam.
   *  - TAIL: [[Walk.NoTail]] cuts the final beam to top-3;
   *    [[Walk.Refined]] (v17d/v21) unions the final beam with the
-  *    query's `refine` nearest cells' members, scores the union with
-  *    the walk's scorer, cuts it to `shortlist` and gives it the same
+  *    query's `refine` nearest cells' members ([[Retrieve]]'s Cells
+  *    route stage), scores the union with the walk's scorer, cuts it
+  *    to `shortlist` and gives it the same
   *    top-3 — walk-supplied long-range candidates plus the dense local
   *    neighbourhood greedy descent walks past, at O(sqrt n) scored rows
   *    per query under the k~sqrt(n) cell rule.
@@ -67,8 +68,8 @@ final case class Walk(scorer: Walk.Scorer, beam: Int,
       case NoTail => c.top3(f.df)
       case Refined(kCells, refine, shortlist) =>
         val cands = f.df.select(col("qid"), col("cid"))
-          .union(cellCandidates(s, d,
-            TrainedIndex.centroids(s, d, k = kCells), refine))
+          .union(Retrieve(Retrieve.Cells(refine, kCells)).candidates(s, d)
+            .select(col("qid"), col("cid")))
           .distinct()
         c.top3(topPerQuery(c.score(cands), shortlist))
     }
@@ -219,24 +220,6 @@ object Walk {
       StructField("cid", LongType, nullable = false)))
     s.createDataFrame(java.util.Arrays.asList(
       pairs.toSeq.map(p => Row(p._1, p._2)): _*), schema)
-  }
-
-  /** The query's `refine` nearest cells' MEMBERS as (qid, cid)
-    * candidates — the IVF scan set, map-side assignment against
-    * centroid literals on both sides. */
-  private def cellCandidates(s: SparkSession, d: String,
-      cent: Array[Array[Double]], refine: Int): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val asg = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      .withColumn("cell",
-        -element_at(VectorOps.nearestCells(cent, "ce", 1), 1).getField("nc"))
-    val probes = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"),
-        explode(VectorOps.nearestCells(cent, "embedding", refine)).as("pc"))
-      .select(col("qid"), (-col("pc.nc")).as("cell"))
-    asg.join(broadcast(probes), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"))
   }
 
   private def topPerQuery(scored: DataFrame, k: Int): DataFrame =

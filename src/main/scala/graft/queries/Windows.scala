@@ -1038,7 +1038,8 @@ object Windows {
         "literals, so the streamed index is batch-boundary " +
         "independent and the served top-3 must hash-match the " +
         "oracle's ALL-AT-ONCE replay (KMeans chain + p-prefixed PQ " +
-        "chain + in-cell ADC + re-rank - the v13 CTEs, one copy). " +
+        "chain + in-cell ADC + re-rank - v13's configuration, one " +
+        "copy). " +
         "This is the 100-TB serving lake in miniature: hot index " +
         "stores 32-bit codes next to the vectors, probes touch " +
         "vector bytes only for shortlisted rows, compaction never " +
@@ -1056,29 +1057,13 @@ object Windows {
             cent, "vec_id", "embedding", b.toLong, dir.toString, Some(cb))
         }
         graft.streaming.StreamingVectorIndex.compact(s, dir.toString)
-        graft.streaming.StreamingVectorIndex.probePq(
-            s, dir.toString, cent, cb,
-            e.filter(col("vec_id") < 20)
-              .select(col("vec_id"), col("embedding")),
-            "vec_id", "embedding", nprobe = 2, rshort = 25, k = 3)
-          .select(col("qid").as("query_id"), col("rank"),
+        VectorOps.IvfAdcR.copy(corpus = Retrieve.Lake(dir.toString))
+          .serve(s, d).select(col("qid").as("query_id"), col("rank"),
             col("cid").as("neighbor_id"))
       },
-      Some(s"""
-        WITH ${KmeansSql.UpToCent2},
-        ${VectorOps.geoCellsSql(nprobe = 2)},
-        ${VectorOps.pqChainSql("p")},
-        ${VectorOps.ivfAdcCellSql},
-        qq AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
-               FROM embeddings WHERE vec_id < 20),
-        cc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce
-               FROM embeddings),
-        ${VectorOps.ivfAdcRerankSql(r = 25, qT = "qq", cT = "cc")}
-        SELECT qid AS query_id, CAST(rn AS INT) AS rank,
-               cid AS neighbor_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY cos DESC, cid ASC) rn FROM rr)
-        WHERE rn <= 3""")),
+      Some(VectorOps.serveSql(VectorOps.IvfAdcR,
+        "qid AS query_id, rank, cid AS neighbor_id",
+        KmeansSql.UpToCent2, VectorOps.PqChainSql))),
 
     Q(
       "st18_streaming_knn_graph",
@@ -1253,10 +1238,10 @@ object Windows {
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        ${VectorOps.TruthSql},
+        ${VectorOps.retrieveSql(VectorOps.Truth, "truth")},
         ${VectorOps.geoCellsSql(nprobe = 2)},
         ${VectorOps.hubGraphSql(degree = 16)},
-        ${VectorOps.pqChainSql("p")},
+        ${VectorOps.PqChainSql},
         ${VectorOps.adcAllSql},
         ${VectorOps.walkSql(adc = true, beam = 16, maxHops = 3)},
         ${VectorOps.RecallTailSql}""")),
@@ -1301,10 +1286,10 @@ object Windows {
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        ${VectorOps.TruthSql},
+        ${VectorOps.retrieveSql(VectorOps.Truth, "truth")},
         ${VectorOps.geoCellsSql(nprobe = 2)},
         ${VectorOps.hubGraphSql(degree = 16)},
-        ${VectorOps.pqChainSql("p")},
+        ${VectorOps.PqChainSql},
         ${VectorOps.adcAllSql},
         ${VectorOps.walkSql(adc = true, beam = 16, maxHops = 3,
           refine = Some((8, VectorOps.scaledShortlistSql(refine = 8,
@@ -1349,7 +1334,7 @@ object Windows {
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
-        ${VectorOps.TruthSql},
+        ${VectorOps.retrieveSql(VectorOps.Truth, "truth")},
         ${VectorOps.geoCellsSql(nprobe = 16)},
         ${VectorOps.vamanaGraphSql(degree = 16)},
         ${VectorOps.walkSql(adc = false, beam = 64)},

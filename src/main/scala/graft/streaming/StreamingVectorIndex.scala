@@ -55,9 +55,10 @@ object StreamingVectorIndex {
     * encodes to its m PQ codes MAP-SIDE at ingest (c0..c<m-1>
     * columns, VectorOps.pqCodeCol — one copy with the batch encode),
     * so the lake stores the 32-bit serving representation alongside
-    * the raw vector and an ADC probe (probePq) never reads vector
-    * bytes outside its shortlist. Codes are a pure per-row function
-    * of the FIXED codebook, so batch-boundary independence — and the
+    * the raw vector and an ADC serve (graft.queries.Retrieve over a
+    * Lake corpus) never reads vector bytes outside its shortlist.
+    * Codes are a pure per-row function of the FIXED codebook, so
+    * batch-boundary independence — and the
     * st17 gate's hash-match against an all-at-once oracle replay —
     * holds exactly as it does for cell assignment; retraining the
     * codebook is an index rebuild (new dir, atomic pointer swap),
@@ -141,94 +142,6 @@ object StreamingVectorIndex {
     * (`compacted_v<id>`); -1 before the first compaction. */
   def compactedUpTo(dir: String): Long =
     StateMarker.lastApplied(dir, name = "_compacted")
-
-  /** Serve a cosine top-k probe from the streamed index — the v09
-    * probe shape over this index's layout: queries route to their
-    * `nprobe` nearest centroid cells map-side (centroid-literal
-    * argmax, no shuffle), the index is read with a cell filter so
-    * only the probed `cell=` partitions scan (the collect behind the
-    * isin is ≤ #cells rows — centroid-bounded, never corpus-sized),
-    * and candidates rank per query with the (cos desc, id asc)
-    * tiebreak. Spec-pinned to exact parity with the batch-built
-    * geometric IVF (VectorOps.geoAnn) over the same centroids. */
-  def probe(spark: SparkSession, dir: String, cent: Array[Array[Double]],
-      queries: DataFrame, idCol: String, vecCol: String,
-      nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probes = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qe"),
-        explode(
-          graft.queries.VectorOps.nearestCells(cent, vecCol, nprobe))
-          .as("pc"))
-      .select(col("qid"), (-col("pc.nc")).as("cell"), col("qe"))
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0))
-    val idx = readIndex(spark, dir)
-      .filter(col("cell").isin(cells: _*))
-      .select(col(idCol).as("cid"), col(vecCol).as("ce"),
-        col("cell").cast("long").as("cell"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    idx.join(broadcast(probes), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .withColumn("cos", graft.queries.VectorOps.cosine("qe", "ce"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** IVFADC+R serving from the streamed code-bearing index (the v13
-    * tiers over this lake's layout), two PRUNED scans:
-    *  1. SHORTLIST — read only (id, codes) of the probed `cell=`
-    *     partitions (column pruning keeps the wide vector column
-    *     unread) and rank candidates by the per-subspace ADC lookup
-    *     score against query LUT literals; keep the top `rshort`
-    *     per query on the exact integer micro-unit score (the v12
-    *     fixed-point convention — no cross-engine float ties).
-    *  2. RE-RANK — read (id, vector) of the probed partitions joined
-    *     to the broadcast shortlist; exact cosine, top `k`.
-    * This is the read pattern the stored codes buy at 100 TB: vector
-    * bytes are touched for |queries| x rshort rows, never per
-    * candidate. Requires the index to have been built with
-    * applyBatch(codebook = Some(cb)). */
-  def probePq(spark: SparkSession, dir: String,
-      cent: Array[Array[Double]], cb: Array[Array[Array[Double]]],
-      queries: DataFrame, idCol: String, vecCol: String,
-      nprobe: Int, rshort: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.queries.VectorOps
-    val m = VectorOps.PqM
-    val probes = queries
-      .select(col(idCol).as("qid") +: col(vecCol).as("qe") +:
-        explode(VectorOps.nearestCells(cent, col(vecCol), nprobe)).as("pc") +:
-        (0 until m).map(i => VectorOps.pqLutCol(cb, i, vecCol).as(s"l$i")): _*)
-      .select(col("qid") +: col("qe") +: (-col("pc.nc")).as("cell") +:
-        (0 until m).map(i => col(s"l$i")): _*)
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)) // ≤ #cells rows: centroid-bounded
-    val codesIdx = readIndex(spark, dir)
-      .filter(col("cell").isin(cells: _*))
-      .select(col(idCol).as("cid") +: col("cell").cast("long").as("cell") +:
-        (0 until m).map(i => col(s"c$i")): _*)
-    val slW = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    val sl = codesIdx.join(broadcast(probes), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .withColumn("score", VectorOps.pqScoreCol)
-      .withColumn("rn", row_number().over(slW))
-      .filter(col("rn") <= rshort)
-      .select(col("qid"), col("cid"), col("qe"))
-    val vecs = readIndex(spark, dir)
-      .filter(col("cell").isin(cells: _*))
-      .select(col(idCol).as("cid"), col(vecCol).as("ce"))
-    val rW = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    vecs.join(broadcast(sl), Seq("cid"))
-      .withColumn("cos", graft.queries.VectorOps.cosine("qe", "ce"))
-      .withColumn("rank", row_number().over(rW))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("rank"))
-  }
 
   /** The offline OPTIMIZE pass, INCREMENTAL per cell: fold the
     * batches applied since the last compaction into a new

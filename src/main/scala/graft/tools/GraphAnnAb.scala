@@ -53,7 +53,7 @@ object GraphAnnAb {
       .split(",").map(_.trim.toInt).toSeq // 0 = beam; adc+refine only
     val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
-    val truth = VectorOps.bruteTruth(spark, sfDir).localCheckpoint(true)
+    val truth = VectorOps.Truth.serve(spark, sfDir).localCheckpoint(true)
     for (g <- degrees; b <- beams; h <- hopsList; ent <- entriesList;
          ref <- refineList;
          // the shortlist knob only exists on the adc+refine walk —

@@ -208,7 +208,8 @@ class PlanSpec extends SparkSpec {
 
   test("v09 geoAnn assigns cells map-side: the corpus never shuffles " +
       "before the broadcast probe join") {
-    val ann = graft.queries.VectorOps.geoAnn(spark, sf, nprobe = 1)
+    val ann = graft.queries.Retrieve(graft.queries.Retrieve.Cells(1))
+      .serve(spark, sf)
     val p = ann.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     // one BroadcastHashJoin on cell (probes side broadcast), and the
@@ -240,8 +241,7 @@ class PlanSpec extends SparkSpec {
 
   test("v13 IVFADC+R: the corpus never shuffles — every exchange is a " +
       "per-query (qid) rank window") {
-    val rr = graft.queries.VectorOps
-      .ivfAdcRerank(spark, sf, nprobe = 2, r = 25)
+    val rr = graft.queries.VectorOps.IvfAdcR.serve(spark, sf)
     val p = rr.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     // tier 1 (cell route) and tier 2 (ADC shortlist) are map-side

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.Retrieve
 import graft.streaming.{StateMarker, StreamingVectorIndex}
 
 /** Streaming IVF index maintenance: batch-boundary independence
@@ -220,12 +221,10 @@ class StreamingVectorIndexSpec extends SparkSpec {
       }
       // compaction must not change what a probe serves
       StreamingVectorIndex.compact(s, dir)
-      val queries = e.filter(col("vec_id") < 20)
-        .select(col("vec_id"), col("embedding"))
-      val served = StreamingVectorIndex.probe(
-          s, dir, kcent, queries, "vec_id", "embedding", nprobe = 1, k = 3)
+      val served = Retrieve(Retrieve.Cells(1, cent = Some(kcent)),
+          corpus = Retrieve.Lake(dir)).serve(s, d)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batch = graft.queries.VectorOps.geoAnn(s, d, nprobe = 1)
+      val batch = Retrieve(Retrieve.Cells(1)).serve(s, d)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(served == batch)
     } finally cleanup(dir)
@@ -248,14 +247,12 @@ class StreamingVectorIndexSpec extends SparkSpec {
       }
       // codes must survive the per-cell compaction unchanged
       StreamingVectorIndex.compact(s, dir)
-      val queries = e.filter(col("vec_id") < 20)
-        .select(col("vec_id"), col("embedding"))
-      val probed = StreamingVectorIndex.probePq(s, dir, kcent, cb,
-        queries, "vec_id", "embedding", nprobe = 2, rshort = 25, k = 3)
+      val probed = Retrieve(Retrieve.Cells(2, cent = Some(kcent)),
+        scorer = Retrieve.Adc(Some(cb)), rerank = Some(25),
+        corpus = Retrieve.Lake(dir)).serve(s, d)
       val served = probed.select("qid", "cid")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batch = graft.queries.VectorOps
-        .ivfAdcRerank(s, d, nprobe = 2, r = 25)
+      val batch = graft.queries.VectorOps.IvfAdcR.serve(s, d)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(served == batch)
       // the shortlist scan reads the stored codes, never the wide
