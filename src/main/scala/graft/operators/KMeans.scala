@@ -31,7 +31,8 @@ object KMeans {
     * IterativeRatings.solve's max-|Δ| stop): after each centroid update,
     * stop once the largest per-coordinate centroid movement is <= tol.
     * tol < 0 disables the test (exactly maxIter iterations — the fit()
-    * path). @return (assignments, centroids, iterations actually run) */
+    * path); maxIter = 0 returns the seed centroids and no assignments
+    * (null). @return (assignments, centroids, iterations actually run) */
   def fitConverged(spark: SparkSession, emb: DataFrame, k: Int, maxIter: Int,
       tol: Double, idCol: String = "vec_id", vecCol: String = "embedding")
       : (DataFrame, Array[Array[Double]], Int) = {
@@ -96,6 +97,7 @@ object KMeans {
       }
       centroids = updated
     }
-    (assign.withColumnRenamed("__id", idCol), centroids, iters)
+    (Option(assign).map(_.withColumnRenamed("__id", idCol)).orNull,
+      centroids, iters)
   }
 }

@@ -100,6 +100,42 @@ object TextOps {
 
   private val StopWords = Seq("the", "a", "of", "and", "to", "in", "is")
 
+  /** Shared by t01 (composed) and t01b (native token_stats). */
+  private val QualitySql = s"""
+        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+        ta AS (SELECT doc_id, count(*) AS n_tokens,
+                      sum(CASE WHEN tok IN (${StopWords.map("'" + _ + "'").mkString(",")}) THEN 1 ELSE 0 END) AS n_stop,
+                      round(avg(length(tok)), 4) AS mean_wlen
+               FROM tok GROUP BY 1),
+        base AS (SELECT d.doc_id, d.lang, d.n_chars,
+                        CAST(ta.n_tokens AS BIGINT) AS n_tokens, ta.mean_wlen,
+                        round(ta.n_stop * 1.0 / ta.n_tokens, 4) AS stop_ratio,
+                        round(length(regexp_replace(d.text, '[^a-z]', '', 'g')) * 1.0 / d.n_chars, 4) AS alpha_ratio
+                 FROM documents d JOIN ta ON d.doc_id = ta.doc_id),
+        q AS (SELECT *, round(0.4 * least(n_tokens / 100.0, 1.0)
+                              + 0.4 * stop_ratio + 0.2 * alpha_ratio, 4) AS quality
+              FROM base)
+        SELECT *, CASE WHEN quality >= 0.6 THEN 'high'
+                       WHEN quality >= 0.4 THEN 'mid' ELSE 'low' END AS grade
+        FROM q"""
+
+  /** Shared by d03 (composed) and d03b (native simhash16). */
+  private val SimHashSql = {
+    val votes = (0 until 16).map(j =>
+      s"sum(CASE WHEN substr(md5(tok), ${j + 1}, 1) IN " +
+        s"('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS v$j")
+      .mkString(", ")
+    val fp = (0 until 16)
+      .map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END")
+      .mkString(" + ")
+    s"""
+        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+        v AS (SELECT doc_id, $votes FROM tok GROUP BY 1),
+        f AS (SELECT doc_id, CAST($fp AS BIGINT) AS simhash FROM v)
+        SELECT simhash, count(*) AS n_docs, min(doc_id) AS canonical_doc
+        FROM f GROUP BY 1"""
+  }
+
   /** Shared by t16 (composed) and t16b (native token_stats+gram_stats)
     * — the twins must hash against the identical oracle. */
   private lazy val QualityGateSql = s"""
@@ -516,23 +552,7 @@ object TextOps {
             when(col("quality") >= 0.6, "high")
               .when(col("quality") >= 0.4, "mid").otherwise("low"))
       },
-      Some(s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        ta AS (SELECT doc_id, count(*) AS n_tokens,
-                      sum(CASE WHEN tok IN (${StopWords.map("'" + _ + "'").mkString(",")}) THEN 1 ELSE 0 END) AS n_stop,
-                      round(avg(length(tok)), 4) AS mean_wlen
-               FROM tok GROUP BY 1),
-        base AS (SELECT d.doc_id, d.lang, d.n_chars,
-                        CAST(ta.n_tokens AS BIGINT) AS n_tokens, ta.mean_wlen,
-                        round(ta.n_stop * 1.0 / ta.n_tokens, 4) AS stop_ratio,
-                        round(length(regexp_replace(d.text, '[^a-z]', '', 'g')) * 1.0 / d.n_chars, 4) AS alpha_ratio
-                 FROM documents d JOIN ta ON d.doc_id = ta.doc_id),
-        q AS (SELECT *, round(0.4 * least(n_tokens / 100.0, 1.0)
-                              + 0.4 * stop_ratio + 0.2 * alpha_ratio, 4) AS quality
-              FROM base)
-        SELECT *, CASE WHEN quality >= 0.6 THEN 'high'
-                       WHEN quality >= 0.4 THEN 'mid' ELSE 'low' END AS grade
-        FROM q""")),
+      Some(QualitySql)),
 
     // ----- t01 as a native expression: same oracle, no per-token shuffle -------
     Q(
@@ -565,23 +585,7 @@ object TextOps {
             when(col("quality") >= 0.6, "high")
               .when(col("quality") >= 0.4, "mid").otherwise("low"))
       },
-      Some(s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        ta AS (SELECT doc_id, count(*) AS n_tokens,
-                      sum(CASE WHEN tok IN (${StopWords.map("'" + _ + "'").mkString(",")}) THEN 1 ELSE 0 END) AS n_stop,
-                      round(avg(length(tok)), 4) AS mean_wlen
-               FROM tok GROUP BY 1),
-        base AS (SELECT d.doc_id, d.lang, d.n_chars,
-                        CAST(ta.n_tokens AS BIGINT) AS n_tokens, ta.mean_wlen,
-                        round(ta.n_stop * 1.0 / ta.n_tokens, 4) AS stop_ratio,
-                        round(length(regexp_replace(d.text, '[^a-z]', '', 'g')) * 1.0 / d.n_chars, 4) AS alpha_ratio
-                 FROM documents d JOIN ta ON d.doc_id = ta.doc_id),
-        q AS (SELECT *, round(0.4 * least(n_tokens / 100.0, 1.0)
-                              + 0.4 * stop_ratio + 0.2 * alpha_ratio, 4) AS quality
-              FROM base)
-        SELECT *, CASE WHEN quality >= 0.6 THEN 'high'
-                       WHEN quality >= 0.4 THEN 'mid' ELSE 'low' END AS grade
-        FROM q""")),
+      Some(QualitySql)),
 
     // ----- token counting ----------------------------------------------------
     Q(
@@ -1806,21 +1810,7 @@ object TextOps {
             count(lit(1)).as("n_docs"),
             min(col("doc_id")).as("canonical_doc"))
       },
-      Some {
-        val votes = (0 until 16).map(j =>
-          s"sum(CASE WHEN substr(md5(tok), ${j + 1}, 1) IN " +
-            s"('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS v$j")
-          .mkString(", ")
-        val fp = (0 until 16)
-          .map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
-        s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        v AS (SELECT doc_id, $votes FROM tok GROUP BY 1),
-        f AS (SELECT doc_id, CAST($fp AS BIGINT) AS simhash FROM v)
-        SELECT simhash, count(*) AS n_docs, min(doc_id) AS canonical_doc
-        FROM f GROUP BY 1"""
-      }),
+      Some(SimHashSql)),
 
     // ----- d03 as a native expression: same oracle, no per-token shuffle -------
     Q(
@@ -1838,21 +1828,7 @@ object TextOps {
             count(lit(1)).as("n_docs"),
             min(col("doc_id")).as("canonical_doc"))
       },
-      Some {
-        val votes = (0 until 16).map(j =>
-          s"sum(CASE WHEN substr(md5(tok), ${j + 1}, 1) IN " +
-            s"('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS v$j")
-          .mkString(", ")
-        val fp = (0 until 16)
-          .map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
-        s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        v AS (SELECT doc_id, $votes FROM tok GROUP BY 1),
-        f AS (SELECT doc_id, CAST($fp AS BIGINT) AS simhash FROM v)
-        SELECT simhash, count(*) AS n_docs, min(doc_id) AS canonical_doc
-        FROM f GROUP BY 1"""
-      }),
+      Some(SimHashSql)),
 
     // ----- training-sample provenance / lineage ----------------------------------
     Q(

@@ -45,6 +45,17 @@ object Windows {
     * µs value to ms. */
   private def ms = unix_millis(col("ts")).as("ms")
 
+  /** The streaming gates' replay: a fresh state dir (unique per call, so
+    * concurrent sessions never collide, and removed at JVM exit rather
+    * than leaked) fed the deterministic micro-batches 0, 1, 2 through
+    * `apply(batch, dir)`. @return the state dir. */
+  private def replay3(prefix: String)(apply: (Int, String) => Unit): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(dir))
+    (0 until 3).foreach(apply(_, dir))
+    dir
+  }
+
   def defs: Seq[Q] = Seq(
 
     // ----- W1/W2: latest row per key (argmax via row_number) ---------------
@@ -743,18 +754,14 @@ object Windows {
         "checkpoint-restart parity are spec-tested " +
         "(IncrementalAggregateSpec).",
       (s, d) => {
-        // unique per invocation (concurrent JVMs/sessions never collide)
-        // and removed at JVM exit rather than leaked
-        val dir = java.nio.file.Files.createTempDirectory("graft_st05_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val e = Tables.events(s, d)
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st05_") { (b, dir) =>
           graft.streaming.IncrementalAggregate.applyBatch(
             e.filter(pmod(col("event_id"), lit(3)) === b)
               .select(col("event_type"), col("value")),
-            b.toLong, "event_type", "value", dir.toString)
+            b.toLong, "event_type", "value", dir)
         }
-        graft.streaming.IncrementalAggregate.read(s, dir.toString)
+        graft.streaming.IncrementalAggregate.read(s, dir)
           .select(col("event_type"), col("n"),
             round(col("total"), 2).as("total"))
       },
@@ -777,8 +784,6 @@ object Windows {
         "stability, replay idempotency, late-dim healing). Oracle is " +
         "the one-shot join with the final dim state.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st11_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val cfg = graft.streaming.IncrementalJoin.Config(
           factId = "fid", key = "k", buckets = 8)
         val e = Tables.events(s, d).select(
@@ -791,12 +796,12 @@ object Windows {
           c.filter(pmod(col("k"), lit(7)) === 0)
             .withColumn("seg", lit("PROMO")),                   // batch 1: upsert wave
           c.limit(0))                                           // batch 2: fact-only
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st11_") { (b, dir) =>
           graft.streaming.IncrementalJoin.applyBatch(
             e.filter(pmod(col("fid"), lit(3)) === b), dims(b),
-            b.toLong, cfg, dir.toString)
+            b.toLong, cfg, dir)
         }
-        graft.streaming.IncrementalJoin.read(s, dir.toString)
+        graft.streaming.IncrementalJoin.read(s, dir)
           .select(col("fid"), col("k"), round(col("v"), 2).as("v"), col("seg"))
       },
       Some("""
@@ -823,8 +828,6 @@ object Windows {
         "of batch boundaries; the spec pins the same parity on a " +
         "zipf eviction stream, this row pins it cross-engine.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st12_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val docs = Tables.documents(s, d)
         // native bigram-string expansion (plans/WordNgrams, r18 — the
         // sk04 swap; same "w1 w2" values)
@@ -833,13 +836,13 @@ object Windows {
           .filter(size(col("w")) >= 2)
           .select(col("doc_id"), explode(
             graft.plans.WordNgrams.ofCol(col("w"), 2)).as("tok"))
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st12_") { (b, dir) =>
           graft.streaming.StreamingHeavyHitters.applyBatch(
             toks.filter(pmod(col("doc_id"), lit(3)) === b).select(col("tok")),
-            "tok", b.toLong, k = 1023, dir.toString)
+            "tok", b.toLong, k = 1023, dir)
         }
         graft.streaming.StreamingHeavyHitters.exactOverLake(
-          toks.select(col("tok")), "tok", dir.toString, denom = 850.0)
+          toks.select(col("tok")), "tok", dir, denom = 850.0)
       },
       Some("""
         WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
@@ -863,8 +866,6 @@ object Windows {
         "and t26's md5-derived keys are deterministic), so the t26 " +
         "oracle gates it regardless of batch boundaries.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st13_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val docs = Tables.documents(s, d)
         val keyed = docs.select(col("doc_id").as("id"), col("n_chars"),
             (conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)
@@ -872,12 +873,12 @@ object Windows {
           .select(col("id"), col("n_chars"),
             round(log(col("v").cast("double") / lit(281474976710657.0))
               / col("n_chars"), 12).as("key"))
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st13_") { (b, dir) =>
           graft.streaming.StreamingWeightedSample.applyBatch(
             keyed.filter(pmod(col("id"), lit(3)) === b),
-            k = 20, b.toLong, dir.toString)
+            k = 20, b.toLong, dir)
         }
-        graft.streaming.StreamingWeightedSample.read(s, dir.toString)
+        graft.streaming.StreamingWeightedSample.read(s, dir)
           .select(col("id").as("doc_id"), col("n_chars"), col("key"))
       },
       Some("""
@@ -909,8 +910,6 @@ object Windows {
         "pre-shuffled - the exact layout BucketingSpec pins for the " +
         "t28b semi-join.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st14_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         // the test corpus has no exact dups, so plant them the st02
         // way: every 10th doc is re-delivered under a new id (+100000
         // = +1 mod 3, so the copy always lands in a DIFFERENT batch
@@ -922,12 +921,12 @@ object Windows {
             .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
         val hashed = stream.select(col("doc_id"),
           md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("h"))
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st14_") { (b, dir) =>
           graft.streaming.IncrementalDedup.applyBatch(
             hashed.filter(pmod(col("doc_id"), lit(3)) === b),
-            "doc_id", "h", b.toLong, dir.toString)
+            "doc_id", "h", b.toLong, dir)
         }
-        graft.streaming.IncrementalDedup.readEmitted(s, dir.toString)
+        graft.streaming.IncrementalDedup.readEmitted(s, dir)
           .select(col("doc_id"), col("h"))
       },
       Some("""
@@ -963,17 +962,15 @@ object Windows {
         "ALL-AT-ONCE assignment, and the hash matches only if the " +
         "streamed index equals the batch-built one vector for vector.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st15_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val e = Tables.embeddings(s, d)
         val cent = TrainedIndex.centroids(s, d, k = 8)
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st15_") { (b, dir) =>
           graft.streaming.StreamingVectorIndex.applyBatch(
             e.filter(pmod(col("vec_id"), lit(3)) === b)
               .select(col("vec_id"), col("embedding")),
-            cent, "vec_id", "embedding", b.toLong, dir.toString)
+            cent, "vec_id", "embedding", b.toLong, dir)
         }
-        graft.streaming.StreamingVectorIndex.readIndex(s, dir.toString)
+        graft.streaming.StreamingVectorIndex.readIndex(s, dir)
           .select(col("vec_id"), col("cell").cast("long").as("cell"))
       },
       Some(s"""
@@ -1005,18 +1002,16 @@ object Windows {
         "oracle (same shared gram/split recipe, " +
         "TextOps.contaminationGrams - one copy).",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st16_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val grams = TextOps.contaminationGrams(s, d)
         val evalG = grams.filter(col("is_eval")).select(col("doc_id"), col("g"))
         val train = grams.filter(!col("is_eval"))
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st16_") { (b, dir) =>
           graft.streaming.StreamingDecontamination.applyBatch(
             train.filter(pmod(col("doc_id"), lit(3)) === b).select(col("g")),
-            evalG, "g", b.toLong, dir.toString)
+            evalG, "g", b.toLong, dir)
         }
         graft.streaming.StreamingDecontamination.report(
-          s, dir.toString, evalG, "g")
+          s, dir, evalG, "g")
       },
       Some(TextOps.DecontaminationSql)),
 
@@ -1045,19 +1040,17 @@ object Windows {
         "vector bytes only for shortlisted rows, compaction never " +
         "re-encodes.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st17_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val e = Tables.embeddings(s, d)
         val cent = TrainedIndex.centroids(s, d, k = 8)
         val cb = TrainedIndex.codebook(s, d)
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st17_") { (b, dir) =>
           graft.streaming.StreamingVectorIndex.applyBatch(
             e.filter(pmod(col("vec_id"), lit(3)) === b)
               .select(col("vec_id"), col("embedding")),
-            cent, "vec_id", "embedding", b.toLong, dir.toString, Some(cb))
+            cent, "vec_id", "embedding", b.toLong, dir, Some(cb))
         }
-        graft.streaming.StreamingVectorIndex.compact(s, dir.toString)
-        VectorOps.IvfAdcR.copy(corpus = Retrieve.Lake(dir.toString))
+        graft.streaming.StreamingVectorIndex.compact(s, dir)
+        VectorOps.IvfAdcR.copy(corpus = Retrieve.Lake(dir))
           .serve(s, d).select(col("qid").as("query_id"), col("rank"),
             col("cid").as("neighbor_id"))
       },
@@ -1090,23 +1083,21 @@ object Windows {
         "100 TB is the difference between maintaining the graph and " +
         "re-deriving it nightly.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st18_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val e = Tables.embeddings(s, d)
         val cent = TrainedIndex.centroids(s, d, k = 8)
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st18_") { (b, dir) =>
           graft.streaming.StreamingKnnGraph.applyBatch(
             e.filter(pmod(col("vec_id"), lit(3)) === b)
               .select(col("vec_id"), col("embedding")),
-            cent, "vec_id", "embedding", k = 3, b.toLong, dir.toString)
+            cent, "vec_id", "embedding", k = 3, b.toLong, dir)
         }
         // fold the per-batch roots through the pure-file OPTIMIZE
         // pass (per-cell newest root wins; set-preserving, so the
         // oracle is unchanged) — the gate serves off the compacted
         // root exactly as production would
-        graft.streaming.StreamingKnnGraph.compact(dir.toString)
+        graft.streaming.StreamingKnnGraph.compact(dir)
         val g = graft.streaming.StreamingKnnGraph
-          .readGraph(s, dir.toString).get
+          .readGraph(s, dir).get
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("a_id"))
           .orderBy(col("cos").desc, col("b_id").asc)
@@ -1150,19 +1141,17 @@ object Windows {
         "so the hash pins that the merge-monoid equality holds on " +
         "the scaled geometry too.",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_st18b_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
         val e = Tables.embeddings(s, d)
         val cent = TrainedIndex.centroids(s, d, k = 25)
-        (0 until 3).foreach { b =>
+        val dir = replay3("graft_st18b_") { (b, dir) =>
           graft.streaming.StreamingKnnGraph.applyBatch(
             e.filter(pmod(col("vec_id"), lit(3)) === b)
               .select(col("vec_id"), col("embedding")),
-            cent, "vec_id", "embedding", k = 3, b.toLong, dir.toString)
+            cent, "vec_id", "embedding", k = 3, b.toLong, dir)
         }
-        graft.streaming.StreamingKnnGraph.compact(dir.toString)
+        graft.streaming.StreamingKnnGraph.compact(dir)
         val g = graft.streaming.StreamingKnnGraph
-          .readGraph(s, dir.toString).get
+          .readGraph(s, dir).get
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("a_id"))
           .orderBy(col("cos").desc, col("b_id").asc)
@@ -1366,20 +1355,18 @@ object Windows {
   private[graft] def buildMaintainedStore(
       s: org.apache.spark.sql.SparkSession,
       d: String, kCells: Int, prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
     val e = Tables.embeddings(s, d)
     val cent = TrainedIndex.centroids(s, d, k = kCells)
-    (0 until 3).foreach { b =>
+    val dir = replay3(prefix) { (b, dir) =>
       graft.streaming.StreamingKnnGraph.applyBatch(
         e.filter(pmod(col("vec_id"), lit(3)) === b)
           .select(col("vec_id"), col("embedding")),
-        cent, "vec_id", "embedding", k = 16, b.toLong, dir.toString)
+        cent, "vec_id", "embedding", k = 16, b.toLong, dir)
     }
-    graft.streaming.StreamingKnnGraph.compact(dir.toString)
+    graft.streaming.StreamingKnnGraph.compact(dir)
     // cell-local lists: the maintained stream state, read whole
     val maintained = graft.streaming.StreamingKnnGraph
-      .readGraph(s, dir.toString).get
+      .readGraph(s, dir).get
       .select(col("a_id").as("src"), col("b_id").as("dst"))
     val lake = graft.streaming.StreamingVectorIndex
       .readIndex(s, s"$dir/index")

@@ -1,17 +1,17 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.BatchState
 
 /** Versioned persistence for the trained ANN index artifacts — the
   * IVF coarse centroids and the PQ codebook — so serving never
   * retrains (VERDICT r11 #3; the reference freezes derived state the
   * same way in its checkpoint store, `checkpoint.py:18-45`).
   *
-  * Layout (the StreamingVectorIndex convention: versioned roots +
-  * one atomic pointer, never an in-place edit):
+  * Layout (the [[graft.streaming.BatchState]] snapshot layout:
+  * versioned roots + one atomic pointer, never an in-place edit):
   * {{{
   *   dir/v<version>/centroids/   parquet (cluster, pos, v)
   *   dir/v<version>/codebook/    parquet (sub, code, lpos, v)
@@ -32,8 +32,20 @@ object IndexArtifacts {
 
   /** Version the `_current` marker points at; -1 before the first
     * save (or when `dir` is not an artifact store). */
-  def currentVersion(dir: String): Long =
-    graft.streaming.StateMarker.lastApplied(dir)
+  def currentVersion(dir: String): Long = BatchState.lastApplied(dir)
+
+  private def path(dir: String, v: Long, name: String) =
+    s"${BatchState.version(dir, v)}/$name"
+
+  /** Write the next version through `write(v)`, flip the marker once it
+    * is wholly on disk, then reap down to `keep` versions (0: no GC).
+    * @return the published version id. */
+  private def publishNext(dir: String, keep: Int)(write: Long => Unit): Long = {
+    val v = currentVersion(dir) + 1
+    BatchState.step(dir, v) { _ => write(v); Nil }
+    if (keep > 0) reap(dir, keep)
+    v
+  }
 
   /** Persist one trained artifact set (either part may be absent) as
     * the next version and flip the marker. `keep > 0` runs the reap
@@ -44,17 +56,15 @@ object IndexArtifacts {
   def save(spark: SparkSession, dir: String,
       centroids: Option[Array[Array[Double]]],
       codebook: Option[Array[Array[Array[Double]]]] = None,
-      keep: Int = 0): Long = {
+      keep: Int = 0): Long = publishNext(dir, keep) { v =>
     import spark.implicits._
-    Files.createDirectories(Paths.get(dir))
-    val v = currentVersion(dir) + 1
     centroids.foreach { cent =>
       val centRows = for {
         c <- cent.indices; p <- cent(c).indices
       } yield (c, p, cent(c)(p))
       centRows.toDF("cluster", "pos", "v")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/v$v/centroids")
+        .parquet(path(dir, v, "centroids"))
     }
     codebook.foreach { cb =>
       val cbRows = for {
@@ -62,11 +72,8 @@ object IndexArtifacts {
       } yield (s, c, p, cb(s)(c)(p))
       cbRows.toDF("sub", "code", "lpos", "v")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/v$v/codebook")
+        .parquet(path(dir, v, "codebook"))
     }
-    graft.streaming.StateMarker.publish(dir, v)
-    if (keep > 0) reap(dir, keep)
-    v
   }
 
   /** Centroids at the current version, rebuilt as the dense
@@ -75,9 +82,9 @@ object IndexArtifacts {
       : Array[Array[Double]] = {
     val v = currentVersion(dir)
     require(v >= 0, s"no published artifact version under $dir")
-    require(new java.io.File(s"$dir/v$v/centroids").isDirectory,
+    require(new java.io.File(path(dir, v, "centroids")).isDirectory,
       s"version $v under $dir was saved without centroids")
-    val rows = spark.read.parquet(s"$dir/v$v/centroids")
+    val rows = spark.read.parquet(path(dir, v, "centroids"))
       .select(col("cluster"), col("pos"), col("v")).collect()
     val k = rows.map(_.getInt(0)).max + 1
     val dim = rows.map(_.getInt(1)).max + 1
@@ -100,19 +107,15 @@ object IndexArtifacts {
     * from loaded frames hash-matches one served from the in-memory
     * build (the v20 gate). */
   def saveFrames(spark: SparkSession, dir: String,
-      frames: Seq[(String, DataFrame)], keep: Int = 0): Long = {
-    Files.createDirectories(Paths.get(dir))
-    val v = currentVersion(dir) + 1
-    frames.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/v$v/$name")
-    }
-    graft.streaming.StateMarker.publish(dir, v)
+      frames: Seq[(String, DataFrame)], keep: Int = 0): Long =
     // corpus-sized frames are exactly where dead versions cost a full
     // corpus copy each — publish paths opt into the GC here (keep > 0)
     // so the training-cadence republish carries its own cleanup
-    if (keep > 0) reap(dir, keep)
-    v
-  }
+    publishNext(dir, keep) { v =>
+      frames.foreach { case (name, df) =>
+        df.write.mode("overwrite").parquet(path(dir, v, name))
+      }
+    }
 
   /** One frame artifact at the current version, as the parquet scan
     * serving plans join against (never collected — the edge table is
@@ -132,9 +135,9 @@ object IndexArtifacts {
     frameMemo.get(key) match {
       case Some((sess, df)) if sess eq spark => df
       case _ =>
-        require(new java.io.File(s"$dir/v$v/$name").isDirectory,
+        require(new java.io.File(path(dir, v, name)).isDirectory,
           s"version $v under $dir has no '$name' frame")
-        val df = spark.read.parquet(s"$dir/v$v/$name")
+        val df = spark.read.parquet(path(dir, v, name))
         frameMemo.put(key, (spark, df))
         df
     }
@@ -154,20 +157,16 @@ object IndexArtifacts {
     * left for the next save() to supersede; deleting it could race a
     * concurrent in-flight publish. Torn dirs BELOW the floor are
     * ancient crash garbage and are collected with their cohort. The
-    * version parse is the shared digit-bounded VersionedRoot.versionOf
-    * (no Long overflow on a foreign v<20+ digits> name).
+    * sweep is BatchState's digit-bounded version sweep (no Long
+    * overflow on a foreign v<20+ digits> name).
     * @return the reaped version ids, ascending. */
   def reap(dir: String, keep: Int = 2): Seq[Long] = {
     require(keep >= 1, s"keep must retain at least the current version")
     val cur = currentVersion(dir)
     if (cur < 0) return Nil // nothing published — nothing is garbage yet
-    val floor = cur - (keep - 1)
-    graft.streaming.VersionedRoot.sweep(new java.io.File(dir)) { n =>
-      graft.streaming.VersionedRoot.versionOf(n, "v").exists(_ < floor)
-    } // sweep returns only what was ACTUALLY deleted — a v-dir a held
-      // handle kept alive is not reported as collected
-      .flatMap(graft.streaming.VersionedRoot.versionOf(_, "v"))
-      .sorted
+    // returns only what was ACTUALLY deleted — a v-dir a held handle
+    // kept alive is not reported as collected
+    BatchState.sweepVersions(dir, cur - (keep - 1))
   }
 
   /** PQ codebook at the current version (None when the version was
@@ -177,8 +176,8 @@ object IndexArtifacts {
       : Option[Array[Array[Array[Double]]]] = {
     val v = currentVersion(dir)
     require(v >= 0, s"no published artifact version under $dir")
-    if (!new java.io.File(s"$dir/v$v/codebook").isDirectory) return None
-    val rows = spark.read.parquet(s"$dir/v$v/codebook")
+    if (!new java.io.File(path(dir, v, "codebook")).isDirectory) return None
+    val rows = spark.read.parquet(path(dir, v, "codebook"))
       .select(col("sub"), col("code"), col("lpos"), col("v")).collect()
     val m = rows.map(_.getInt(0)).max + 1
     val k = rows.map(_.getInt(1)).max + 1

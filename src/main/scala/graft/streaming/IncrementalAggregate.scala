@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,19 +8,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * "gold table kept current by a stream" shape the reference approximates
   * with its rolling 7-day batch re-pull, orchestrate.py:366-379):
   * each micro-batch's per-key partials merge into a parquet running
-  * table via read → union → re-aggregate → write-to-versioned-dir →
-  * atomic pointer swap.
-  *
-  * Exactly-once: foreachBatch MAY redeliver the last batch after a
-  * crash/restart, so each batch publishes into its OWN version dir
-  * (`v<batchId>`) and a single pointer file (`_current`) names the live
-  * version; the pointer is replaced with an ATOMIC_MOVE rename, so
-  * readers see either the old version or the new one — never a gap.
-  * A crash at any point before the pointer swap leaves the old pointer
-  * intact (a half-written `v<batchId>` dir is inert garbage that the
-  * redelivered batch overwrites); a replayed batch sees
-  * `batchId <= lastApplied` and no-ops. There is no window where the
-  * table loses already-applied batches.
+  * table via read → union → re-aggregate → write a new version →
+  * atomic pointer swap, on the [[BatchState]] snapshot layout
+  * (`v<batchId>` per version, `_current` names the live one). A crash
+  * before the swap leaves the old version live, and a replayed batch
+  * no-ops, so the table never loses or double-counts an applied batch.
   *
   * Scale: the running table is key-cardinality-sized (never
   * event-sized), each micro-batch aggregates map-side before touching
@@ -35,54 +24,29 @@ object IncrementalAggregate {
   /** Start maintaining `tableDir` from a streaming frame of raw rows. */
   def start(events: DataFrame, key: String, valueCol: String,
       tableDir: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), batchId, key, valueCol, tableDir)
-      }
-      .start()
+    BatchState.start(events, checkpointDir)(
+      applyBatch(_, _, key, valueCol, tableDir))
 
   /** The maintained table: (key, n, total). Safe against a concurrent
-    * publish: GC keeps one superseded version, so a pointer resolved just
-    * before a swap still names a readable dir for one full publish cycle.
-    */
+    * publish: the superseded version survives one full publish cycle. */
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(versionPath(tableDir, lastApplied(tableDir)))
+    spark.read.parquet(BatchState.version(tableDir, lastApplied(tableDir)))
 
-  private def versionPath(tableDir: String, batchId: Long) =
-    tableDir + "/v" + batchId
-
-  /** Live version = pointer file content; -1 before the first publish.
-    * Version dirs not named by the pointer are crash leftovers and are
-    * never read. */
+  /** Live version; -1 before the first publish. */
   private[graft] def lastApplied(tableDir: String): Long =
-    StateMarker.lastApplied(tableDir)
+    BatchState.lastApplied(tableDir)
 
   private[graft] def applyBatch(batch: DataFrame, batchId: Long,
-      key: String, valueCol: String, tableDir: String): Unit = {
-    val applied = lastApplied(tableDir)
-    if (batchId <= applied) return // redelivery after restart
-    val spark = batch.sparkSession
-    val partial = batch.groupBy(col(key))
-      .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
-    val merged =
-      if (applied < 0) partial
-      else spark.read.parquet(versionPath(tableDir, applied))
-        .unionByName(partial)
-        .groupBy(col(key))
-        .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
-    merged.write.mode(SaveMode.Overwrite).parquet(versionPath(tableDir, batchId))
-    // publish: replace the pointer in one atomic rename
-    StateMarker.publish(tableDir, batchId)
-    // best-effort GC deferred by ONE version: keep the just-superseded
-    // dir (`applied`) so a reader that resolved `_current` immediately
-    // before the pointer swap can still finish its read; only versions
-    // at least two publishes old are deleted
-    val keep = Set("v" + batchId, "v" + applied)
-    val dirs = Paths.get(tableDir).toFile.listFiles()
-    if (dirs != null) dirs.foreach { f =>
-      if (f.isDirectory && f.getName.matches("v\\d+") && !keep(f.getName))
-        org.apache.commons.io.FileUtils.deleteQuietly(f)
+      key: String, valueCol: String, tableDir: String): Unit =
+    BatchState.snapshot(tableDir, batchId) { (_, prev, out) =>
+      val partial = batch.groupBy(col(key))
+        .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
+      val merged = prev.fold(partial)(p =>
+        batch.sparkSession.read.parquet(p)
+          .unionByName(partial)
+          .groupBy(col(key))
+          .agg(sum(col("n")).as("n"), sum(col("total")).as("total")))
+      merged.write.mode(SaveMode.Overwrite).parquet(out)
+      Nil
     }
-  }
 }

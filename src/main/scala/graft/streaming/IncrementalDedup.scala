@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -15,8 +12,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * only genuinely new documents, and appends its new hashes to the
   * seen lake. History is never recomputed and never rewritten.
   *
-  * State layout (delta-proportional, unlike the k-bounded HH/sample
-  * states this one is corpus-hash-sized by nature):
+  * State layout (two [[BatchState]] logs; delta-proportional, unlike
+  * the k-bounded HH/sample states this one is corpus-hash-sized by
+  * nature):
   *   dir/seen/b<batchId>/  — parquet of hashes FIRST seen in that batch
   *   dir/out/b<batchId>/   — parquet of the rows emitted for that batch
   *   dir/_current          — atomic-pointer marker (lastAppliedBatchId)
@@ -34,54 +32,43 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object IncrementalDedup {
 
-  private def marker(dir: String): Long = StateMarker.lastApplied(dir)
-
-  private def seenDirs(dir: String, upTo: Long): Seq[String] =
-    (0L to upTo).map(b => s"$dir/seen/b$b")
-      .filter(p => new java.io.File(p).isDirectory)
+  private def seen(dir: String) = BatchState.Log(dir, "seen")
+  private def out(dir: String) = BatchState.Log(dir, "out")
 
   def start(rows: DataFrame, idCol: String, hashCol: String,
       stateDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), idCol, hashCol, batchId, stateDir)
-      }
-      .start()
+    BatchState.start(rows, checkpointDir)(
+      applyBatch(_, idCol, hashCol, _, stateDir))
 
   /** Fold one micro-batch: emit rows whose hash is new (first-wins by
     * `idCol` within the batch), record their hashes. Idempotent on
     * redelivery. */
   def applyBatch(batch: DataFrame, idCol: String, hashCol: String,
-      batchId: Long, dir: String): Unit = {
-    val applied = marker(dir)
-    if (batchId <= applied) return // redelivery after restart
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(dir))
-    // within-batch first-wins (the d01 min-id convention)
-    val w = Window.partitionBy(col(hashCol)).orderBy(col(idCol).asc)
-    val batchKeep = batch
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val prior = seenDirs(dir, applied)
-    val fresh =
-      if (prior.isEmpty) batchKeep
-      else batchKeep.join(
-        spark.read.parquet(prior: _*).select(col(hashCol)),
-        Seq(hashCol), "left_anti")
-    // out first, seen second, marker last: a crash between the writes
-    // redelivers the batch and overwrites both directories
-    fresh.write.mode("overwrite").parquet(s"$dir/out/b$batchId")
-    spark.read.parquet(s"$dir/out/b$batchId").select(col(hashCol))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$dir/seen/b$batchId")
-    StateMarker.publish(dir, batchId)
-  }
+      batchId: Long, dir: String): Unit =
+    BatchState.step(dir, batchId) { _ =>
+      val spark = batch.sparkSession
+      // within-batch first-wins (the d01 min-id convention)
+      val w = Window.partitionBy(col(hashCol)).orderBy(col(idCol).asc)
+      val batchKeep = batch
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      val prior = seen(dir).roots()
+      val fresh =
+        if (prior.isEmpty) batchKeep
+        else batchKeep.join(
+          spark.read.parquet(prior: _*).select(col(hashCol)),
+          Seq(hashCol), "left_anti")
+      // out first, seen second, marker last: a crash between the writes
+      // redelivers the batch and overwrites both directories
+      val outDir = out(dir).batch(batchId)
+      fresh.write.mode("overwrite").parquet(outDir)
+      spark.read.parquet(outDir).select(col(hashCol))
+        .repartition(1)
+        .write.mode("overwrite").parquet(seen(dir).batch(batchId))
+      Nil
+    }
 
   /** Everything emitted so far (the deduplicated corpus). */
-  def readEmitted(spark: SparkSession, dir: String): DataFrame = {
-    val outs = (0L to marker(dir)).map(b => s"$dir/out/b$b")
-      .filter(p => new java.io.File(p).isDirectory)
-    spark.read.parquet(outs: _*)
-  }
+  def readEmitted(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(out(dir).roots(): _*)
 }

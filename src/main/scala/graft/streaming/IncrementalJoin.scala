@@ -1,9 +1,7 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental JOIN-view maintenance (IVM): keep
@@ -12,9 +10,10 @@ import org.apache.spark.sql.functions._
   * the DELTAS — never to the view.
   *
   *  - The dim state is latest-per-key (key-cardinality sized; higher
-  *    batch id wins), republished whole per batch through the same
-  *    version-dir + atomic-pointer protocol as IncrementalAggregate —
-  *    it is the small side, a full rewrite is O(|dim keys|).
+  *    batch id wins), republished whole per batch on the
+  *    [[BatchState]] snapshot layout under `dim/` (superseded versions
+  *    are swept like IncrementalAggregate's) — it is the small side, a
+  *    full rewrite is O(|dim keys|).
   *  - The view is hash-bucketed on the join key
   *    (`pmod(hash(key), buckets)` partition column) and maintained via
   *    DYNAMIC partition overwrite: a batch rewrites ONLY the buckets
@@ -46,25 +45,7 @@ object IncrementalJoin {
   private def viewDir(dir: String) = dir + "/view"
 
   private[graft] def lastApplied(dir: String): Long =
-    StateMarker.lastApplied(dir, "_applied")
-
-  private def publishMarker(dir: String, batchId: Long): Unit =
-    StateMarker.publish(dir, batchId, name = "_applied")
-
-  /** Latest-per-key dim state as of the last applied batch (empty
-    * schema-less None if no dim batch ever landed). */
-  private def readDim(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val v = StateMarker.lastApplied(dimDir(dir))
-    if (v < 0) None
-    else Some(spark.read.parquet(dimDir(dir) + "/v" + v))
-  }
-
-  private def publishDim(merged: DataFrame, dir: String, batchId: Long): Unit = {
-    merged.write.mode(SaveMode.Overwrite)
-      .parquet(dimDir(dir) + "/v" + batchId)
-    Files.createDirectories(Paths.get(dimDir(dir)))
-    StateMarker.publish(dimDir(dir), batchId)
-  }
+    BatchState.lastApplied(dir, "_applied")
 
   /** The maintained view (fact columns + dim columns, left-join
     * semantics; `__bucket` partition column dropped). */
@@ -75,82 +56,82 @@ object IncrementalJoin {
     * payload. `dimDelta` columns: key, dim payload (≤1 row per key per
     * batch — pre-dedup upstream if needed). Either side may be empty. */
   def applyBatch(factDelta: DataFrame, dimDelta: DataFrame, batchId: Long,
-      cfg: Config, dir: String): Unit = {
-    if (batchId <= lastApplied(dir)) return // no-op replay
-    val spark = factDelta.sparkSession
-    Files.createDirectories(Paths.get(dir))
+      cfg: Config, dir: String): Unit =
+    BatchState.step(dir, batchId, "_applied") { _ =>
+      val spark = factDelta.sparkSession
 
-    // 1. which buckets does this batch touch, and is the dim delta
-    // empty? ONE probe answers both (r18 — the knownIsEmpty
-    // one-evaluation discipline): the bucket scan already reads both
-    // deltas, so tagging each side's rows makes the separate
-    // dimDelta.isEmpty job redundant. <= 2 x cfg.buckets rows.
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      pmod(hash(c), lit(cfg.buckets))
-    val probed = factDelta.select(bucketOf(col(cfg.key)).as("b"),
-        lit(false).as("isdim"))
-      .union(dimDelta.select(bucketOf(col(cfg.key)).as("b"),
-        lit(true).as("isdim")))
-      .distinct().collect()
-    val touched = probed.map(_.getInt(0)).distinct.toSeq
-    val dimDeltaEmpty = !probed.exists(_.getBoolean(1))
+      // 1. which buckets does this batch touch, and is the dim delta
+      // empty? ONE probe answers both (r18 — the knownIsEmpty
+      // one-evaluation discipline): the bucket scan already reads both
+      // deltas, so tagging each side's rows makes the separate
+      // dimDelta.isEmpty job redundant. <= 2 x cfg.buckets rows.
+      def bucketOf(c: org.apache.spark.sql.Column) =
+        pmod(hash(c), lit(cfg.buckets))
+      val probed = factDelta.select(bucketOf(col(cfg.key)).as("b"),
+          lit(false).as("isdim"))
+        .union(dimDelta.select(bucketOf(col(cfg.key)).as("b"),
+          lit(true).as("isdim")))
+        .distinct().collect()
+      val touched = probed.map(_.getInt(0)).distinct.toSeq
+      val dimDeltaEmpty = !probed.exists(_.getBoolean(1))
 
-    // 2. merge dim state: higher batch wins per key
-    val prevDim = readDim(spark, dir)
-    val taggedDelta = dimDelta.withColumn("__b", lit(batchId))
-    val mergedDim = prevDim match {
-      case None => taggedDelta
-      case Some(old) =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col(cfg.key)).orderBy(col("__b").desc)
-        old.unionByName(taggedDelta)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
+      // 2. merge dim state: higher batch wins per key. Publish only when
+      // there is dim state to publish: a first batch with an empty
+      // dimDelta would otherwise write a zero-part-file parquet dir that
+      // a later read cannot infer a schema from. The published parquet
+      // then serves as this batch's dim state (read-after-write breaks
+      // lineage, one materialization — r18); only the never-published
+      // empty-first-batch arm keeps the in-plan frame (delta-sized). A
+      // dim version already published for this id (a crash before the
+      // `_applied` flip) is reused as is.
+      val taggedDelta = dimDelta.withColumn("__b", lit(batchId))
+      val dimState =
+        if (BatchState.lastApplied(dimDir(dir)) >= 0 || !dimDeltaEmpty) {
+          BatchState.snapshot(dimDir(dir), batchId) { (_, prev, out) =>
+            val merged = prev.fold(taggedDelta) { p =>
+              val w = Window.partitionBy(col(cfg.key)).orderBy(col("__b").desc)
+              spark.read.parquet(p).unionByName(taggedDelta)
+                .withColumn("__rn", row_number().over(w))
+                .filter(col("__rn") === 1).drop("__rn")
+            }
+            merged.write.mode(SaveMode.Overwrite).parquet(out)
+            Nil
+          }
+          spark.read.parquet(BatchState.version(dimDir(dir),
+            BatchState.lastApplied(dimDir(dir))))
+        } else taggedDelta
+      val dimOut = dimState.drop("__b")
+      val dimCols = dimOut.columns.filterNot(_ == cfg.key).toSeq
+
+      // 3. rebuild touched buckets only
+      if (touched.nonEmpty) {
+        val factB = factDelta.withColumn("__bucket", bucketOf(col(cfg.key)))
+        val newRows = factB.join(broadcast(dimOut), Seq(cfg.key), "left")
+        val viewExists = {
+          val root = new java.io.File(viewDir(dir))
+          root.isDirectory && root.listFiles() != null &&
+            root.listFiles().exists(f => f.isDirectory && f.getName.startsWith("__bucket="))
+        }
+        val rebuilt = if (!viewExists) newRows else {
+          val oldTouched = spark.read.parquet(viewDir(dir))
+            .filter(col("__bucket").isin(touched: _*))
+          val survivors = oldTouched.join(
+            broadcast(factDelta.select(col(cfg.factId))), Seq(cfg.factId),
+            "left_anti")
+          val dimKeys = broadcast(dimDelta.select(col(cfg.key)))
+          val keep = survivors.join(dimKeys, Seq(cfg.key), "left_anti")
+          val refreshed = survivors.join(dimKeys, Seq(cfg.key), "left_semi")
+            .drop(dimCols: _*)
+            .join(broadcast(dimOut), Seq(cfg.key), "left")
+          keep.unionByName(refreshed).unionByName(newRows)
+        }
+        // materialize BEFORE the overwrite: the plan reads the same
+        // partitions it is about to replace
+        val out = rebuilt.localCheckpoint(true)
+        out.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic") // per-write, not session
+          .partitionBy("__bucket").parquet(viewDir(dir))
+      }
+      Nil
     }
-    // publish only when there is dim state to publish: a first batch with
-    // an empty dimDelta would otherwise write a zero-part-file parquet dir
-    // that a later readDim cannot infer a schema from. The published
-    // parquet then serves as this batch's dim state (read-after-write
-    // breaks lineage exactly like the old checkpoint+publish pair, one
-    // materialization instead of two — r18); only the never-published
-    // empty-first-batch arm keeps the in-plan frame (delta-sized).
-    val dimState =
-      if (prevDim.nonEmpty || !dimDeltaEmpty) {
-        publishDim(mergedDim, dir, batchId)
-        spark.read.parquet(dimDir(dir) + "/v" + batchId)
-      } else mergedDim
-    val dimOut = dimState.drop("__b")
-    val dimCols = dimOut.columns.filterNot(_ == cfg.key).toSeq
-
-    if (touched.isEmpty) { publishMarker(dir, batchId); return }
-
-    // 3. rebuild touched buckets only
-    val factB = factDelta.withColumn("__bucket", bucketOf(col(cfg.key)))
-    val newRows = factB.join(broadcast(dimOut), Seq(cfg.key), "left")
-    val viewExists = {
-      val root = Paths.get(viewDir(dir)).toFile
-      root.isDirectory && root.listFiles() != null &&
-        root.listFiles().exists(f => f.isDirectory && f.getName.startsWith("__bucket="))
-    }
-    val rebuilt = if (!viewExists) newRows else {
-      val oldTouched = spark.read.parquet(viewDir(dir))
-        .filter(col("__bucket").isin(touched: _*))
-      val survivors = oldTouched.join(
-        broadcast(factDelta.select(col(cfg.factId))), Seq(cfg.factId),
-        "left_anti")
-      val dimKeys = broadcast(dimDelta.select(col(cfg.key)))
-      val keep = survivors.join(dimKeys, Seq(cfg.key), "left_anti")
-      val refreshed = survivors.join(dimKeys, Seq(cfg.key), "left_semi")
-        .drop(dimCols: _*)
-        .join(broadcast(dimOut), Seq(cfg.key), "left")
-      keep.unionByName(refreshed).unionByName(newRows)
-    }
-    // materialize BEFORE the overwrite: the plan reads the same
-    // partitions it is about to replace
-    val out = rebuilt.localCheckpoint(true)
-    out.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic") // per-write, not session
-      .partitionBy("__bucket").parquet(viewDir(dir))
-    publishMarker(dir, batchId)
-  }
 }

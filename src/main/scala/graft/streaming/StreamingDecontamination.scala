@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,8 +22,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * touched again — the per-batch join is |eval| x |batch|, not
   * |eval| x |corpus|.
   *
-  * State layout (IncrementalDedup convention — append-only deltas,
-  * atomic-pointer marker, per-batch I/O delta-sized):
+  * State layout (a [[BatchState]] log, as in IncrementalDedup —
+  * append-only deltas, atomic-pointer marker, per-batch I/O
+  * delta-sized):
   *   dir/hits/b<batchId>/ — parquet of (doc_id, g) hits FIRST found
   *                          in that batch (disjoint across batches)
   *   dir/_current         — marker (lastAppliedBatchId)
@@ -46,18 +45,10 @@ object StreamingDecontamination {
 
   def start(trainRows: DataFrame, evalGrams: DataFrame, gramCol: String,
       stateDir: String, checkpointDir: String): StreamingQuery =
-    trainRows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), evalGrams, gramCol, batchId, stateDir)
-      }
-      .start()
+    BatchState.start(trainRows, checkpointDir)(
+      applyBatch(_, evalGrams, gramCol, _, stateDir))
 
-  private def marker(dir: String): Long = StateMarker.lastApplied(dir)
-
-  private def hitDirs(dir: String, upTo: Long): Seq[String] =
-    (0L to upTo).map(b => s"$dir/hits/b$b")
-      .filter(p => new java.io.File(p).isDirectory)
+  private def hits(dir: String) = BatchState.Log(dir, "hits")
 
   /** Fold one train micro-batch: record every (eval doc, gram) pair
     * whose gram occurs in this batch and was not already a hit.
@@ -65,29 +56,26 @@ object StreamingDecontamination {
     * frame across the state's life; `batch` needs only gramCol.
     * Idempotent on redelivery. */
   def applyBatch(batch: DataFrame, evalGrams: DataFrame, gramCol: String,
-      batchId: Long, dir: String): Unit = {
-    val applied = marker(dir)
-    if (batchId <= applied) return // redelivery after restart
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(dir))
-    val candidates = evalGrams.select(col("doc_id"), col(gramCol))
-      .distinct()
-      .join(batch.select(col(gramCol)).distinct(), Seq(gramCol), "left_semi")
-    val prior = hitDirs(dir, applied)
-    val fresh =
-      if (prior.isEmpty) candidates
-      else candidates.join(spark.read.parquet(prior: _*),
-        Seq("doc_id", gramCol), "left_anti")
-    fresh.select(col("doc_id"), col(gramCol))
-      .repartition(1) // eval-bounded rows: one footer-bearing file
-      .write.mode("overwrite").parquet(s"$dir/hits/b$batchId")
-    StateMarker.publish(dir, batchId)
-  }
+      batchId: Long, dir: String): Unit =
+    BatchState.step(dir, batchId) { _ =>
+      val candidates = evalGrams.select(col("doc_id"), col(gramCol))
+        .distinct()
+        .join(batch.select(col(gramCol)).distinct(), Seq(gramCol), "left_semi")
+      val prior = hits(dir).roots()
+      val fresh =
+        if (prior.isEmpty) candidates
+        else candidates.join(batch.sparkSession.read.parquet(prior: _*),
+          Seq("doc_id", gramCol), "left_anti")
+      fresh.select(col("doc_id"), col(gramCol))
+        .repartition(1) // eval-bounded rows: one footer-bearing file
+        .write.mode("overwrite").parquet(hits(dir).batch(batchId))
+      Nil
+    }
 
   /** All (doc_id, gram) hits so far — distinct by construction (each
     * batch writes only pairs absent from every earlier delta). */
   def readHits(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(hitDirs(dir, marker(dir)): _*)
+    spark.read.parquet(hits(dir).roots(): _*)
 
   /** The t28-shaped per-eval-doc report from the current state:
     * (doc_id, n_grams, n_contaminated, contaminated) — every eval doc

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -30,10 +27,10 @@ import graft.operators.HeavyHitters
   *
   * Per batch the work is one treeAggregate over the delta (the MG
   * summary rides the combine tree — no shuffle) plus a ≤k-row state
-  * read/merge/publish on the driver; the IncrementalAggregate
-  * versioned-dir + atomic-pointer protocol gives exactly-once under
-  * foreachBatch redelivery. State is k-bounded forever — the streaming
-  * analog of sk04's "shuffle carries ≤k keys" scale property.
+  * read/merge/publish on the driver; the [[BatchState]] snapshot
+  * layout gives exactly-once under foreachBatch redelivery. State is
+  * k-bounded forever — the streaming analog of sk04's "shuffle carries
+  * ≤k keys" scale property.
   */
 object StreamingHeavyHitters {
 
@@ -43,22 +40,18 @@ object StreamingHeavyHitters {
     * with token column `tokCol`. */
   def start(tokens: DataFrame, tokCol: String, k: Int,
       stateDir: String, checkpointDir: String): StreamingQuery =
-    tokens.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), tokCol, batchId, k, stateDir)
-      }
-      .start()
-
-  private def versionPath(dir: String, batchId: Long) = s"$dir/v$batchId"
+    BatchState.start(tokens, checkpointDir)(
+      applyBatch(_, tokCol, _, k, stateDir))
 
   /** (lastAppliedBatchId, totalN, k); (-1, 0, -1) before the first
     * publish. k is persisted with the marker because it is part of the
     * MG guarantee the state carries — exactOverLake can only promise
     * exactness for denom < k+1, and a caller can't be trusted to
     * remember which k built the state. */
-  private[graft] def marker(dir: String): (Long, Long, Int) = {
-    val parts = StateMarker.read(dir)
+  private[graft] def marker(dir: String): (Long, Long, Int) =
+    fields(BatchState.read(dir))
+
+  private def fields(parts: Array[String]): (Long, Long, Int) =
     if (parts.isEmpty) (-1L, 0L, -1)
     else {
       // 2-field markers predate k persistence: fall back to the
@@ -67,7 +60,6 @@ object StreamingHeavyHitters {
       val k = if (parts.length > 2) parts(2).toInt else -1
       (parts(0).toLong, parts(1).toLong, k)
     }
-  }
 
   /** The accumulated state: ≤k-entry summary + exact stream length +
     * the k bound it was built under. The summary read is the
@@ -76,7 +68,7 @@ object StreamingHeavyHitters {
     val (applied, n, k) = marker(dir)
     if (applied < 0) None
     else {
-      val rows = spark.read.parquet(versionPath(dir, applied)).collect()
+      val rows = spark.read.parquet(BatchState.version(dir, applied)).collect()
       Some(State(rows.map(r => r.getString(0) -> r.getLong(1)).toMap, n, k))
     }
   }
@@ -85,40 +77,32 @@ object StreamingHeavyHitters {
     * k must stay constant across the state's life — merging summaries
     * built under different k bounds voids the MG guarantee. */
   def applyBatch(batch: DataFrame, tokCol: String, batchId: Long, k: Int,
-      dir: String): Unit = {
-    val (applied, nPrev, kPrev) = marker(dir)
-    if (batchId <= applied) return // redelivery after restart
-    require(applied < 0 || kPrev < 0 || k == kPrev,
-      s"state at $dir was built with k=$kPrev; cannot continue with k=$k")
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(dir))
-    val (delta, nDelta) = HeavyHitters.summarize(batch, tokCol, k)
-    val prior: mutable.Map[String, Long] =
-      if (applied < 0) mutable.Map.empty
-      else mutable.Map(spark.read.parquet(versionPath(dir, applied))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toIndexedSeq: _*)
-    val mergedMap = HeavyHitters.merge(prior, delta, k)
-    val n = nPrev + nDelta
-    import spark.implicits._
-    // repartition(1): a ≤k-row state must always leave a footer-bearing
-    // part file, even when the merged summary is empty
-    mergedMap.toSeq.sortBy(_._1).toDF("token", "cnt")
-      .repartition(1)
-      .write.mode("overwrite").parquet(versionPath(dir, batchId))
-    // a legacy (pre-k) state has UNKNOWN history: keep the -1 sentinel
-    // instead of stamping the caller's k as if it had governed every
-    // earlier merge — that would launder an unverifiable bound into a
-    // confidently-claimed one and re-arm exactOverLake's denom guard
-    // against a k that never bounded the old merges
-    val kOut = if (applied >= 0 && kPrev < 0) -1 else k
-    StateMarker.publish(dir, batchId, Seq(n.toString, kOut.toString))
-    val keep = Set("v" + batchId, "v" + applied)
-    val dirs = Paths.get(dir).toFile.listFiles()
-    if (dirs != null) dirs.foreach { f =>
-      if (f.isDirectory && f.getName.matches("v\\d+") && !keep(f.getName))
-        org.apache.commons.io.FileUtils.deleteQuietly(f)
+      dir: String): Unit =
+    BatchState.snapshot(dir, batchId) { (prior, prev, out) =>
+      val (applied, nPrev, kPrev) = fields(prior)
+      require(applied < 0 || kPrev < 0 || k == kPrev,
+        s"state at $dir was built with k=$kPrev; cannot continue with k=$k")
+      val spark = batch.sparkSession
+      val (delta, nDelta) = HeavyHitters.summarize(batch, tokCol, k)
+      val state = prev.fold(mutable.Map.empty[String, Long])(p =>
+        mutable.Map(spark.read.parquet(p).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toIndexedSeq: _*))
+      val mergedMap = HeavyHitters.merge(state, delta, k)
+      val n = nPrev + nDelta
+      import spark.implicits._
+      // repartition(1): a ≤k-row state must always leave a footer-bearing
+      // part file, even when the merged summary is empty
+      mergedMap.toSeq.sortBy(_._1).toDF("token", "cnt")
+        .repartition(1)
+        .write.mode("overwrite").parquet(out)
+      // a legacy (pre-k) state has UNKNOWN history: keep the -1 sentinel
+      // instead of stamping the caller's k as if it had governed every
+      // earlier merge — that would launder an unverifiable bound into a
+      // confidently-claimed one and re-arm exactOverLake's denom guard
+      // against a k that never bounded the old merges
+      val kOut = if (applied >= 0 && kPrev < 0) -1 else k
+      Seq(n.toString, kOut.toString)
     }
-  }
 
   /** Pass 2 against the accumulated token lake: exact recount of the
     * STREAMED candidates, thresholded at streamN/denom — the batch

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +25,7 @@ import org.apache.spark.sql.functions._
   * arrived vectors, independent of batch boundaries. That equality
   * is what the st18 gate hash-checks against v14's batch oracle.
   *
-  * State layout (the StreamingVectorIndex convention):
+  * State layout (a [[BatchState]] log, as in StreamingVectorIndex):
   *   dir/index/...              — the cell-partitioned vector lake
   *   dir/graph/g<batchId>/cell= — affected cells' NEW edge lists
   *   dir/_current               — atomic-pointer marker
@@ -47,94 +45,95 @@ import org.apache.spark.sql.functions._
   */
 object StreamingKnnGraph {
 
+  private def graph(dir: String) =
+    BatchState.Log(dir, "graph", prefix = "g", compacted = "graph/gcompacted_v")
+
   /** Fold one micro-batch of (id, vector) rows into the graph. */
   def applyBatch(batch: DataFrame, cent: Array[Array[Double]],
       idCol: String, vecCol: String, k: Int, batchId: Long,
-      dir: String): Unit = {
-    if (batchId <= StateMarker.lastApplied(dir)) return // redelivery
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(dir))
-    val newAsg = batch.select(col(idCol).as("vec_id"),
-        col(vecCol).as("embedding"))
-      .withColumn("cell",
-        -element_at(
-          graft.queries.VectorOps.nearestCells(cent, "embedding", 1), 1)
-          .getField("nc"))
-    // the batch's cells: bounded by the centroid count, never by
-    // data — the same bounded-collect class as the probe's isin.
-    // ONE probe funds both layers' emptiness answer AND the
-    // affected-cell list (r17; extends ADVICE r12's one-evaluation
-    // rule — `isEmpty` was a second job over the same uncached batch)
-    val cells = newAsg.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val batchIsEmpty = cells.isEmpty
-    // the vector lake advances first (its own marker makes this
-    // idempotent too); an empty batch still advances both markers.
-    // The assignment this probe already computed rides through so the
-    // lake write doesn't re-assign a second scan of the batch (r18)
-    StreamingVectorIndex.applyBatch(batch, cent, idCol, vecCol,
-      batchId, s"$dir/index", knownIsEmpty = Some(batchIsEmpty),
-      assignedIn = Some(newAsg.select(col("vec_id").as(idCol),
-        col("embedding").as(vecCol), col("cell"))))
-    if (!batchIsEmpty) {
-      // native codegen dot (plans/DotProduct, r17) — bit-identical to
-      // the composed zip_with/aggregate form this path shipped with
-      val dot = (a: String, b: String) =>
-        graft.plans.DotProduct.ofCols(col(a), col(b))
-      // only the affected cells' vectors scan (partition-pruned),
-      // flagged by whether they arrived in THIS batch
-      val newIds = newAsg.select(col("vec_id")).withColumn("is_new", lit(true))
-      val members = StreamingVectorIndex.readIndex(spark, s"$dir/index")
-        .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"),
-          col("cell"))
-        .filter(col("cell").isin(cells: _*))
-        .join(broadcast(newIds), Seq("vec_id"), "left")
-        .select(col("cell"), col("vec_id"), col("embedding"),
-          coalesce(col("is_new"), lit(false)).as("is_new"),
-          sqrt(dot("embedding", "embedding")).as("nrm"))
-      val aSide = members.select(col("cell"), col("vec_id").as("a_id"),
-        col("embedding").as("ae"), col("nrm").as("na"),
-        col("is_new").as("a_new"))
-      val bSide = members.select(col("cell"), col("vec_id").as("b_id"),
-        col("embedding").as("be"), col("nrm").as("nb"),
-        col("is_new").as("b_new"))
-      // pairs involving a new vector only: old x old was already
-      // merged when its younger side arrived.
-      // shuffle_hash FORCES cell partitioning (r17 — the knnGraph/
-      // vamana f97f561 class, VERDICT r16 #5): the affected-cell
-      // membership sits under the auto-broadcast threshold at fixture
-      // scale, and a broadcast join here would stream the
-      // |new_c| x |cell_c| pair compute through the lake scan's OWN
-      // splits instead of the per-cell exchange the delta-proportional
-      // cost model assumes — at 100 TB the build side is
-      // cell-occupancy-sized and could never broadcast anyway.
-      val pairs = aSide.join(bSide.hint("shuffle_hash"), Seq("cell"))
-        .filter(col("a_id") =!= col("b_id"))
-        .filter(col("a_new") || col("b_new"))
-        .select(col("cell"), col("a_id"), col("b_id"),
-          (graft.plans.DotProduct.ofCols(col("ae"), col("be"))
-            / (col("na") * col("nb"))).as("cos"))
-      // stored lists of the affected cells (absent before the first
-      // batch touches a cell); disjoint from `pairs` by construction
-      // — stored rows' b side predates this batch
-      val cand = readGraph(spark, dir, Some(cells)) match {
-        case None => pairs
-        case Some(stored) => pairs.unionByName(
-          stored.select(col("cell"), col("a_id"), col("b_id"), col("cos")))
+      dir: String): Unit =
+    BatchState.step(dir, batchId) { _ =>
+      val spark = batch.sparkSession
+      val newAsg = batch.select(col(idCol).as("vec_id"),
+          col(vecCol).as("embedding"))
+        .withColumn("cell",
+          -element_at(
+            graft.queries.VectorOps.nearestCells(cent, "embedding", 1), 1)
+            .getField("nc"))
+      // the batch's cells: bounded by the centroid count, never by
+      // data — the same bounded-collect class as the probe's isin.
+      // ONE probe funds both layers' emptiness answer AND the
+      // affected-cell list (r17; extends ADVICE r12's one-evaluation
+      // rule — `isEmpty` was a second job over the same uncached batch)
+      val cells = newAsg.select(col("cell")).distinct()
+        .collect().map(_.getLong(0)).toSeq
+      val batchIsEmpty = cells.isEmpty
+      // the vector lake advances first (its own marker makes this
+      // idempotent too); an empty batch still advances both markers.
+      // The assignment this probe already computed rides through so the
+      // lake write doesn't re-assign a second scan of the batch (r18)
+      StreamingVectorIndex.applyBatch(batch, cent, idCol, vecCol,
+        batchId, s"$dir/index", knownIsEmpty = Some(batchIsEmpty),
+        assignedIn = Some(newAsg.select(col("vec_id").as(idCol),
+          col("embedding").as(vecCol), col("cell"))))
+      if (!batchIsEmpty) {
+        // native codegen dot (plans/DotProduct, r17) — bit-identical to
+        // the composed zip_with/aggregate form this path shipped with
+        val dot = (a: String, b: String) =>
+          graft.plans.DotProduct.ofCols(col(a), col(b))
+        // only the affected cells' vectors scan (partition-pruned),
+        // flagged by whether they arrived in THIS batch
+        val newIds = newAsg.select(col("vec_id")).withColumn("is_new", lit(true))
+        val members = StreamingVectorIndex.readIndex(spark, s"$dir/index")
+          .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"),
+            col("cell"))
+          .filter(col("cell").isin(cells: _*))
+          .join(broadcast(newIds), Seq("vec_id"), "left")
+          .select(col("cell"), col("vec_id"), col("embedding"),
+            coalesce(col("is_new"), lit(false)).as("is_new"),
+            sqrt(dot("embedding", "embedding")).as("nrm"))
+        val aSide = members.select(col("cell"), col("vec_id").as("a_id"),
+          col("embedding").as("ae"), col("nrm").as("na"),
+          col("is_new").as("a_new"))
+        val bSide = members.select(col("cell"), col("vec_id").as("b_id"),
+          col("embedding").as("be"), col("nrm").as("nb"),
+          col("is_new").as("b_new"))
+        // pairs involving a new vector only: old x old was already
+        // merged when its younger side arrived.
+        // shuffle_hash FORCES cell partitioning (r17 — the knnGraph/
+        // vamana f97f561 class, VERDICT r16 #5): the affected-cell
+        // membership sits under the auto-broadcast threshold at fixture
+        // scale, and a broadcast join here would stream the
+        // |new_c| x |cell_c| pair compute through the lake scan's OWN
+        // splits instead of the per-cell exchange the delta-proportional
+        // cost model assumes — at 100 TB the build side is
+        // cell-occupancy-sized and could never broadcast anyway.
+        val pairs = aSide.join(bSide.hint("shuffle_hash"), Seq("cell"))
+          .filter(col("a_id") =!= col("b_id"))
+          .filter(col("a_new") || col("b_new"))
+          .select(col("cell"), col("a_id"), col("b_id"),
+            (graft.plans.DotProduct.ofCols(col("ae"), col("be"))
+              / (col("na") * col("nb"))).as("cos"))
+        // stored lists of the affected cells (absent before the first
+        // batch touches a cell); disjoint from `pairs` by construction
+        // — stored rows' b side predates this batch
+        val cand = readGraph(spark, dir, Some(cells)) match {
+          case None => pairs
+          case Some(stored) => pairs.unionByName(
+            stored.select(col("cell"), col("a_id"), col("b_id"), col("cos")))
+        }
+        val merged = graft.plans.TopKPerKey.topK(cand, Seq("a_id"),
+          Seq(col("cos").desc, col("b_id").asc), k)
+        merged.select(col("cell"), col("a_id"), col("b_id"), col("cos"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(graph(dir).batch(batchId))
       }
-      val merged = graft.plans.TopKPerKey.topK(cand, Seq("a_id"),
-        Seq(col("cos").desc, col("b_id").asc), k)
-      merged.select(col("cell"), col("a_id"), col("b_id"), col("cos"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/graph/g$batchId")
+      Nil
     }
-    StateMarker.publish(dir, batchId)
-  }
 
   /** Highest batch id folded into the live compacted graph root
     * (`gcompacted_v<id>`); -1 before the first compaction. */
-  def compactedUpTo(dir: String): Long =
-    StateMarker.lastApplied(dir, name = "_compacted")
+  def compactedUpTo(dir: String): Long = graph(dir).compactedUpTo
 
   /** Current edge lists — per cell, the rows of the NEWEST g-root
     * containing that cell (latest-per-key over roots); the compacted
@@ -157,20 +156,14 @@ object StreamingKnnGraph {
     * compaction contracts pin exactly this equality. */
   def readGraph(spark: SparkSession, dir: String,
       cellsOnly: Option[Seq[Long]] = None): Option[DataFrame] = {
-    val cUpTo = compactedUpTo(dir)
-    val roots =
-      (if (cUpTo >= 0) Seq(cUpTo -> s"$dir/graph/gcompacted_v$cUpTo") else Nil) ++
-        ((cUpTo + 1) to StateMarker.lastApplied(dir))
-          .map(b => b -> s"$dir/graph/g$b")
-    val live = roots.filter { case (_, p) => new java.io.File(p).isDirectory }
+    val live = graph(dir).roots()
     if (live.isEmpty) return None
     // ascending fold: a later root overrides its cells' source (the
     // compact() newest-map logic, shared semantics)
-    val newest = scala.collection.mutable.LinkedHashMap.empty[String, (Long, String)]
-    live.foreach { case (b, p) =>
-      Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-        .foreach(cd => newest(cd.getName) = (b, p))
+    val newest = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    live.foreach { p =>
+      BatchState.cellDirs(new java.io.File(p))
+        .foreach(cd => newest(cd.getName) = p)
     }
     val wanted: Option[Set[String]] =
       cellsOnly.map(_.map(c => s"cell=$c").toSet)
@@ -178,11 +171,11 @@ object StreamingKnnGraph {
     // relation (basePath keeps `cell` a partition column)
     val byRoot = newest.toSeq
       .filter { case (cn, _) => wanted.forall(_.contains(cn)) }
-      .groupBy { case (_, (_, p)) => p }
+      .groupBy(_._2)
     if (byRoot.isEmpty) {
       // no selected cell exists yet: preserve the row-level form's
       // empty-but-schema'd result via an empty read of one live root
-      val (_, p0) = live.head
+      val p0 = live.head
       return Some(spark.read.option("basePath", p0).parquet(p0)
         .filter(lit(false))
         .select(col("cell"), col("a_id"), col("b_id"), col("cos")))
@@ -203,50 +196,18 @@ object StreamingKnnGraph {
     * earlier per cell), rename to `gcompacted_v<upTo>`, flip the
     * `_compacted` marker, delete the folded roots. Every carried
     * cell is byte-for-byte stable (spec-pinned). Crash-safe by the
-    * StreamingVectorIndex versioned-root convention: readers resolve
-    * the compacted root through the marker only, so a crash before
-    * the flip leaves them on the old roots (untouched) and a crash
-    * after it leaves only unreferenced garbage that the cleanup
-    * tail — or any later compact — removes. */
-  def compact(dir: String): Unit = {
-    val upTo = StateMarker.lastApplied(dir)
-    val prev = compactedUpTo(dir)
-    if (upTo < 0 || upTo == prev) return // nothing new
-    def cellDirs(root: java.io.File): Seq[java.io.File] =
-      Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("cell=")).toSeq
-    // ascending fold order: the old compacted root first, then each
-    // later g-root — a later root overrides its cells' source
-    val sources =
-      (if (prev >= 0) Seq(new java.io.File(s"$dir/graph/gcompacted_v$prev"))
-       else Nil) ++
-        ((prev + 1) to upTo).map(b => new java.io.File(s"$dir/graph/g$b"))
-    val newest = scala.collection.mutable.LinkedHashMap.empty[String, java.io.File]
-    sources.filter(_.isDirectory).foreach { r =>
-      cellDirs(r).foreach(cd => newest(cd.getName) = cd)
+    * [[BatchState.Log.compact]] protocol. */
+  def compact(dir: String): Unit =
+    graph(dir).compact { (old, batches, staged) =>
+      // ascending fold order: the old compacted root first, then each
+      // later g-root — a later root overrides its cells' source
+      val newest = scala.collection.mutable.LinkedHashMap.empty[String, java.io.File]
+      (old.toSeq ++ batches).foreach { r =>
+        BatchState.cellDirs(r).foreach(cd => newest(cd.getName) = cd)
+      }
+      newest.foreach { case (cellName, src) =>
+        org.apache.commons.io.FileUtils.copyDirectory(
+          src, new java.io.File(staged, cellName))
+      }
     }
-    if (newest.isEmpty) { // only empty batches so far
-      StateMarker.publish(dir, upTo, name = "_compacted")
-      return
-    }
-    val staged = new java.io.File(s"$dir/graph/gcompacted_v${upTo}__staging")
-    org.apache.commons.io.FileUtils.deleteQuietly(staged)
-    newest.foreach { case (cellName, src) =>
-      org.apache.commons.io.FileUtils.copyDirectory(
-        src, new java.io.File(staged, cellName))
-    }
-    VersionedRoot.goLive(staged, Paths.get(s"$dir/graph/gcompacted_v$upTo"),
-      dir, upTo, markerName = "_compacted")
-    // cleanup: unreferenced once the marker flipped. The g-root range
-    // covers ALL b <= upTo (not just this fold's prev+1..upTo) so
-    // garbage left by a crash between a previous publish and its
-    // cleanup is collected too (the StreamingVectorIndex convention);
-    // id parses are digit-bounded via VersionedRoot.versionOf (ADVICE
-    // r12/r13: no O(upTo) existence scans, no Long overflow on a
-    // foreign 20-digit name).
-    VersionedRoot.sweep(new java.io.File(s"$dir/graph")) { n =>
-      (n.startsWith("gcompacted_v") && n != s"gcompacted_v$upTo") ||
-        VersionedRoot.versionOf(n, "g").exists(_ <= upTo)
-    }
-  }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `cell=c` directories (partition pruning — the BucketingSpec IVF
   * layout), exactly like a batch-built index.
   *
-  * State layout (the IncrementalDedup convention):
+  * State layout (a [[BatchState]] log, as in IncrementalDedup):
   *   dir/cells/b<batchId>/cell=<c>/ — the batch's vectors, by cell
   *   dir/_current                    — atomic-pointer marker
   * A batch writes ONLY its own directory (the index is append-only;
@@ -39,12 +39,11 @@ object StreamingVectorIndex {
 
   def start(rows: DataFrame, cent: Array[Array[Double]], idCol: String,
       vecCol: String, stateDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), cent, idCol, vecCol, batchId, stateDir)
-      }
-      .start()
+    BatchState.start(rows, checkpointDir)(
+      applyBatch(_, cent, idCol, vecCol, _, stateDir))
+
+  private def cells(dir: String) =
+    BatchState.Log(dir, "cells", compacted = "compacted_v")
 
   /** Fold one micro-batch into the index: map-side nearest-centroid
     * assignment, write under dir/cells/b<batchId> partitioned by
@@ -67,55 +66,53 @@ object StreamingVectorIndex {
       idCol: String, vecCol: String, batchId: Long, dir: String,
       codebook: Option[Array[Array[Array[Double]]]] = None,
       knownIsEmpty: Option[Boolean] = None,
-      assignedIn: Option[DataFrame] = None): Unit = {
-    if (batchId <= StateMarker.lastApplied(dir)) return // redelivery
-    // schema consistency is validated at WRITE time (ADVICE r11): the
-    // codebook arrives per call, and an index dir mixing code-bearing
-    // and plain batches would only fail — as an AnalysisException in
-    // unionByName — at read/compact time. The index's kind is recorded
-    // in the marker's second field on the first batch; a mismatched
-    // later batch is a caller bug (adding/retraining codes is an index
-    // REBUILD into a new dir + pointer swap, never an in-place mix).
-    val kind = if (codebook.isDefined) "codes" else "plain"
-    val prior = StateMarker.read(dir)
-    require(prior.length < 2 || prior(1) == kind,
-      s"index at $dir holds ${prior(1)} batches but this batch is $kind — " +
-        "changing the code layout is a rebuild (new dir), not a mixed append")
-    Files.createDirectories(Paths.get(dir))
-    // an empty trigger still advances the marker (so redelivery
-    // no-ops) but writes no root — a data-less parquet root would
-    // break schema inference for every later read. A caller that has
-    // already probed emptiness passes the answer through (ADVICE r12)
-    // so the uncached batch isn't re-evaluated.
-    if (!knownIsEmpty.getOrElse(batch.isEmpty)) {
-      val codeCols = codebook.toSeq.flatMap { cb =>
-        (0 until graft.queries.VectorOps.PqM).map(i =>
-          graft.queries.VectorOps.pqCodeCol(cb, i, vecCol).as(s"c$i"))
+      assignedIn: Option[DataFrame] = None): Unit =
+    BatchState.step(dir, batchId) { prior =>
+      // schema consistency is validated at WRITE time (ADVICE r11): the
+      // codebook arrives per call, and an index dir mixing code-bearing
+      // and plain batches would only fail — as an AnalysisException in
+      // unionByName — at read/compact time. The index's kind is recorded
+      // in the marker's second field on the first batch; a mismatched
+      // later batch is a caller bug (adding/retraining codes is an index
+      // REBUILD into a new dir + pointer swap, never an in-place mix).
+      val kind = if (codebook.isDefined) "codes" else "plain"
+      require(prior.length < 2 || prior(1) == kind,
+        s"index at $dir holds ${prior(1)} batches but this batch is $kind — " +
+          "changing the code layout is a rebuild (new dir), not a mixed append")
+      // an empty trigger still advances the marker (so redelivery
+      // no-ops) but writes no root — a data-less parquet root would
+      // break schema inference for every later read. A caller that has
+      // already probed emptiness passes the answer through (ADVICE r12)
+      // so the uncached batch isn't re-evaluated.
+      if (!knownIsEmpty.getOrElse(batch.isEmpty)) {
+        val codeCols = codebook.toSeq.flatMap { cb =>
+          (0 until graft.queries.VectorOps.PqM).map(i =>
+            graft.queries.VectorOps.pqCodeCol(cb, i, vecCol).as(s"c$i"))
+        }
+        // a caller that already assigned the batch (StreamingKnnGraph —
+        // its affected-cell probe needs the assignment anyway) passes
+        // the frame through so this write's plan doesn't re-run the
+        // nearest-centroid pass over a second scan of the batch (r18;
+        // the knownIsEmpty one-evaluation discipline applied to the
+        // assignment). Assignment is a pure per-row function of the
+        // FIXED centroids, so both sources are identical by
+        // construction; the plain (codes-free) layout only — a
+        // code-bearing index still encodes from the raw batch.
+        val assigned = assignedIn match {
+          case Some(a) if codebook.isEmpty =>
+            a.select(col(idCol), col(vecCol), col("cell"))
+          case _ =>
+            batch.select(col(idCol) +: col(vecCol) +: codeCols: _*)
+              .withColumn("cell",
+                -element_at(
+                  graft.queries.VectorOps.nearestCells(cent, vecCol, 1), 1)
+                  .getField("nc"))
+        }
+        assigned.write.mode("overwrite").partitionBy("cell")
+          .parquet(cells(dir).batch(batchId))
       }
-      // a caller that already assigned the batch (StreamingKnnGraph —
-      // its affected-cell probe needs the assignment anyway) passes
-      // the frame through so this write's plan doesn't re-run the
-      // nearest-centroid pass over a second scan of the batch (r18;
-      // the knownIsEmpty one-evaluation discipline applied to the
-      // assignment). Assignment is a pure per-row function of the
-      // FIXED centroids, so both sources are identical by
-      // construction; the plain (codes-free) layout only — a
-      // code-bearing index still encodes from the raw batch.
-      val assigned = assignedIn match {
-        case Some(a) if codebook.isEmpty =>
-          a.select(col(idCol), col(vecCol), col("cell"))
-        case _ =>
-          batch.select(col(idCol) +: col(vecCol) +: codeCols: _*)
-            .withColumn("cell",
-              -element_at(
-                graft.queries.VectorOps.nearestCells(cent, vecCol, 1), 1)
-                .getField("nc"))
-      }
-      assigned.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/cells/b$batchId")
+      Seq(kind)
     }
-    StateMarker.publish(dir, batchId, extras = Seq(kind))
-  }
 
   /** The whole index: the current compacted root (if `compact` has
     * run) plus every batch applied after it; `cell` is a partition
@@ -126,12 +123,7 @@ object StreamingVectorIndex {
     * lets the probe's cell filter push into every scan's
     * PartitionFilters. */
   def readIndex(spark: SparkSession, dir: String): DataFrame = {
-    val upTo = compactedUpTo(dir)
-    val roots =
-      (if (upTo >= 0) Seq(s"$dir/compacted_v$upTo") else Nil) ++
-        ((upTo + 1) to StateMarker.lastApplied(dir))
-          .map(b => s"$dir/cells/b$b")
-          .filter(p => new java.io.File(p).isDirectory)
+    val roots = cells(dir).roots()
     require(roots.nonEmpty, s"no index state under $dir " +
       "(no batch has been applied yet, or the directory is not an index)")
     roots.map(p => spark.read.option("basePath", p).parquet(p))
@@ -140,8 +132,7 @@ object StreamingVectorIndex {
 
   /** Highest batch id folded into the live compacted root
     * (`compacted_v<id>`); -1 before the first compaction. */
-  def compactedUpTo(dir: String): Long =
-    StateMarker.lastApplied(dir, name = "_compacted")
+  def compactedUpTo(dir: String): Long = cells(dir).compactedUpTo
 
   /** The offline OPTIMIZE pass, INCREMENTAL per cell: fold the
     * batches applied since the last compaction into a new
@@ -158,59 +149,32 @@ object StreamingVectorIndex {
     * contained so a crash mid-stage can never have moved files OUT
     * of the live root.)
     *
-    * Crash-safe by VERSIONED roots + the atomic marker (the
-    * StreamingHeavyHitters convention — never an in-place swap of a
-    * live directory): the new root is staged and renamed to
-    * `compacted_v<upTo>`, a name no reader resolves until the
-    * `_compacted` marker flips to upTo AFTER the rename; a crash
-    * before the flip leaves readers on the old root + batch dirs
-    * (both untouched), a crash after it leaves only unreferenced
-    * garbage (stale roots / folded batch dirs), which the cleanup
-    * tail — and any later compact — deletes. A redelivery of a purged
-    * batch id still no-ops on the `_current` marker, which compaction
-    * never touches. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val upTo = StateMarker.lastApplied(dir)
-    val prev = compactedUpTo(dir)
-    if (upTo < 0 || upTo == prev) return // nothing new
-    val newBatchDirs = ((prev + 1) to upTo)
-      .map(b => new java.io.File(s"$dir/cells/b$b")).filter(_.isDirectory)
-    val oldRoot = Option(new java.io.File(s"$dir/compacted_v$prev"))
-      .filter(f => prev >= 0 && f.isDirectory)
-    if (newBatchDirs.isEmpty && oldRoot.isEmpty) return // only empty batches
-    def cellDirs(root: java.io.File): Seq[java.io.File] =
-      Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("cell=")).toSeq
-    val touched = newBatchDirs.flatMap(cellDirs).map(_.getName).toSet
-    val staged = new java.io.File(s"$dir/compacted_v${upTo}__staging")
-    org.apache.commons.io.FileUtils.deleteQuietly(staged)
-    if (touched.nonEmpty) {
-      // touched cells: one Spark rewrite over (old root ∩ touched) +
-      // the new batch deltas — the cell filter prunes both scans to
-      // the touched `cell=` partitions
-      val touchedVals = touched.toSeq.map(_.stripPrefix("cell=").toLong)
-      val roots = oldRoot.map(_.getPath).toSeq ++ newBatchDirs.map(_.getPath)
-      roots.map(p => spark.read.option("basePath", p).parquet(p))
-        .reduce(_ unionByName _)
-        .filter(col("cell").isin(touchedVals: _*))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(staged.getPath)
-    } else Files.createDirectories(staged.toPath)
-    // untouched cells: byte-for-byte carry-over from the old root
-    oldRoot.foreach { or =>
-      cellDirs(or).filterNot(f => touched(f.getName)).foreach { f =>
-        org.apache.commons.io.FileUtils.copyDirectory(
-          f, new java.io.File(staged, f.getName))
+    * Crash-safe by the [[BatchState.Log.compact]] protocol: the new
+    * root is staged, renamed to `compacted_v<upTo>` and published by
+    * the `_compacted` marker flip before any folded root is deleted. A
+    * redelivery of a purged batch id still no-ops on the `_current`
+    * marker, which compaction never touches. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    cells(dir).compact { (oldRoot, newBatchDirs, staged) =>
+      val touched = newBatchDirs.flatMap(BatchState.cellDirs).map(_.getName).toSet
+      if (touched.nonEmpty) {
+        // touched cells: one Spark rewrite over (old root ∩ touched) +
+        // the new batch deltas — the cell filter prunes both scans to
+        // the touched `cell=` partitions
+        val touchedVals = touched.toSeq.map(_.stripPrefix("cell=").toLong)
+        val roots = oldRoot.map(_.getPath).toSeq ++ newBatchDirs.map(_.getPath)
+        roots.map(p => spark.read.option("basePath", p).parquet(p))
+          .reduce(_ unionByName _)
+          .filter(col("cell").isin(touchedVals: _*))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(staged.getPath)
+      } else Files.createDirectories(staged.toPath)
+      // untouched cells: byte-for-byte carry-over from the old root
+      oldRoot.foreach { or =>
+        BatchState.cellDirs(or).filterNot(f => touched(f.getName)).foreach { f =>
+          org.apache.commons.io.FileUtils.copyDirectory(
+            f, new java.io.File(staged, f.getName))
+        }
       }
     }
-    VersionedRoot.goLive(staged, Paths.get(s"$dir/compacted_v$upTo"),
-      dir, upTo, markerName = "_compacted")
-    // cleanup: everything below is unreferenced once the marker flipped
-    VersionedRoot.sweep(new java.io.File(dir)) { n =>
-      n.startsWith("compacted_v") && n != s"compacted_v$upTo"
-    }
-    VersionedRoot.sweep(new java.io.File(s"$dir/cells")) { n =>
-      VersionedRoot.versionOf(n, "b").exists(_ <= upTo)
-    }
-  }
 }

@@ -1,9 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,22 +21,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * likely kept; compute it upstream, e.g. t26's
   * round(ln(u)/w, 12)), a long `id` tiebreak column, and any
   * passthrough payload columns (schema must stay stable across
-  * batches). State is k-bounded forever; the IncrementalAggregate
-  * versioned-dir + atomic-pointer protocol gives exactly-once under
-  * foreachBatch redelivery.
+  * batches). State is k-bounded forever; the [[BatchState]] snapshot
+  * layout gives exactly-once under foreachBatch redelivery.
   */
 object StreamingWeightedSample {
 
   def start(rows: DataFrame, k: Int, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), k, batchId, stateDir)
-      }
-      .start()
-
-  private def versionPath(dir: String, batchId: Long) = s"$dir/v$batchId"
+    BatchState.start(rows, checkpointDir)(applyBatch(_, k, _, stateDir))
 
   /** (lastAppliedBatchId, k); (-1, -1) before the first publish. k is
     * persisted with the marker because it is part of what the state
@@ -48,48 +37,41 @@ object StreamingWeightedSample {
     * rows that earlier merges permanently evicted (the same defect
     * class StreamingHeavyHitters guards against). 1-field markers
     * predate k persistence and read as k = -1 (guard relaxes). */
-  private[graft] def marker(dir: String): (Long, Int) = {
-    val parts = StateMarker.read(dir)
+  private[graft] def marker(dir: String): (Long, Int) =
+    fields(BatchState.read(dir))
+
+  private def fields(parts: Array[String]): (Long, Int) =
     if (parts.isEmpty) (-1L, -1)
     else (parts(0).toLong, if (parts.length > 1) parts(1).toInt else -1)
-  }
 
   private[graft] def lastApplied(dir: String): Long = marker(dir)._1
 
   /** The current top-k sample (empty-schema error before first batch —
     * callers gate on a published marker existing, like readDim). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(versionPath(dir, lastApplied(dir)))
+    spark.read.parquet(BatchState.version(dir, lastApplied(dir)))
 
   /** Fold one micro-batch into the sample. Idempotent on redelivery.
     * k must stay constant across the state's life — rows outside an
     * earlier, smaller top-k are gone and cannot come back. */
   def applyBatch(batch: DataFrame, k: Int, batchId: Long, dir: String): Unit = {
     require(k > 0)
-    val (applied, kPrev) = marker(dir)
-    if (batchId <= applied) return // redelivery after restart
-    require(applied < 0 || kPrev < 0 || k == kPrev,
-      s"sample state at $dir was built with k=$kPrev; cannot continue with k=$k")
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(dir))
-    // batch-side cut is a TakeOrderedAndProject (k-bounded heap, no
-    // global sort); the union with prior state is ≤2k rows
-    val batchTop = batch.orderBy(col("key").desc, col("id").asc).limit(k)
-    val merged =
-      if (applied < 0) batchTop
-      else spark.read.parquet(versionPath(dir, applied))
-        .unionByName(batchTop)
-        .orderBy(col("key").desc, col("id").asc).limit(k)
-    merged.repartition(1) // ≤k rows: always leave one footer-bearing file
-      .write.mode("overwrite").parquet(versionPath(dir, batchId))
-    // legacy (pre-k) history stays unknown-k — see StreamingHeavyHitters
-    val kOut = if (applied >= 0 && kPrev < 0) -1 else k
-    StateMarker.publish(dir, batchId, Seq(kOut.toString))
-    val keep = Set("v" + batchId, "v" + applied)
-    val dirs = Paths.get(dir).toFile.listFiles()
-    if (dirs != null) dirs.foreach { f =>
-      if (f.isDirectory && f.getName.matches("v\\d+") && !keep(f.getName))
-        org.apache.commons.io.FileUtils.deleteQuietly(f)
+    BatchState.snapshot(dir, batchId) { (prior, prev, out) =>
+      val (applied, kPrev) = fields(prior)
+      require(applied < 0 || kPrev < 0 || k == kPrev,
+        s"sample state at $dir was built with k=$kPrev; cannot continue with k=$k")
+      // batch-side cut is a TakeOrderedAndProject (k-bounded heap, no
+      // global sort); the union with prior state is ≤2k rows
+      val batchTop = batch.orderBy(col("key").desc, col("id").asc).limit(k)
+      val merged = prev.fold(batchTop)(p =>
+        batch.sparkSession.read.parquet(p)
+          .unionByName(batchTop)
+          .orderBy(col("key").desc, col("id").asc).limit(k))
+      merged.repartition(1) // ≤k rows: always leave one footer-bearing file
+        .write.mode("overwrite").parquet(out)
+      // legacy (pre-k) history stays unknown-k — see StreamingHeavyHitters
+      val kOut = if (applied >= 0 && kPrev < 0) -1 else k
+      Seq(kOut.toString)
     }
   }
 }

@@ -124,4 +124,23 @@ class IncrementalJoinSpec extends SparkSpec {
           s"untouched bucket $b was modified: ${before(b)} -> ${after(b)}")
     }
   }
+
+  test("dim state keeps at most two versions and the view stays the one-shot join") {
+    val dir = tmp()
+    val waves = Seq(
+      (facts((1L, 10L, 1.0), (2L, 20L, 2.0)), dims((10L, "A"), (20L, "B"))),
+      (facts((3L, 30L, 3.0)), dims((30L, "C"))),
+      (facts((4L, 10L, 4.0)), dims((10L, "A2"))),
+      (facts((5L, 20L, 5.0)), dims((20L, "B2"), (40L, "D"))))
+    waves.zipWithIndex.foreach { case ((f, d), b) =>
+      IncrementalJoin.applyBatch(f, d, b.toLong, cfg, dir)
+    }
+    val versions = new java.io.File(dir, "dim").listFiles()
+      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
+      .map(_.getName).sorted.toSeq
+    assert(versions.size <= 2, s"dim state leaks versions: $versions")
+    assert(snap(dir) == Set(
+      (1L, 10L, 1.0, "A2"), (2L, 20L, 2.0, "B2"), (3L, 30L, 3.0, "C"),
+      (4L, 10L, 4.0, "A2"), (5L, 20L, 5.0, "B2")))
+  }
 }

@@ -179,7 +179,7 @@ class StreamingKnnGraphSpec extends SparkSpec {
     StreamingKnnGraph.applyBatch(vecs(Nil), cent,
       "vec_id", "embedding", k = 3, 1L, dir)
     assert(!new java.io.File(s"$dir/graph/g1").exists())
-    assert(graft.streaming.StateMarker.lastApplied(dir) == 1L)
+    assert(graft.streaming.BatchState.lastApplied(dir) == 1L)
     assert(edgeSet(dir).nonEmpty) // g0 still serves
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.queries.Retrieve
-import graft.streaming.{StateMarker, StreamingVectorIndex}
+import graft.streaming.{BatchState, StreamingVectorIndex}
 
 /** Streaming IVF index maintenance: batch-boundary independence
   * (streamed index == all-at-once assignment), append-only delta
@@ -67,7 +67,7 @@ class StreamingVectorIndexSpec extends SparkSpec {
       StreamingVectorIndex.applyBatch(
         Seq((9L, vec(1.0, 0.0))).toDF("vec_id", "embedding"),
         cent, "vec_id", "embedding", 0L, dir)
-      assert(StateMarker.lastApplied(dir) == 1L)
+      assert(BatchState.lastApplied(dir) == 1L)
       assert(b0.lastModified() == stamp0)
       val ids = StreamingVectorIndex.readIndex(s, dir)
         .select("vec_id").collect().map(_.getLong(0)).toSet
@@ -77,7 +77,7 @@ class StreamingVectorIndexSpec extends SparkSpec {
       StreamingVectorIndex.applyBatch(
         Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
         cent, "vec_id", "embedding", 2L, dir)
-      assert(StateMarker.lastApplied(dir) == 2L)
+      assert(BatchState.lastApplied(dir) == 2L)
       assert(!new java.io.File(s"$dir/cells/b2").exists())
       val after = StreamingVectorIndex.readIndex(s, dir)
         .select("vec_id").collect().map(_.getLong(0)).toSet
